@@ -3,9 +3,12 @@ package graft
 import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.rules.Rule
 import graft.functions.{FnvHash64, Md5Prefix60, VectorDot, ZorderInterleave}
 
-/** SQL-side integration. Two ways to get the engine's functions into SQL:
+/** SQL-side integration. Two ways to get the engine's functions and
+  * optimizer rules into a session:
   *
   *  1. At session build (spark-submit):
   *     `--conf spark.sql.extensions=graft.GraftExtensions`
@@ -19,17 +22,14 @@ import graft.functions.{FnvHash64, Md5Prefix60, VectorDot, ZorderInterleave}
   *    the similarity-search kernel: `SELECT vector_dot(embedding, embedding)`.
   *  - `md5_prefix60(str)` — top 60 bits of md5 as a positive BIGINT, the
   *    portable hash behind SimHash/LSH (recomputable in any engine with md5).
+  *  - the seven `graft.plans` optimizer rules ([[GraftExtensions.rules]]);
+  *    a session skips any rule its `spark.sql.optimizer.excludedRules`
+  *    names.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(e: SparkSessionExtensions): Unit = {
     GraftExtensions.functions.foreach(e.injectFunction)
-    e.injectOptimizerRule(_ => graft.plans.RollupRewrite)
-    e.injectOptimizerRule(_ => graft.plans.JoinMvRewrite)
-    e.injectOptimizerRule(_ => graft.plans.BucketPruneRewrite)
-    e.injectOptimizerRule(_ => graft.plans.PartitionPruneRewrite)
-    e.injectOptimizerRule(_ => graft.plans.RowsetPruneRewrite)
-    e.injectOptimizerRule(_ => graft.plans.StatsAggRewrite)
-    e.injectOptimizerRule(_ => graft.plans.StatsBroadcastRewrite)
+    GraftExtensions.rules.foreach(r => e.injectOptimizerRule(_ => r))
     // SQL front door: engine DDL/DML/lifecycle statements become Spark SQL
     // (inert until an engine is bound via GraftSql.bind — unclaimed text
     // always delegates to Spark's own parser)
@@ -38,6 +38,35 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
+  /** The optimizer rules, in the order both install paths add them. Each
+    * resolves engine tables through [[graft.plans.TableRegistry]].
+    */
+  val rules: Seq[Rule[LogicalPlan]] = {
+    import graft.plans._
+    Seq(RollupRewrite, JoinMvRewrite, BucketPruneRewrite, PartitionPruneRewrite,
+      RowsetPruneRewrite, StatsAggRewrite, StatsBroadcastRewrite)
+  }
+
+  private val ExcludedRulesKey = "spark.sql.optimizer.excludedRules"
+
+  /** Run `body` with `excluded` left out of `spark`'s optimizer, through
+    * Spark's session-scoped `spark.sql.optimizer.excludedRules` (works for
+    * both install paths); the previous value is restored afterwards. Other
+    * sessions keep every rule; calls that exclude rules take turns.
+    */
+  def withoutRules[T](spark: SparkSession, excluded: Rule[LogicalPlan]*)(body: => T): T =
+    synchronized {
+      val prev = spark.conf.getOption(ExcludedRulesKey)
+      val names = prev.toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty) ++
+        excluded.map(_.ruleName)
+      spark.conf.set(ExcludedRulesKey, names.distinct.mkString(","))
+      try body
+      finally prev match {
+        case Some(v) => spark.conf.set(ExcludedRulesKey, v)
+        case None => spark.conf.unset(ExcludedRulesKey)
+      }
+    }
+
   private val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
     (
       FunctionIdentifier("fnv_hash64"),
@@ -70,35 +99,17 @@ object GraftExtensions {
   )
 
   /** Register the functions + optimizer rules on an already-built session
-    * (the rule lands in the `User Provided Optimizers` batch via
+    * (the rules land in the `User Provided Optimizers` batch via
     * `experimental.extraOptimizations` instead of the operator-optimization
     * batch — same fixed-point semantics, no session rebuild needed).
+    * Idempotent: a rule already installed is not added again.
     */
   def register(spark: SparkSession): Unit = {
     val registry = org.apache.spark.sql.graft.shim.functionRegistry(spark)
     functions.foreach { case (id, info, builder) =>
       registry.registerFunction(id, info, builder)
     }
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RollupRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RollupRewrite
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.JoinMvRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.JoinMvRewrite
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.BucketPruneRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.BucketPruneRewrite
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.PartitionPruneRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.PartitionPruneRewrite
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.RowsetPruneRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.RowsetPruneRewrite
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.StatsAggRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.StatsAggRewrite
-    if (!spark.experimental.extraOptimizations.contains(graft.plans.StatsBroadcastRewrite))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ graft.plans.StatsBroadcastRewrite
+    spark.experimental.extraOptimizations ++=
+      rules.filterNot(spark.experimental.extraOptimizations.contains)
   }
 }

@@ -45,6 +45,10 @@ final class MvManager(eng: OlapEngine) {
   private def mvDir(d: MvJoinDef): Path =
     eng.tableRoot(d.factDb, d.factTable).resolve("mvs").resolve(d.name)
 
+  /** Parquet dir of the build of `d` at (fact, dim) versions. */
+  def storedPath(d: MvJoinDef, factV: Long, dimV: Long): String =
+    mvDir(d).resolve(s"f${factV}_d$dimV").toString
+
   // --- persistence: registrations survive restarts (the RollupManager
   // argument verbatim: the MV parquet always survived, the registration
   // didn't, so a restart forced a full fact⋈dim rebuild before the rewrite
@@ -81,8 +85,8 @@ final class MvManager(eng: OlapEngine) {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Reload this fact table's persisted MV registrations and re-arm the
-    * rewrite rule (engine constructor sweep).
+  /** Reload this fact table's persisted MV registrations (engine
+    * constructor sweep); the rewrite rule reads them from [[list]].
     */
   private[engine] def loadPersisted(factDb: String, factTable: String): Unit = {
     import org.json4s._
@@ -109,11 +113,8 @@ final class MvManager(eng: OlapEngine) {
         val fv = (j \ "factVersion").extract[Long]
         val dv = (j \ "dimVersion").extract[Long]
         val stored = mvDir(d).resolve(s"f${fv}_d$dv")
-        if (java.nio.file.Files.exists(stored)) {
+        if (java.nio.file.Files.exists(stored))
           defs((eng.warehouse.toString, factDb, factTable, d.name)) = (d, fv, dv)
-          graft.plans.JoinMvRewrite.register(
-            graft.plans.JoinMvRewrite.Entry(eng, d, fv, dv, stored.toString))
-        }
       }
   }
 
@@ -137,12 +138,9 @@ final class MvManager(eng: OlapEngine) {
   def materialize(d: MvJoinDef): Unit = {
     val factV = eng.manifest(d.factDb, d.factTable).maxVersion
     val dimV = eng.manifest(d.dimDb, d.dimTable).maxVersion
-    val path = mvDir(d).resolve(s"f${factV}_d$dimV")
-    baseAggregate(d).write.mode("overwrite").parquet(path.toString)
+    baseAggregate(d).write.mode("overwrite").parquet(storedPath(d, factV, dimV))
     defs((eng.warehouse.toString, d.factDb, d.factTable, d.name)) = (d, factV, dimV)
     persistDefs(d.factDb, d.factTable)
-    graft.plans.JoinMvRewrite.register(
-      graft.plans.JoinMvRewrite.Entry(eng, d, factV, dimV, path.toString))
   }
 
   /** Incremental maintenance: join ONLY the fact rowset versions published
@@ -180,7 +178,7 @@ final class MvManager(eng: OlapEngine) {
       deltaRowsets.forall(!_.isDeleteMarker)
     if (!cleanDelta) { materialize(d); return }
     val storedTry = scala.util.Try(eng.spark.read.parquet(
-      mvDir(d).resolve(s"f${storedFactV}_d$storedDimV").toString))
+      storedPath(d, storedFactV, storedDimV)))
     if (storedTry.isFailure) { materialize(d); return }
 
     val deltaJoined = eng.snapshot(d.factDb, d.factTable, storedFactV + 1, factV)
@@ -194,12 +192,9 @@ final class MvManager(eng: OlapEngine) {
     val merged = storedTry.get.unionByName(deltaAgg)
       .groupBy(d.groupCols.map(col): _*)
       .agg(mergeCols.head, mergeCols.tail: _*)
-    val path = mvDir(d).resolve(s"f${factV}_d$dimV")
-    merged.write.mode("overwrite").parquet(path.toString)
+    merged.write.mode("overwrite").parquet(storedPath(d, factV, dimV))
     defs(key) = (d, factV, dimV)
     persistDefs(factDb, factTable)
-    graft.plans.JoinMvRewrite.register(
-      graft.plans.JoinMvRewrite.Entry(eng, d, factV, dimV, path.toString))
   }
 
   /** Registered MVs whose FACT side is this table: (definition, stored fact
@@ -269,7 +264,7 @@ final class MvManager(eng: OlapEngine) {
     }.minByOption(_._1.groupCols.size)
     candidate match {
       case Some((d, fv, dv)) =>
-        val stored = eng.spark.read.parquet(mvDir(d).resolve(s"f${fv}_d$dv").toString)
+        val stored = eng.spark.read.parquet(storedPath(d, fv, dv))
         stored.groupBy(groupCols.map(col): _*)
           .agg(aggs.head match { case (o, s, a) =>
             aggCol(d.aggs.find(r => r._2 == s && r._3 == a).get._1, a, o) },

@@ -57,11 +57,11 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
   // so its parquet reader — whose construction pays a directory listing +
   // schema inference — is built once per JVM and reused by every later scan.
   // On a 48-load table this turns O(rowsets) driver-side footer reads PER
-  // QUERY into O(new rowsets) per lifetime (PruneProbe measures the
-  // difference). GC'd dirs leave dead entries that are never consulted again
-  // (their rowsets left the manifest); a pinned reader racing GC still fails
-  // loudly at execution (ignoreMissingFiles=false is baked into the cached
-  // reader).
+  // QUERY into O(new rowsets) per lifetime (perfbench's `history_reads`
+  // workload exercises it). GC'd dirs leave dead entries that are never
+  // consulted again (their rowsets left the manifest); a pinned reader
+  // racing GC still fails loudly at execution (ignoreMissingFiles=false is
+  // baked into the cached reader).
   private val rawReaders = TrieMap.empty[String, DataFrame]
   // cross-table LOAD GROUPS (the Doris global-transaction-id shape): staged
   // rowsets are invisible until the ledger's one atomic rename commits the
@@ -71,12 +71,12 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
   private val groupCoord = new java.util.concurrent.locks.ReentrantReadWriteLock()
 
   locally {
-    // re-arm the transparent prune rules and the rollup/MV rewrite entries
-    // for every table the persisted catalog restored: a restarted engine
-    // must serve the same pruned, rewrite-served plans (incl. the rebucket
-    // layout floor) as the session that created them — with zero rebuilds
+    // hand every table the persisted catalog restored to the optimizer
+    // rules, and reload its rollup/MV builds: a restarted engine serves the
+    // same pruned, rewrite-served plans as the session that created them —
+    // with zero rebuilds
     catalog.listDatabases.foreach(db => catalog.listTables(db).foreach { t =>
-      catalog.getTable(db, t).foreach(registerRouting)
+      graft.plans.TableRegistry.register(this, db, t)
       rollups.loadPersisted(db, t)
       mvs.loadPersisted(db, t)
     })
@@ -91,16 +91,19 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
 
   def tableRoot(db: String, table: String): Path = warehouse.resolve(db).resolve(table)
 
-  /** Absolute normalized directories of the CURRENT covering rowset set —
+  /** Absolute normalized directories of the CURRENT covering data rowsets —
     * what a full snapshot scan of the table reads right now. The
-    * materialized-rewrite rules compare a candidate plan's parquet leaves
-    * against this to prove the plan is exactly "the current full snapshot".
+    * materialized-rewrite and metadata rules compare a candidate plan's
+    * parquet leaves against this to prove the plan is exactly "the current
+    * full snapshot".
     */
   def coveringDirs(db: String, table: String): Set[String] = {
     val m = manifest(db, table)
     val lo = m.visibleRowsets.map(_.version.start).minOption.getOrElse(0L)
     m.captureConsistentVersions(lo, m.maxVersion)
-      .filterNot(_.isDeleteMarker) // markers hold no files
+      // markers and zero-row rowsets (empty loads, truncate's replacement)
+      // hold no files, and rawFromRowsets never reads them
+      .filter(r => !r.isDeleteMarker && r.numRows > 0)
       .map(r => tableRoot(db, table).resolve(r.relDir).toAbsolutePath.normalize.toString)
       .toSet
   }
@@ -330,69 +333,8 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
         schema = graft.model.TableSchema(KeysType.Duplicate,
           td.schema.columns.map(c => c.copy(agg = graft.model.AggType.None))),
         bucketColumn = td.bucketColumn, numBuckets = td.numBuckets))
-    registerRouting(td)
+    graft.plans.TableRegistry.register(this, td.db, td.name)
     created
-  }
-
-  /** Arm the transparent prune rules for `td` (bucket + partition). Called
-    * at createTable and — via the constructor sweep — for every table a
-    * PERSISTED catalog restores, so a restarted engine serves the same
-    * pruned plans the creating session did.
-    */
-  private def registerRouting(td: TableDef): Unit = {
-    // hash-bucketed tables get transparent read-side bucket pruning
-    if (td.bucketType == BucketType.Hash && td.bucketColumn.isDefined)
-      graft.plans.BucketPruneRewrite.register(graft.plans.BucketPruneRewrite.Entry(
-        tableRoot(td.db, td.name).toAbsolutePath.normalize.toString,
-        td.bucketColumn.get, td.numBuckets,
-        k => td.bucketType.bucketForKey(k, td.numBuckets),
-        layoutFloorRowsetId = td.bucketLayoutFloor))
-    registerPartitionPruning(td)
-    // group-less MIN/MAX/COUNT over the full snapshot serve from metadata
-    // (the rule itself re-checks model/markers/stats freshness per query)
-    graft.plans.StatsAggRewrite.register(
-      tableRoot(td.db, td.name).toAbsolutePath.normalize.toString,
-      graft.plans.StatsAggRewrite.Entry(this, td.db, td.name))
-    // merged-dimension size bounds from the NDV sidecars feed broadcast
-    // decisions (the rule itself re-proves the scan shape per query)
-    graft.plans.StatsBroadcastRewrite.register(
-      tableRoot(td.db, td.name).toAbsolutePath.normalize.toString,
-      graft.plans.StatsBroadcastRewrite.Entry(this, td.db, td.name))
-  }
-
-  /** Register/refresh the transparent partition-prune entry for this table.
-    * Only string-order-safe partition column types qualify (string / date /
-    * timestamp — the routing compares string casts, so the rule's interval
-    * math is only meaningful when string order equals typed order; an
-    * integral partition key would break at "10" < "9").
-    */
-  private def registerPartitionPruning(td: TableDef): Unit = {
-    import org.apache.spark.sql.types.{DateType, StringType, TimestampType}
-    val safe = td.partitionColumn.exists(pc =>
-      td.schema.columns.find(_.name == pc).map(_.dataType).exists {
-        case StringType | DateType | TimestampType => true
-        case _ => false
-      })
-    if (!safe || td.policy == PartitionPolicy.Unpartitioned) return
-    val slots = td.policy match {
-      case PartitionPolicy.Range =>
-        // lower bound of each slot = the next rung DOWN in the full
-        // (active + dropped) ladder — rows below it routed elsewhere
-        val ladder = (td.partitions.map((_, true)) ++ td.droppedPartitions.map((_, false)))
-          .sortBy(_._1.upperExclusive.getOrElse(RangeBound.MaxValue))
-        ladder.zipWithIndex.collect { case ((p, live), i) if live =>
-          graft.plans.PartitionPruneRewrite.Slot(p.name,
-            lower = if (i == 0) None else ladder(i - 1)._1.upperExclusive,
-            upper = p.upperExclusive, values = Nil)
-        }
-      case PartitionPolicy.List =>
-        td.partitions.map(p =>
-          graft.plans.PartitionPruneRewrite.Slot(p.name, None, None, p.listValues))
-      case PartitionPolicy.Unpartitioned => Nil
-    }
-    graft.plans.PartitionPruneRewrite.register(graft.plans.PartitionPruneRewrite.Entry(
-      tableRoot(td.db, td.name).toAbsolutePath.normalize.toString,
-      td.partitionColumn.get, slots))
   }
 
   /** Schema evolution: append a nullable value column. The reference carries
@@ -655,13 +597,6 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
       renamedColumns = td.renamedColumns.map { case (o, n) =>
         o -> (if (n == oldName) newName else n) } + (oldName -> newName))
     catalog.alterTable(newTd)
-    // routing rules follow the rename (the layout itself is unchanged, so a
-    // rebucket-installed layout floor must survive the re-registration)
-    if (td.bucketColumn.contains(oldName) && td.bucketType == BucketType.Hash)
-      graft.plans.BucketPruneRewrite.rename(
-        tableRoot(db, table).toAbsolutePath.normalize.toString, newName)
-    if (td.partitionColumn.contains(oldName))
-      registerPartitionPruning(newTd)
     // registered rollups/MVs referencing the old name FOLLOW the rename:
     // their definitions are rewritten and re-materialized in place, so
     // they keep serving queries phrased in the new name instead of
@@ -1334,9 +1269,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
         val clash = spec.listValues.filter(v => known.exists(_.listValues.contains(v)))
         require(clash.isEmpty, s"values already covered: ${clash.mkString(", ")}")
     }
-    val updated = catalog.alterTable(td.copy(partitions = td.partitions :+ spec))
-    registerPartitionPruning(updated)
-    updated
+    catalog.alterTable(td.copy(partitions = td.partitions :+ spec))
   }
 
   /** DROP PARTITION (Doris semantics: metadata now, physical delete later):
@@ -1364,7 +1297,6 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val updated = catalog.alterTable(td.copy(
       partitions = td.partitions.filterNot(_.name == name),
       droppedPartitions = td.droppedPartitions :+ spec))
-    registerPartitionPruning(updated)
     // the marker carries BOTH forms of the mask: `deletePartition` lets the
     // read path filter on the hive partition column (whole directories
     // prune before any file opens — retired data costs zero read I/O),
@@ -1770,19 +1702,6 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     // mid-loop hand different branches different schema/default views
     val td0 = catalog.getTable(db, table).get
     val renames = td0.renamedColumns
-    // arm transparent rowset pruning: every scanned rowset with a harvested
-    // zone map registers (dir → stats), so a pushed-down filter provably
-    // disjoint from a rowset's min/max collapses that branch to an empty
-    // relation at optimization time (plans.RowsetPruneRewrite) — the scan
-    // never lists or opens the directory
-    data.foreach { r =>
-      if (r.stats.nonEmpty || r.bloomCols.nonEmpty || r.ngramCols.nonEmpty) {
-        val dir = root.resolve(r.relDir).toAbsolutePath.normalize.toString
-        graft.plans.RowsetPruneRewrite.register(
-          dir, graft.plans.RowsetPruneRewrite.Entry(
-            r.numRows, r.stats, dir, r.bloomCols.toSet, r.ngramCols.toSet))
-      }
-    }
     val unioned = data.map { r =>
       // ignoreMissingFiles pinned false PER READ: the constructor guard
       // covers engine creation, but the conf is session-mutable — the
@@ -2847,12 +2766,13 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
   /** EXPLAIN PRUNE: the per-rowset decision the transparent prune rules
     * would make for `scan(db,table).filter(cond)` — one row per covering
     * data rowset with `decision` ∈ scanned | zone-map | bloom. The plan is
-    * optimized with the rowset rule DISABLED so the pruned branches still
+    * optimized with the rowset rule EXCLUDED so the pruned branches still
     * exist to be inspected with their Catalyst-normalized per-branch
-    * conditions (exactly what the enabled rule sees); the toggle is global,
-    * so a query racing an explain merely loses pruning for that one plan —
-    * never correctness. Operator tool: answers "why does this point lookup
-    * read N rowsets" without tracing the optimizer.
+    * conditions (exactly what the enabled rule sees). The exclusion is
+    * session-scoped: a query racing an explain on the SAME session merely
+    * loses pruning for that one plan — never correctness — and other
+    * sessions keep the rule. Operator tool: answers "why does this point
+    * lookup read N rowsets" without tracing the optimizer.
     */
   def explainPrune(db: String, table: String, cond: Column): DataFrame = {
     val m = manifest(db, table)
@@ -2861,12 +2781,10 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val root = tableRoot(db, table)
     val byDir = covering.filter(r => !r.isDeleteMarker && r.numRows > 0)
       .map(r => root.resolve(r.relDir).toAbsolutePath.normalize.toString -> r).toMap
-    graft.plans.RowsetPruneRewrite.setEnabled(false)
-    val decisions =
-      try graft.plans.RowsetPruneRewrite.explain(
+    val decided = graft.GraftExtensions.withoutRules(spark, graft.plans.RowsetPruneRewrite) {
+      graft.plans.RowsetPruneRewrite.explain(
         scan(db, table).filter(cond).queryExecution.optimizedPlan)
-      finally graft.plans.RowsetPruneRewrite.setEnabled(true)
-    val decided = decisions.toMap
+    }.toMap
     val rows = byDir.toSeq.map { case (dir, r) =>
       (r.rowsetId, r.version.start, r.version.end, r.numRows,
         decided.get(dir).flatten.getOrElse("scanned"))
@@ -3185,12 +3103,12 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     * covering the full version range, inputs retire to Stale (time travel
     * inside retention still reads the OLD layout — correctly unpruned, see
     * below), merge-on-read tombstones become physical. Ordering within the
-    * swap: catalog + prune-routing update FIRST, then the manifest swap — a
-    * reader in the window resolves the old covering set under the new
-    * routing, which is exactly the case the prune rule's layout floor
-    * ([[graft.plans.BucketPruneRewrite.Entry.layoutFloorRowsetId]]) makes
-    * safe: relations reading any pre-rebucket rowset are never pruned
-    * (unpruned is always correct), and the first post-publish reader prunes
+    * swap: catalog update FIRST, then the manifest swap — a reader in the
+    * window resolves the old covering set under the new routing, which is
+    * exactly the case the prune rule's layout floor
+    * ([[graft.catalog.TableDef.bucketLayoutFloor]]) makes safe: relations
+    * reading any pre-rebucket rowset are never pruned (unpruned is always
+    * correct), and the first post-publish reader prunes
     * with the new layout. Future ingests route with the new layout from the
     * catalog.
     */
@@ -3218,7 +3136,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val newTd = td.copy(bucketColumn = Some(bcol), numBuckets = newBuckets,
       partitions = td.partitions.map(_.copy(numBuckets = newBuckets)),
       // the layout floor persists with the catalog, so a RESTARTED engine
-      // re-arms the prune rule with the same old-rowsets-never-pruned guard
+      // keeps the prune rule's old-rowsets-never-pruned guard
       bucketLayoutFloor = rowsetId)
     val relDir = s"r$rowsetId"
     val outDir = tableRoot(db, table).resolve(relDir)
@@ -3241,11 +3159,6 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val dicts = buildDictStats(db, table, outDir, numRows)
     // routing swap before the manifest swap (see scaladoc ordering argument)
     catalog.alterTable(newTd)
-    graft.plans.BucketPruneRewrite.register(graft.plans.BucketPruneRewrite.Entry(
-      tableRoot(db, table).toAbsolutePath.normalize.toString,
-      bcol, newBuckets,
-      k => newTd.bucketType.bucketForKey(k, newBuckets),
-      layoutFloorRowsetId = rowsetId))
     m.markStaleAll(inputs.map(_.rowsetId))
     val meta = RowsetMeta(rowsetId, Version(lo, hi), relDir, numRows,
       createdMs = System.currentTimeMillis(), stats = colStats,

@@ -67,13 +67,17 @@ final class RollupManager(eng: OlapEngine) {
   private def rollupDir(db: String, table: String, name: String): Path =
     eng.tableRoot(db, table).resolve("rollups").resolve(name)
 
+  /** Parquet dir of the build of rollup `name` stored at base `version`. */
+  def storedPath(db: String, table: String, name: String, version: Long): String =
+    rollupDir(db, table, name).resolve(s"v$version").toString
+
   // --- persistence: registrations survive restarts --------------------------
   // The stored rollup PARQUET always survived a restart; the REGISTRATION
   // (definition + which base version it reflects) lived only in this JVM,
   // so a restarted engine had to re-materialize — a full base aggregation —
   // before the transparent rewrite could fire again. One small JSON beside
   // the rollup dirs (same atomic-rename discipline as the manifest) makes
-  // restart = reload + re-register: zero rebuild.
+  // restart = reload: zero rebuild.
 
   private def defsPath(db: String, table: String): Path =
     eng.tableRoot(db, table).resolve("rollups").resolve("_rollups.json")
@@ -107,9 +111,10 @@ final class RollupManager(eng: OlapEngine) {
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
   }
 
-  /** Reload this table's persisted registrations and re-arm the rewrite
-    * rule (engine constructor sweep). A registration whose stored parquet
-    * version dir vanished is skipped — the next materialize recreates it.
+  /** Reload this table's persisted registrations (engine constructor
+    * sweep); the rewrite rule reads them from [[list]]. A registration
+    * whose stored parquet version dir vanished is skipped — the next
+    * materialize recreates it.
     */
   private[engine] def loadPersisted(db: String, table: String): Unit = {
     import org.json4s._
@@ -136,11 +141,7 @@ final class RollupManager(eng: OlapEngine) {
           filter = (j \ "filter").extractOpt[String])
         val v = (j \ "baseVersion").extract[Long]
         val stored = rollupDir(db, table, rd.name).resolve(s"v$v")
-        if (java.nio.file.Files.exists(stored)) {
-          defs((db, table, rd.name)) = (rd, v)
-          graft.plans.RollupRewrite.register(graft.plans.RollupRewrite.Entry(
-            eng, db, table, rd, v, stored.toString))
-        }
+        if (java.nio.file.Files.exists(stored)) defs((db, table, rd.name)) = (rd, v)
       }
   }
 
@@ -205,7 +206,7 @@ final class RollupManager(eng: OlapEngine) {
     }.flatMap { case (n, f, v) =>
       // empty-table builds write no parquet parts; fall back to base then
       scala.util.Try(eng.spark.read.parquet(
-        rollupDir(db, table, n).resolve(s"v$v").toString)).toOption.map { stored =>
+        storedPath(db, table, n, v))).toOption.map { stored =>
         val cols = rd.aggs.map { case (o, s, a) =>
           aggCol(f.aggs.find(r => r._2 == s && r._3 == a).get._1, a, o) } ++
           rd.countCol.map(c => sum(col(f.countCol.get)).cast("long").as(c)) ++
@@ -217,12 +218,9 @@ final class RollupManager(eng: OlapEngine) {
       }
     }
     val out = fine.map(_._2).getOrElse(srcAggregate(eng.scan(db, table), rd))
-    val dir = rollupDir(db, table, rd.name)
-    out.write.mode("overwrite").parquet(dir.resolve(s"v$baseVersion").toString)
+    out.write.mode("overwrite").parquet(storedPath(db, table, rd.name, baseVersion))
     defs((db, table, rd.name)) = (rd, baseVersion)
     persistDefs(db, table)
-    graft.plans.RollupRewrite.register(graft.plans.RollupRewrite.Entry(
-      eng, db, table, rd, baseVersion, dir.resolve(s"v$baseVersion").toString))
     fine.map(f => s"rollup:${f._1}").getOrElse("base")
   }
 
@@ -322,7 +320,7 @@ final class RollupManager(eng: OlapEngine) {
     // A rollup materialized over an empty table writes no parquet parts and
     // cannot be read back; rebuild instead (it is the first real build).
     val storedTry = scala.util.Try(eng.spark.read.parquet(
-      rollupDir(db, table, name).resolve(s"v$storedV").toString))
+      storedPath(db, table, name, storedV)))
     if (storedTry.isFailure) { materialize(db, table, rd); return }
     val stored = storedTry.get
     val deltaAgg = srcAggregate(eng.snapshot(db, table, storedV + 1, maxV), rd)
@@ -331,11 +329,9 @@ final class RollupManager(eng: OlapEngine) {
       .groupBy(storedDims(rd).map(col): _*)
       .agg(mergeCols.head, mergeCols.tail: _*)
     merged.write.mode("overwrite")
-      .parquet(rollupDir(db, table, name).resolve(s"v$maxV").toString)
+      .parquet(storedPath(db, table, name, maxV))
     defs(key) = (rd, maxV)
     persistDefs(db, table)
-    graft.plans.RollupRewrite.register(graft.plans.RollupRewrite.Entry(
-      eng, db, table, rd, maxV, rollupDir(db, table, name).resolve(s"v$maxV").toString))
   }
 
   /** Approximate distinct count of `src` per `groupCols`, answered from a
@@ -357,7 +353,7 @@ final class RollupManager(eng: OlapEngine) {
     }.minByOption(_._1.groupCols.size)
     candidate match {
       case Some((rd, v)) =>
-        eng.spark.read.parquet(rollupDir(db, table, rd.name).resolve(s"v$v").toString)
+        eng.spark.read.parquet(storedPath(db, table, rd.name, v))
           .groupBy(groupCols.map(col): _*)
           .agg(expr(s"hll_sketch_estimate(hll_union_agg(${rd.hllCol.get._1}))").as(outCol))
       case None =>
@@ -386,7 +382,7 @@ final class RollupManager(eng: OlapEngine) {
     candidate match {
       case Some((rd, v)) =>
         val stored = eng.spark.read.parquet(
-          rollupDir(db, table, rd.name).resolve(s"v$v").toString)
+          storedPath(db, table, rd.name, v))
         // re-aggregate the (possibly finer) rollup to the requested grouping;
         // Sum/Min/Max compose over partial aggregates.
         stored.groupBy(groupCols.map(col): _*)

@@ -617,13 +617,9 @@ object Dedup {
     // corpus-wide word exchange the window needed — which also removes the
     // window's skew exposure (a stopword's df ≈ n_docs posting list all
     // buffered in ONE WindowExec task). Identical df values to both prior
-    // forms. If the vocabulary ever outgrows broadcast limits (8 GB cap),
-    // flip spark.graft.dfreq.broadcast=false to take the pre-r12
-    // AQE-skew-splittable shuffle join instead.
+    // forms.
     val dfreq = tok.groupBy(col("word")).agg(count(lit(1)).as("df"))
-    val bcast = documents.sparkSession.conf
-      .getOption("spark.graft.dfreq.broadcast").forall(_.toBoolean)
-    tok.join(if (bcast) broadcast(dfreq) else dfreq, Seq("word"))
+    tok.join(broadcast(dfreq), Seq("word"))
       .groupBy(col("doc_id"), col("blk"))
       .agg(sort_array(collect_list(struct(col("df"), col("word")))).as("ts"))
       .select(col("doc_id"), col("blk"),

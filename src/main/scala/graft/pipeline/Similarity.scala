@@ -716,7 +716,7 @@ object Similarity {
     *
     * Scale shape: a pure map — no shuffle, no broadcast, no state; the
     * projection matrix is a hash function, so a 1000-executor job carries
-    * zero coordination. (ShuffleAudit: 0 bytes.)
+    * zero coordination (0 shuffle bytes in a traced perfbench run).
     */
   def randomProjection(spark: SparkSession, dir: String, outDim: Int = 16): DataFrame =
     projectOf(spark.read.parquet(s"$dir/embeddings.parquet"), outDim)

@@ -397,7 +397,7 @@ object TextAnalysis {
     // SIDE-EFFECTING BUILDER (r12 advisor note): the eager localCheckpoints
     // below execute the corpus-wide count jobs at CONSTRUCTION time — merely
     // building this DataFrame (Explain, schema inspection) runs them; plan
-    // audits must snapshot the pre-checkpoint form (OptProbe has the hook).
+    // audits must snapshot the pre-checkpoint form.
     val w = graft.operators.MapWidth.widen(toks(spark, dir))
       .select(col("toks").as("w"))
     // materialize both count tables once (optimization r12): bg feeds two

@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -39,30 +37,8 @@ object BucketPruneRewrite extends Rule[LogicalPlan] {
 
   private val BucketCol = "__graft_bucket"
 
-  /** A registered hash-bucketed table: normalized table root + routing.
-    * `layoutFloorRowsetId`: the first rowset id written under THIS layout —
-    * set by [[graft.engine.OlapEngine.rebucket]] so the rule stands down
-    * for relations that read any PRE-rebucket rowset (a time-travel scan of
-    * the old layout routed with the new bucket count would silently read
-    * the wrong directory; unpruned is always correct).
-    */
-  final case class Entry(tableRoot: String, bucketCol: String, numBuckets: Int,
-      bucketForKey: String => Int, layoutFloorRowsetId: Long = 0L)
-
-  private val entries = TrieMap.empty[String, Entry]
-
-  /** Called by OlapEngine.createTable for hash-bucketed tables. */
-  def register(e: Entry): Unit = entries(e.tableRoot) = e
-
-  /** Follow a column RENAME: same routing, same layout floor, new name. */
-  def rename(tableRoot: String, newBucketCol: String): Unit =
-    entries.get(tableRoot).foreach(e =>
-      entries(tableRoot) = e.copy(bucketCol = newBucketCol))
-
-  def clear(): Unit = entries.clear()
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (entries.isEmpty) plan
+    if (!TableRegistry.readsAny(plan)) plan
     else plan.transformUp {
       // match the relation directly, or through a pruning filter another
       // graft rule (partition pruning) already injected below the user filter
@@ -97,20 +73,22 @@ object BucketPruneRewrite extends Rule[LogicalPlan] {
       case h: HadoopFsRelation if h.partitionSchema.fieldNames.contains(BucketCol) => h
       case _ => return None
     }
-    // every root path must be a rowset dir of ONE registered table
-    val parents = fs.location.rootPaths.map(p => Option(p.getParent).map(_.toUri.getPath))
-    val entry = parents.distinct match {
-      case Seq(Some(root)) => entries.get(root).getOrElse(return None)
-      case _ => return None
-    }
+    // every root path must be a rowset dir of ONE registered hash-bucketed table
+    val td = TableRegistry.ofDirs(fs.location.rootPaths.map(_.toUri.getPath))
+      .flatMap(_.definition).getOrElse(return None)
+    if (td.bucketType != graft.catalog.BucketType.Hash) return None
+    val bucketCol = td.bucketColumn.getOrElse(return None)
+    def bucketForKey(k: String): Int = td.bucketType.bucketForKey(k, td.numBuckets)
     // layout guard: every scanned rowset must be written under the CURRENT
-    // bucket layout, else routing literals would point at wrong directories
-    if (entry.layoutFloorRowsetId > 0L) {
+    // bucket layout (rowset ids from `bucketLayoutFloor` on, set by
+    // OlapEngine.rebucket), else routing literals would point at wrong
+    // directories — a time-travel scan of the old layout stays unpruned
+    if (td.bucketLayoutFloor > 0L) {
       val allCurrent = fs.location.rootPaths.forall { p =>
         val seg = p.getName
         seg.length > 1 && seg.startsWith("r") &&
           seg.drop(1).forall(_.isDigit) &&
-          seg.drop(1).toLong >= entry.layoutFloorRowsetId
+          seg.drop(1).toLong >= td.bucketLayoutFloor
       }
       if (!allCurrent) return None
     }
@@ -122,15 +100,15 @@ object BucketPruneRewrite extends Rule[LogicalPlan] {
     }
     // buckets the filter allows for the key column; None = no key conjunct
     val allowed: Option[Seq[Int]] = conjuncts(cond).collectFirst {
-      case EqualTo(a: AttributeReference, l: Literal) if a.name == entry.bucketCol =>
-        keyString(l).map(k => Seq(entry.bucketForKey(k)))
-      case EqualTo(l: Literal, a: AttributeReference) if a.name == entry.bucketCol =>
-        keyString(l).map(k => Seq(entry.bucketForKey(k)))
-      case In(a: AttributeReference, ls) if a.name == entry.bucketCol &&
+      case EqualTo(a: AttributeReference, l: Literal) if a.name == bucketCol =>
+        keyString(l).map(k => Seq(bucketForKey(k)))
+      case EqualTo(l: Literal, a: AttributeReference) if a.name == bucketCol =>
+        keyString(l).map(k => Seq(bucketForKey(k)))
+      case In(a: AttributeReference, ls) if a.name == bucketCol &&
           ls.nonEmpty && ls.forall(_.isInstanceOf[Literal]) =>
         val keys = ls.map(l => keyString(l.asInstanceOf[Literal]))
         if (keys.exists(_.isEmpty)) None
-        else Some(keys.map(k => entry.bucketForKey(k.get)).distinct)
+        else Some(keys.map(k => bucketForKey(k.get)).distinct)
     }.flatten
     allowed.map { bs =>
       if (bs.size == 1) EqualTo(bucketAttr, Literal(bs.head, IntegerType))

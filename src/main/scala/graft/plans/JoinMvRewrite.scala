@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.Inner
@@ -25,7 +23,7 @@ import graft.model.{AggType, KeysType}
   *  - each join input must reduce ([[ScanMatch]]) to parquet leaves equal to
   *    the matching table's CURRENT covering rowset directories — so stale
   *    plans, partial snapshots, and already-rewritten plans never match;
-  *  - registration freshness is re-checked against BOTH live manifests: a
+  *  - build freshness is re-checked against BOTH live manifests: a
   *    load into the fact OR the dim disables the rewrite until refresh;
   *  - both tables must be Duplicate model (merge-on-read models change row
   *    multiplicity between materialization and query);
@@ -41,22 +39,15 @@ import graft.model.{AggType, KeysType}
   */
 object JoinMvRewrite extends Rule[LogicalPlan] with PredicateHelper {
 
-  /** A live, selectable MV build: engine + definition + the (fact, dim)
-    * versions and parquet path it materialized.
+  /** One live MV build over the scanned tables: definition plus the (fact,
+    * dim) versions and parquet path it materialized (read from
+    * [[graft.engine.MvManager.list]] at plan time).
     */
-  final case class Entry(eng: OlapEngine, d: MvJoinDef,
+  private final case class Build(eng: OlapEngine, d: MvJoinDef,
       factV: Long, dimV: Long, path: String)
 
-  private val entries = TrieMap.empty[(String, String, String, String), Entry]
-
-  /** Called by MvManager on materialize/refresh; latest build wins. */
-  def register(e: Entry): Unit =
-    entries((e.eng.warehouse.toString, e.d.factDb, e.d.factTable, e.d.name)) = e
-
-  def clear(): Unit = entries.clear()
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (entries.isEmpty) plan
+    if (!TableRegistry.readsAny(plan)) plan
     else plan.transformUp {
       case agg: Aggregate =>
         try rewrite(agg).getOrElse(agg)
@@ -101,7 +92,13 @@ object JoinMvRewrite extends Rule[LogicalPlan] with PredicateHelper {
       case _ => return None
     }
     val shape = joinMatch(agg.child).getOrElse(return None)
-    val entry = entries.values.filter(e => covers(e, groupAttrs, shape))
+    // either join side may be the fact table
+    val sides = Seq(shape.left, shape.right)
+      .map(sc => TableRegistry.ofDirs(sc.leafPaths).getOrElse(return None))
+    val built = sides.distinct.flatMap(t => t.eng.mvs.list(t.db, t.name).map {
+      case (d, fv, dv) => Build(t.eng, d, fv, dv, t.eng.mvs.storedPath(d, fv, dv))
+    })
+    val entry = built.filter(e => covers(e, groupAttrs, shape))
       .minByOption(_.d.groupCols.size).getOrElse(return None)
 
     val mvPlan = entry.eng.spark.read.parquet(entry.path).queryExecution.analyzed
@@ -178,12 +175,12 @@ object JoinMvRewrite extends Rule[LogicalPlan] with PredicateHelper {
     Some(Aggregate(newGrouping, newResult, replayed))
   }
 
-  /** Entry selectable for this shape: both registrations fresh, both tables
+  /** Build selectable for this shape: both builds fresh, both tables
     * Duplicate model, the two scans are exactly the two tables' current
     * covering rowset sets, the join keys are the declared ones, and dims
     * cover grouping + every filter.
     */
-  private def covers(e: Entry, groupAttrs: Seq[AttributeReference],
+  private def covers(e: Build, groupAttrs: Seq[AttributeReference],
       shape: Shape): Boolean = {
     val d = e.d
     if (e.factV != e.eng.manifest(d.factDb, d.factTable).maxVersion) return false
@@ -225,7 +222,7 @@ object JoinMvRewrite extends Rule[LogicalPlan] with PredicateHelper {
     * are matched per side so an identically-named column on the other side
     * can't satisfy (or be consumed by) a fact-side delete predicate.
     */
-  private def residualFilters(e: Entry, shape: Shape): Option[Seq[Expression]] = {
+  private def residualFilters(e: Build, shape: Shape): Option[Seq[Expression]] = {
     val d = e.d
     val factDirs = e.eng.coveringDirs(d.factDb, d.factTable)
     val (factScan, dimScan) =

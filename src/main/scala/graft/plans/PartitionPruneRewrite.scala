@@ -1,12 +1,12 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
+
+import graft.catalog.{PartitionPolicy, RangeBound, TableDef}
 
 /** Transparent PARTITION pruning — the query-time completion of the engine's
   * Range/List partition routing (reference src/partition.rs:172-189, which
@@ -20,11 +20,13 @@ import org.apache.spark.sql.types._
   *
   * Correctness contract: the engine routes by STRING comparison of the cast
   * partition key (src/partition.rs:180-184 semantics), so the rule compares
-  * in the same string space and only registers columns whose string order
+  * in the same string space and only prunes on columns whose string order
   * equals their typed order (string / date / timestamp — ISO forms). The
   * computed partition set is a SUPERSET of the partitions that can hold
   * matching rows (boundary overlaps stay included); the original row filter
-  * still runs, so pruning can never change an answer.
+  * still runs, so pruning can never change an answer. The slots are read
+  * from the live [[TableDef]] at plan time, so ADD/DROP PARTITION take
+  * effect on the next plan.
   */
 object PartitionPruneRewrite extends Rule[LogicalPlan] {
 
@@ -36,19 +38,37 @@ object PartitionPruneRewrite extends Rule[LogicalPlan] {
   final case class Slot(name: String, lower: Option[String], upper: Option[String],
       values: Seq[String])
 
-  final case class Entry(tableRoot: String, partitionCol: String, slots: Seq[Slot])
-
-  private val entries = TrieMap.empty[String, Entry]
-
-  /** Called by OlapEngine.createTable / partition lifecycle for partitioned
-    * tables with a string-order-safe partition column.
+  /** The routing slots of `td`'s live partitions, or None when the table
+    * is unpartitioned or its partition column is not string-order-safe
+    * (string / date / timestamp — the routing compares string casts, so the
+    * interval math is only meaningful when string order equals typed order;
+    * an integral partition key would break at "10" < "9").
     */
-  def register(e: Entry): Unit = entries(e.tableRoot) = e
-
-  def clear(): Unit = entries.clear()
+  private def slots(td: TableDef): Option[Seq[Slot]] = {
+    val safe = td.partitionColumn.exists(pc =>
+      td.schema.columns.find(_.name == pc).map(_.dataType).exists {
+        case StringType | DateType | TimestampType => true
+        case _ => false
+      })
+    if (!safe) return None
+    td.policy match {
+      case PartitionPolicy.Range =>
+        // lower bound of each slot = the next rung DOWN in the full
+        // (active + dropped) ladder — rows below it routed elsewhere
+        val ladder = (td.partitions.map((_, true)) ++ td.droppedPartitions.map((_, false)))
+          .sortBy(_._1.upperExclusive.getOrElse(RangeBound.MaxValue))
+        Some(ladder.zipWithIndex.collect { case ((p, live), i) if live =>
+          Slot(p.name, lower = if (i == 0) None else ladder(i - 1)._1.upperExclusive,
+            upper = p.upperExclusive, values = Nil)
+        })
+      case PartitionPolicy.List =>
+        Some(td.partitions.map(p => Slot(p.name, None, None, p.listValues)))
+      case PartitionPolicy.Unpartitioned => None
+    }
+  }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (entries.isEmpty) plan
+    if (!TableRegistry.readsAny(plan)) plan
     else plan.transformUp {
       // match the relation directly, or through a pruning filter another
       // graft rule (bucket pruning) already injected below the user filter
@@ -92,11 +112,10 @@ object PartitionPruneRewrite extends Rule[LogicalPlan] {
       case h: HadoopFsRelation if h.partitionSchema.fieldNames.contains(PartCol) => h
       case _ => return None
     }
-    val parents = fs.location.rootPaths.map(p => Option(p.getParent).map(_.toUri.getPath))
-    val entry = parents.distinct match {
-      case Seq(Some(root)) => entries.get(root).getOrElse(return None)
-      case _ => return None
-    }
+    val td = TableRegistry.ofDirs(fs.location.rootPaths.map(_.toUri.getPath))
+      .flatMap(_.definition).getOrElse(return None)
+    val partitionCol = td.partitionColumn.getOrElse(return None)
+    val tableSlots = slots(td).getOrElse(return None)
     val partAttr = lr.output.find(_.name == PartCol).getOrElse(return None)
 
     def conjuncts(e: Expression): Seq[Expression] = e match {
@@ -106,28 +125,28 @@ object PartitionPruneRewrite extends Rule[LogicalPlan] {
     // intersect the allowed-slot sets across every conjunct on the column
     var allowed: Option[Set[String]] = None
     def restrict(pred: Slot => Boolean): Unit = {
-      val s = entry.slots.filter(pred).map(_.name).toSet
+      val s = tableSlots.filter(pred).map(_.name).toSet
       allowed = Some(allowed.fold(s)(_ intersect s))
     }
     conjuncts(cond).foreach {
-      case EqualTo(a: AttributeReference, l: Literal) if a.name == entry.partitionCol =>
+      case EqualTo(a: AttributeReference, l: Literal) if a.name == partitionCol =>
         routingString(l).foreach(v => restrict(mayMatch(_, "=", v)))
-      case EqualTo(l: Literal, a: AttributeReference) if a.name == entry.partitionCol =>
+      case EqualTo(l: Literal, a: AttributeReference) if a.name == partitionCol =>
         routingString(l).foreach(v => restrict(mayMatch(_, "=", v)))
-      case LessThan(a: AttributeReference, l: Literal) if a.name == entry.partitionCol =>
+      case LessThan(a: AttributeReference, l: Literal) if a.name == partitionCol =>
         routingString(l).foreach(v => restrict(mayMatch(_, "<", v)))
-      case LessThanOrEqual(a: AttributeReference, l: Literal) if a.name == entry.partitionCol =>
+      case LessThanOrEqual(a: AttributeReference, l: Literal) if a.name == partitionCol =>
         routingString(l).foreach(v => restrict(mayMatch(_, "<=", v)))
-      case GreaterThan(a: AttributeReference, l: Literal) if a.name == entry.partitionCol =>
+      case GreaterThan(a: AttributeReference, l: Literal) if a.name == partitionCol =>
         routingString(l).foreach(v => restrict(mayMatch(_, ">", v)))
-      case GreaterThanOrEqual(a: AttributeReference, l: Literal) if a.name == entry.partitionCol =>
+      case GreaterThanOrEqual(a: AttributeReference, l: Literal) if a.name == partitionCol =>
         routingString(l).foreach(v => restrict(mayMatch(_, ">=", v)))
       // reversed comparisons: lit OP col ≡ col OP' lit
-      case LessThan(l: Literal, a: AttributeReference) if a.name == entry.partitionCol =>
+      case LessThan(l: Literal, a: AttributeReference) if a.name == partitionCol =>
         routingString(l).foreach(v => restrict(mayMatch(_, ">", v)))
-      case GreaterThan(l: Literal, a: AttributeReference) if a.name == entry.partitionCol =>
+      case GreaterThan(l: Literal, a: AttributeReference) if a.name == partitionCol =>
         routingString(l).foreach(v => restrict(mayMatch(_, "<", v)))
-      case In(a: AttributeReference, ls) if a.name == entry.partitionCol &&
+      case In(a: AttributeReference, ls) if a.name == partitionCol &&
           ls.nonEmpty && ls.forall(_.isInstanceOf[Literal]) =>
         val vs = ls.flatMap(l => routingString(l.asInstanceOf[Literal]))
         if (vs.size == ls.size)
@@ -139,7 +158,7 @@ object PartitionPruneRewrite extends Rule[LogicalPlan] {
       // nothing can match — rows physically present are delete-masked anyway
       case Some(names) if names.isEmpty => Some(Literal(false, BooleanType))
       // only rewrite when something is actually pruned
-      case Some(names) if names.size < entry.slots.size =>
+      case Some(names) if names.size < tableSlots.size =>
         Some(In(partAttr, names.toSeq.sorted.map(n => Literal(n))))
       case _ => None
     }

@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Filter, LogicalPlan}
@@ -18,17 +16,18 @@ import graft.model.{AggType, KeysType}
   * [[graft.engine.RollupManager.aggregate]] already selects rollups when the
   * caller goes through the engine API; this rule removes that requirement.
   * Any `Aggregate` — from the DataFrame API or `spark.sql` — whose child is
-  * exactly the current full snapshot scan of a registered Duplicate-model
-  * table, whose grouping columns are a subset of a fresh rollup's dimensions,
-  * and whose aggregates are Sum/Min/Max over the rollup's source columns, is
-  * rewritten to re-aggregate the (much smaller) rollup parquet instead.
+  * exactly the current full snapshot scan of a Duplicate-model engine table
+  * ([[TableRegistry]]), whose grouping columns are a subset of a fresh
+  * rollup's dimensions, and whose aggregates are Sum/Min/Max over the
+  * rollup's source columns, is rewritten to re-aggregate the (much smaller)
+  * rollup parquet instead.
   *
   * Safety over cleverness — the rewrite fires only when provably exact:
   *  - the scan subtree must consist of Project-of-attributes / Union /
   *    SubqueryAlias / Filter nodes over parquet relations, and its leaf paths
   *    must equal the table's CURRENT covering rowset directories (so a stale
   *    plan, a partial snapshot, or any post-rewrite plan never matches);
-  *  - registration freshness is re-checked against the live manifest, so a
+  *  - build freshness is re-checked against the live manifest, so a
   *    load published after materialization disables the rewrite until the
   *    rollup is refreshed;
   *  - Filters are allowed only on rollup dimension columns (they commute
@@ -47,22 +46,15 @@ import graft.model.{AggType, KeysType}
   */
 object RollupRewrite extends Rule[LogicalPlan] {
 
-  /** A live, selectable rollup: engine handle + definition + the snapshot
-    * version and parquet path it materialized.
+  /** One live rollup build of the scanned table: definition plus the
+    * snapshot version and parquet path it materialized (read from
+    * [[graft.engine.RollupManager.list]] at plan time).
     */
-  final case class Entry(eng: OlapEngine, db: String, table: String,
+  private final case class Build(eng: OlapEngine, db: String, table: String,
       rd: RollupDef, version: Long, path: String)
 
-  private val entries = TrieMap.empty[(String, String, String, String), Entry]
-
-  /** Called by RollupManager on materialize/refresh; latest build wins. */
-  def register(e: Entry): Unit =
-    entries((e.eng.warehouse.toString, e.db, e.table, e.rd.name)) = e
-
-  def clear(): Unit = entries.clear()
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (entries.isEmpty) plan
+    if (!TableRegistry.readsAny(plan)) plan
     else plan.transformUp {
       case agg: Aggregate =>
         try rewrite(agg).getOrElse(agg)
@@ -77,9 +69,13 @@ object RollupRewrite extends Rule[LogicalPlan] {
       case _ => return None
     }
     val scan = ScanMatch.baseScan(agg.child).getOrElse(return None)
+    val t = TableRegistry.ofDirs(scan.leafPaths).getOrElse(return None)
+    val built = t.eng.rollups.list(t.db, t.name).map { case (rd, v) =>
+      Build(t.eng, t.db, t.name, rd, v, t.eng.rollups.storedPath(t.db, t.name, rd.name, v))
+    }
     // Among covering rollups, fewest dimensions wins: coarser grouping means
     // fewer stored rows to re-aggregate (Doris picks its rollup the same way).
-    val entry = entries.values.filter(e => covers(e, agg, groupAttrs, scan))
+    val entry = built.filter(e => covers(e, agg, groupAttrs, scan))
       .minByOption(_.rd.groupCols.size).getOrElse(return None)
 
     val rollupPlan = entry.eng.spark.read.parquet(entry.path)
@@ -212,7 +208,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
     * (so literal typing/cast insertion matches what the query side gets) and
     * attr-normalized for structural comparison.
     */
-  private def rollupPredConjuncts(e: Entry): Seq[Expression] = {
+  private def rollupPredConjuncts(e: Build): Seq[Expression] = {
     val analyzed = e.eng.scan(e.db, e.table)
       .filter(org.apache.spark.sql.functions.expr(e.rd.filter.get))
       .queryExecution.analyzed
@@ -226,7 +222,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
     * stale pre-delete plan) or a filtered rollup's predicate — the rewrite
     * must not fire.
     */
-  private def residualFilters(e: Entry, scan: ScanMatch.Scan): Option[Seq[Expression]] = {
+  private def residualFilters(e: Build, scan: ScanMatch.Scan): Option[Seq[Expression]] = {
     val snap = (try ScanMatch.snapshotConjuncts(e.eng, e.db, e.table)
       catch { case _: Exception => None }).getOrElse(return None)
     val all = scan.filters.flatMap(splitAnd)
@@ -254,12 +250,12 @@ object RollupRewrite extends Rule[LogicalPlan] {
     }
   }
 
-  /** Entry selectable for this aggregate: registered build still fresh,
-    * Duplicate model, scan is exactly the current covering rowset set,
+  /** Build selectable for this aggregate: still fresh, Duplicate model,
+    * scan is exactly the current covering rowset set,
     * dims cover grouping + residual filters (a filtered rollup additionally
     * requires its predicate to appear among the query's conjuncts).
     */
-  private def covers(e: Entry, agg: Aggregate, groupAttrs: Seq[AttributeReference],
+  private def covers(e: Build, agg: Aggregate, groupAttrs: Seq[AttributeReference],
       scan: ScanMatch.Scan): Boolean = {
     if (e.version != e.eng.manifest(e.db, e.table).maxVersion &&
       !freshForQueriedPartitions(e, scan)) return false
@@ -290,7 +286,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
     * stale plan; it only recognizes that the new data cannot reach the
     * queried partitions.
     */
-  private def freshForQueriedPartitions(e: Entry, scan: ScanMatch.Scan): Boolean = {
+  private def freshForQueriedPartitions(e: Build, scan: ScanMatch.Scan): Boolean = {
     val td = e.eng.catalog.getTable(e.db, e.table).getOrElse(return false)
     val partCol = td.partitionColumn.getOrElse(return false)
     if (!e.rd.groupCols.contains(partCol)) return false
@@ -315,7 +311,7 @@ object RollupRewrite extends Rule[LogicalPlan] {
   }
 
   /** Physical partitions a rowset wrote, from its `__graft_part=` dirs. */
-  private def partitionsTouched(e: Entry, r: graft.manifest.RowsetMeta): Set[String] = {
+  private def partitionsTouched(e: Build, r: graft.manifest.RowsetMeta): Set[String] = {
     import scala.jdk.CollectionConverters._
     val dir = e.eng.tableRoot(e.db, e.table).resolve(r.relDir)
     if (!java.nio.file.Files.isDirectory(dir)) Set.empty

@@ -1,15 +1,13 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.execution.datasources.LogicalRelation
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
-import graft.manifest.ColStats
+import graft.manifest.{ColStats, RowsetMeta}
 
 /** Transparent ROWSET pruning by manifest zone maps — the reference's
   * ZoneMapIndex (src/index/mod.rs:61-108) finally wired into reads, one
@@ -33,35 +31,11 @@ import graft.manifest.ColStats
   * whatever sits above (merge-on-read windows, delete masks, unions) is
   * untouched.
   *
-  * Registration happens on the read path (OlapEngine.rawFromRowsets): every
-  * scanned rowset with stats registers its directory. Keys are rowset dirs,
-  * so entries for GC'd rowsets are dead weight at worst, never wrong.
+  * Each rowset dir resolves through [[TableRegistry]] to its manifest entry
+  * (visible, stale or clone-borrowed), so the stats are read live at plan
+  * time; a dir no registered table lists is scanned.
   */
 object RowsetPruneRewrite extends Rule[LogicalPlan] {
-
-  final case class Entry(numRows: Long, cols: Map[String, ColStats],
-      // rowset dir + columns with a bloom sidecar there (RowsetBloom) — the
-      // equality skipping index; bits load lazily, only when a zone map
-      // failed to prune an equality/IN conjunct
-      dir: String = "", bloomCols: Set[String] = Set.empty,
-      // columns with a character-trigram sidecar (RowsetBloom KindNgram) —
-      // the substring index probed by LIKE-'%needle%'-shaped conjuncts
-      ngramCols: Set[String] = Set.empty)
-
-  private val entries = TrieMap.empty[String, Entry]
-
-  def register(rowsetDir: String, e: Entry): Unit = entries(rowsetDir) = e
-
-  def clear(): Unit = entries.clear()
-
-  /** Probe/audit switch: clearing the registry is NOT enough to observe the
-    * unpruned plan, because the engine re-registers every scanned rowset's
-    * stats at DataFrame construction (rawFromRowsets) — the next scan
-    * re-arms the rule. Disabling stops the rewrite while keeping the
-    * registry intact; PruneProbe and the equality spec use it.
-    */
-  @volatile private var enabledV = true
-  def setEnabled(on: Boolean): Unit = enabledV = on
 
   /** The relation beneath any stack of graft-injected pruning filters
     * (bucket + partition pruning may each have nested one).
@@ -77,7 +51,7 @@ object RowsetPruneRewrite extends Rule[LogicalPlan] {
   }
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabledV || entries.isEmpty) plan
+    if (!TableRegistry.readsAny(plan)) plan
     else plan.transformUp {
       case f @ Filter(cond, PeeledRelation(lr)) =>
         try { if (mustBeEmpty(cond, lr)) LocalRelation(f.output) else f }
@@ -86,20 +60,20 @@ object RowsetPruneRewrite extends Rule[LogicalPlan] {
     }
 
   private def mustBeEmpty(cond: Expression, lr: LogicalRelation): Boolean = {
-    val entry = entryOf(lr).getOrElse(return false)
-    conjuncts(cond).exists(c => c.deterministic && disjoint(c, entry))
+    val (dir, r) = rowsetOf(lr).getOrElse(return false)
+    conjuncts(cond).exists(c => c.deterministic && disjoint(c, dir, r))
   }
 
-  private def entryOf(lr: LogicalRelation): Option[Entry] = {
-    val fs = lr.relation match {
-      case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation => h
-      case _ => return None
-    }
-    fs.location.rootPaths.map(_.toUri.getPath).distinct match {
-      case Seq(root) => entries.get(root)
+  /** The one rowset dir a relation reads and its manifest entry. */
+  private def rowsetOf(lr: LogicalRelation): Option[(String, RowsetMeta)] =
+    lr.relation match {
+      case fs: HadoopFsRelation =>
+        fs.location.rootPaths.map(_.toUri.getPath).distinct match {
+          case Seq(dir) => TableRegistry.rowset(dir).map(r => (dir, r))
+          case _ => None
+        }
       case _ => None
     }
-  }
 
   private def conjuncts(e: Expression): Seq[Expression] = e match {
     case And(l, r) => conjuncts(l) ++ conjuncts(r)
@@ -119,16 +93,16 @@ object RowsetPruneRewrite extends Rule[LogicalPlan] {
   def explain(plan: LogicalPlan): Seq[(String, Option[String])] =
     plan.collect {
       case Filter(cond, PeeledRelation(lr)) =>
-        entryOf(lr).map { entry =>
+        rowsetOf(lr).map { case (dir, r) =>
           val cs = conjuncts(cond).filter(_.deterministic)
           val zone = cs.exists(c =>
-            disjoint(c, entry, useBloom = false, useNgram = false))
-          val bloom = zone || cs.exists(c => disjoint(c, entry, useNgram = false))
-          val full = bloom || cs.exists(c => disjoint(c, entry))
+            disjoint(c, dir, r, useBloom = false, useNgram = false))
+          val bloom = zone || cs.exists(c => disjoint(c, dir, r, useNgram = false))
+          val full = bloom || cs.exists(c => disjoint(c, dir, r))
           val reason = if (zone) Some("zone-map")
             else if (bloom) Some("bloom")
             else if (full) Some("ngram") else None
-          (entry.dir, reason)
+          (dir, reason)
         }
     }.flatten
 
@@ -177,11 +151,11 @@ object RowsetPruneRewrite extends Rule[LogicalPlan] {
     * `useBloom = false` restricts the proof to zone maps — the introspection
     * path uses it to attribute WHICH tier pruned.
     */
-  private def disjoint(c: Expression, entry: Entry,
+  private def disjoint(c: Expression, dir: String, r: RowsetMeta,
       useBloom: Boolean = true, useNgram: Boolean = true): Boolean = {
     def stats(a: AttributeReference): Option[ColStats] =
       space(a.dataType).flatMap { case (_, okKinds) =>
-        entry.cols.get(a.name).filter(s => okKinds.contains(s.kind))
+        r.stats.get(a.name).filter(s => okKinds.contains(s.kind))
       }
     // a comparison needs a non-null value; an all-null column satisfies none
     def bounds(a: AttributeReference): Option[(ColStats, String, String)] =
@@ -191,7 +165,7 @@ object RowsetPruneRewrite extends Rule[LogicalPlan] {
       })
     def allNull(a: AttributeReference): Boolean =
       stats(a).exists(s => s.min.isEmpty && s.max.isEmpty &&
-        s.nullCount >= entry.numRows && entry.numRows > 0)
+        s.nullCount >= r.numRows && r.numRows > 0)
 
     // bloom probe: every literal provably absent from the rowset's bloom
     // sidecar. Hash = the SAME Catalyst XxHash64 (seed 42) the build side
@@ -199,8 +173,8 @@ object RowsetPruneRewrite extends Rule[LogicalPlan] {
     // column's old sidecars hash a different byte form — skip, never trust).
     // False negatives are impossible by construction, so pruning is exact.
     def bloomExcludes(a: AttributeReference, ls: Seq[Literal]): Boolean =
-      useBloom && entry.bloomCols.contains(a.name) && entry.dir.nonEmpty &&
-        graft.manifest.RowsetBloom.load(entry.dir, a.name).exists { b =>
+      useBloom && r.bloomCols.contains(a.name) &&
+        graft.manifest.RowsetBloom.load(dir, a.name).exists { b =>
           b.typeTag == a.dataType.catalogString && ls.nonEmpty && ls.forall { l =>
             // a null element never matches (IN yields null, not true)
             l.value == null || (l.dataType == a.dataType && !b.mightContain(
@@ -217,9 +191,8 @@ object RowsetPruneRewrite extends Rule[LogicalPlan] {
     def ngramExcludes(a: AttributeReference, needle: UTF8String): Boolean = {
       val n = graft.manifest.RowsetBloom.NgramSize
       useNgram && a.dataType == StringType && needle != null &&
-        needle.numChars >= n && entry.ngramCols.contains(a.name) &&
-        entry.dir.nonEmpty &&
-        graft.manifest.RowsetBloom.load(entry.dir, a.name,
+        needle.numChars >= n && r.ngramCols.contains(a.name) &&
+        graft.manifest.RowsetBloom.load(dir, a.name,
           graft.manifest.RowsetBloom.KindNgram).exists { b =>
           b.typeTag == s"ngram$n:string" && (0 to needle.numChars - n).exists { i =>
             val g = needle.substring(i, i + n)
@@ -277,7 +250,7 @@ object RowsetPruneRewrite extends Rule[LogicalPlan] {
           }
         } || bloomExcludes(a, ls.map(_.asInstanceOf[Literal]))
       case IsNull(a: AttributeReference) =>
-        stats(a).exists(_.nullCount == 0) && entry.numRows > 0
+        stats(a).exists(_.nullCount == 0) && r.numRows > 0
       case IsNotNull(a: AttributeReference) => allNull(a)
       case StartsWith(a: AttributeReference, l: Literal) if l.value != null =>
         // v startsWith p ⇒ p <= v < nextPrefix(p); disjoint when the whole

@@ -1,7 +1,5 @@
 package graft.plans
 
-import scala.collection.concurrent.TrieMap
-
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Average, Count, Max, Min, Sum}
 import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, LogicalPlan, OneRowRelation, Project}
@@ -37,24 +35,8 @@ import graft.engine.OlapEngine
   */
 object StatsAggRewrite extends Rule[LogicalPlan] {
 
-  final case class Entry(eng: OlapEngine, db: String, table: String)
-
-  // keyed by the table root (parent of rowset dirs), absolute + normalized
-  private val entries = TrieMap.empty[String, Entry]
-
-  /** Called by OlapEngine.createTable / the restart sweep for every table. */
-  def register(tableRoot: String, e: Entry): Unit = entries(tableRoot) = e
-
-  def clear(): Unit = entries.clear()
-
-  /** Probe/audit switch (see RowsetPruneRewrite.setEnabled: clearing the
-    * registry is undone by the next createTable/restart sweep).
-    */
-  @volatile private var enabledV = true
-  def setEnabled(on: Boolean): Unit = enabledV = on
-
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabledV || entries.isEmpty) plan
+    if (!TableRegistry.readsAny(plan)) plan
     else plan.transformUp {
       case agg: Aggregate =>
         try rewrite(agg).getOrElse(agg)
@@ -75,13 +57,8 @@ object StatsAggRewrite extends Rule[LogicalPlan] {
     // any residual filter restricts rows — the stats describe the WHOLE set
     if (scan.filters.nonEmpty) return None
     if (scan.leafPaths.isEmpty) return None
-    val parents = scan.leafPaths
-      .map(p => Option(java.nio.file.Paths.get(p).getParent).map(_.toString))
-    val entry = parents.toSeq.distinct match {
-      case Seq(Some(root)) => entries.get(root).getOrElse(return None)
-      case _ => return None
-    }
-    val Entry(eng, db, table) = entry
+    val TableRegistry.Table(eng, db, table) =
+      TableRegistry.ofDirs(scan.leafPaths).getOrElse(return None)
     if (!ScanMatch.renamesOk(eng, db, table, scan.renames)) return None
     val td = eng.catalog.getTable(db, table).getOrElse(return None)
     if (td.schema.keysType != graft.model.KeysType.Duplicate) return None
@@ -89,13 +66,10 @@ object StatsAggRewrite extends Rule[LogicalPlan] {
     val lo = m.visibleRowsets.map(_.version.start).minOption.getOrElse(0L)
     val covering = m.captureConsistentVersions(lo, m.maxVersion)
     if (covering.exists(_.isDeleteMarker)) return None
-    val data = covering.filter(_.numRows > 0)
     // the plan must read EXACTLY the current covering data dirs — a stale,
     // partial, or post-rewrite plan never matches
-    val expect = data.map(r =>
-      eng.tableRoot(db, table).resolve(r.relDir).toAbsolutePath.normalize.toString).toSet
-    if (scan.leafPaths != expect) return None
-    Some(Matched(eng, db, table, data.map(_.numRows).sum))
+    if (scan.leafPaths != eng.coveringDirs(db, table)) return None
+    Some(Matched(eng, db, table, covering.map(_.numRows).sum))
   }
 
   private def rewrite(agg: Aggregate): Option[LogicalPlan] = {

@@ -8,7 +8,6 @@ import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 
-import graft.engine.OlapEngine
 
 /** Stats-informed join planning — broadcast a MERGED engine dimension when
   * the manifest's own statistics prove the post-merge side is small, even
@@ -58,29 +57,13 @@ import graft.engine.OlapEngine
   */
 object StatsBroadcastRewrite extends Rule[LogicalPlan] {
 
-  final case class Entry(eng: OlapEngine, db: String, table: String)
-
-  // keyed by the table root (parent of rowset dirs), absolute + normalized
-  private val entries = TrieMap.empty[String, Entry]
-
-  /** Called by OlapEngine.createTable / the restart sweep for every table. */
-  def register(tableRoot: String, e: Entry): Unit = entries(tableRoot) = e
-
-  def clear(): Unit = entries.clear()
-
-  /** Probe/audit switch (see RowsetPruneRewrite.setEnabled: clearing the
-    * registry is undone by the next createTable/restart sweep).
-    */
-  @volatile private var enabledV = true
-  def setEnabled(on: Boolean): Unit = enabledV = on
-
   /** Inflation over the metadata fold: HLL relative error (~1.6% at lgK=12)
     * plus headroom for the defaultSize-based row width being approximate.
     */
   private val Safety = 1.25
 
   override def apply(plan: LogicalPlan): LogicalPlan =
-    if (!enabledV || entries.isEmpty) plan
+    if (!TableRegistry.readsAny(plan)) plan
     else {
       val threshold = conf.autoBroadcastJoinThreshold
       if (threshold <= 0) plan
@@ -126,8 +109,8 @@ object StatsBroadcastRewrite extends Rule[LogicalPlan] {
   def estimatedBytes(side: LogicalPlan): Option[Double] = {
     val agg = findAggregate(side).getOrElse(return None)
     val cols = boundColumns(agg).getOrElse(return None)
-    val ndvs = cols.map { case (entry, c) =>
-      cachedNdv(entry, c).getOrElse(return None)
+    val ndvs = cols.map { case (t, c) =>
+      cachedNdv(t, c).getOrElse(return None)
     }
     val rowBound = ndvs.map(_ + 1.0).product
     val rowBytes = (8 + side.output.map(_.dataType.defaultSize).sum).toDouble
@@ -141,13 +124,12 @@ object StatsBroadcastRewrite extends Rule[LogicalPlan] {
   // per (table snapshot, column) per driver, not once per query.
   private val ndvCache = TrieMap.empty[(String, Long, String), Option[Double]]
 
-  private def cachedNdv(entry: Entry, c: String): Option[Double] =
+  private def cachedNdv(t: TableRegistry.Table, c: String): Option[Double] =
     ndvCache.getOrElseUpdate(
       // table ROOT (not db.table): scratch engines in different warehouses
       // may reuse the same qualified name
-      (entry.eng.tableRoot(entry.db, entry.table).toAbsolutePath.normalize.toString,
-        entry.eng.manifest(entry.db, entry.table).maxVersion, c),
-      entry.eng.approxNdv(entry.db, entry.table, c))
+      (t.root.toAbsolutePath.normalize.toString, t.manifest.maxVersion, c),
+      t.eng.approxNdv(t.db, t.name, c))
 
   /** Strip row-preserving / row-reducing operators down to a grouped
     * Aggregate; anything that can EXPAND rows (Generate, Expand, a join)
@@ -165,38 +147,24 @@ object StatsBroadcastRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  /** For each grouping expression of `agg`, the registered entry + CURRENT
+  /** For each grouping expression of `agg`, the registered table + CURRENT
     * column name whose NDV bounds it — or None if any grouping expr fails
     * to trace to a sketched column of one registered table's current
     * snapshot.
     */
-  private def boundColumns(agg: Aggregate): Option[Seq[(Entry, String)]] = {
+  private def boundColumns(agg: Aggregate): Option[Seq[(TableRegistry.Table, String)]] = {
     val groupAttrs = agg.groupingExpressions.map {
       case a: AttributeReference => a
       case _ => return None
     }
     if (groupAttrs.isEmpty) return None
     val (leafDirs, physNames) = trace(agg.child, groupAttrs).getOrElse(return None)
-    val parents = leafDirs.map(d =>
-      Option(java.nio.file.Paths.get(d).getParent).map(_.toString)
-        .getOrElse(return None))
-    val root = parents.toSeq match {
-      case Seq(r) => r
-      case _ => return None
-    }
-    val entry = entries.get(root).getOrElse(return None)
-    val td = entry.eng.catalog.getTable(entry.db, entry.table)
-      .getOrElse(return None)
+    val t = TableRegistry.ofDirs(leafDirs).getOrElse(return None)
+    val td = t.definition.getOrElse(return None)
     // freshness guard: every scanned dir must belong to the CURRENT covering
     // data set — the NDV fold describes now, not a stale snapshot whose keys
     // may since have been deleted
-    val m = entry.eng.manifest(entry.db, entry.table)
-    val lo = m.visibleRowsets.map(_.version.start).minOption.getOrElse(0L)
-    val covering = m.captureConsistentVersions(lo, m.maxVersion)
-    val current = covering.filter(r => !r.isDeleteMarker && r.numRows > 0)
-      .map(r => entry.eng.tableRoot(entry.db, entry.table)
-        .resolve(r.relDir).toAbsolutePath.normalize.toString).toSet
-    if (!leafDirs.subsetOf(current)) return None
+    if (!leafDirs.subsetOf(t.eng.coveringDirs(t.db, t.name))) return None
     Some(physNames.map { names =>
       // each branch saw its era's physical name; all must map to ONE
       // current declared column (renameColumn is metadata-only)
@@ -204,7 +172,7 @@ object StatsBroadcastRewrite extends Rule[LogicalPlan] {
       if (curr.size != 1) return None
       val c = curr.head
       if (!td.schema.columns.exists(_.name == c)) return None
-      (entry, c)
+      (t, c)
     })
   }
 

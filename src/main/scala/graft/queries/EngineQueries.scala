@@ -1494,35 +1494,33 @@ object EngineQueries {
     // the estimate the PLANNER actually compares: the dim side's stats
     // inside the optimized join (pruning can move it off the standalone
     // plan's number), measured with the rule out of the way
-    val native = {
-      graft.plans.StatsBroadcastRewrite.setEnabled(false)
-      try joined.queryExecution.optimizedPlan.collectFirst {
+    def ruleOff[T](body: => T): T =
+      graft.GraftExtensions.withoutRules(spark, graft.plans.StatsBroadcastRewrite)(body)
+    val native = ruleOff {
+      joined.queryExecution.optimizedPlan.collectFirst {
         case j: LJoin => j.right.stats.sizeInBytes.toDouble
       }.getOrElse(sys.error("q275: no join in the optimized plan"))
-      finally graft.plans.StatsBroadcastRewrite.setEnabled(true)
     }
     require(bound < native,
       s"q275 premise: metadata bound $bound must undercut native estimate $native")
     val thr = ((bound + native) / 2).toLong
+    def inspect(): (Boolean, Boolean) = {
+      val qe = joined.queryExecution
+      val hinted = qe.optimizedPlan.collectFirst {
+        case j: LJoin if j.hint.leftHint.exists(_.strategy.contains(BROADCAST)) ||
+            j.hint.rightHint.exists(_.strategy.contains(BROADCAST)) => true
+      }.getOrElse(false)
+      // build-side-qualified: a natively-broadcast small FACT side
+      // (BuildLeft) must not count as the rule's flip
+      val dimBroadcast = "BroadcastHashJoin.*BuildRight".r
+        .findFirstIn(qe.executedPlan.toString).nonEmpty
+      (hinted, dimBroadcast)
+    }
     def planWith(on: Boolean): (Boolean, Boolean) = {
       val prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", thr.toString)
-      graft.plans.StatsBroadcastRewrite.setEnabled(on)
-      try {
-        val qe = joined.queryExecution
-        val hinted = qe.optimizedPlan.collectFirst {
-          case j: LJoin if j.hint.leftHint.exists(_.strategy.contains(BROADCAST)) ||
-              j.hint.rightHint.exists(_.strategy.contains(BROADCAST)) => true
-        }.getOrElse(false)
-        // build-side-qualified: a natively-broadcast small FACT side
-        // (BuildLeft) must not count as the rule's flip
-        val dimBroadcast = "BroadcastHashJoin.*BuildRight".r
-          .findFirstIn(qe.executedPlan.toString).nonEmpty
-        (hinted, dimBroadcast)
-      } finally {
-        graft.plans.StatsBroadcastRewrite.setEnabled(true)
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-      }
+      try if (on) inspect() else ruleOff(inspect())
+      finally spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
     }
     val (hintedOn, bhjOn) = planWith(true)
     val (hintedOff, bhjOff) = planWith(false)

@@ -102,7 +102,7 @@ object Relational {
     * of the reference's declared Sum/Min/Max aggregate model (src/common.rs:54-57).
     */
   def aggQ1(spark: SparkSession, dir: String): DataFrame =
-    // Optimization r12, measured at sf0.1 (OptProbe): 1.23 s → 0.43–0.58 s.
+    // Optimization r12, measured at sf0.1 (OPTIMIZATION_r12.md): 1.23 s → 0.43–0.58 s.
     // Two changes, result bit-identical (oracle-verified at every SF):
     //  - money sums run in the integer-cents domain (see [[moneySum]]) —
     //    the decimal path's per-row double→BigDecimal casts and

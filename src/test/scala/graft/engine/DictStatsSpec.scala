@@ -70,14 +70,13 @@ class DictStatsSpec extends AnyFunSuite {
       .agg(count(lit(1)).as("n"), count(col("cls")).as("nt"))
     assert(relations(df) == 0, "the grouped serve must delete the scan")
     val served = df.collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-    graft.plans.StatsAggRewrite.setEnabled(false)
-    try {
+    graft.GraftExtensions.withoutRules(spark, graft.plans.StatsAggRewrite) {
       val scanned = eng.scan("db", "t").groupBy(col("cls"))
         .agg(count(lit(1)).as("n"), count(col("cls")).as("nt"))
       assert(relations(scanned) > 0)
       val want = scanned.collect().map(r => r.getString(0) -> ((r.getLong(1), r.getLong(2)))).toMap
       assert(served == want)
-    } finally graft.plans.StatsAggRewrite.setEnabled(true)
+    }
   }
 
   test("non-servable shapes keep the scan: other aggregates, expressions, " +

@@ -102,14 +102,13 @@ class NgramBloomSpec extends AnyFunSuite {
       col("msg").contains("QxA"))
     val withRule = preds.map(p =>
       eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
-    RowsetPruneRewrite.setEnabled(false)
-    try {
+    graft.GraftExtensions.withoutRules(spark, RowsetPruneRewrite) {
       val without = preds.map(p =>
         eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
       assert(withRule == without)
       assert(withRule.head.size == 300)
       assert(withRule(1).isEmpty)
-    } finally RowsetPruneRewrite.setEnabled(true)
+    }
   }
 
   test("compaction rebuilds the trigram sidecar for the merged rowset") {

@@ -49,7 +49,16 @@ class PartitionPruneSpec extends AnyFunSuite {
     eng
   }
 
-  private def filesRead(df: DataFrame): Long = {
+  private def filesRead(df: DataFrame): Long =
+    scansOf(df).map(_.selectedPartitions.totalNumberOfFiles).sum
+
+  /** `__graft_part` values of the files the executed plan reads. */
+  private def partitionsRead(df: DataFrame): Set[String] =
+    scansOf(df).flatMap(_.selectedPartitions.toPartitionArray)
+      .flatMap(f => "__graft_part=([^/]+)".r.findFirstMatchIn(f.filePath.toString))
+      .map(_.group(1)).toSet
+
+  private def scansOf(df: DataFrame): Seq[FileSourceScanExec] = {
     import org.apache.spark.sql.execution.SparkPlan
     import org.apache.spark.sql.execution.adaptive.QueryStageExec
     import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
@@ -63,7 +72,48 @@ class PartitionPruneSpec extends AnyFunSuite {
     }) ++ p.children.flatMap(scans)
     val found = scans(df.queryExecution.executedPlan)
     assert(found.nonEmpty, df.queryExecution.executedPlan.toString)
-    found.map(_.selectedPartitions.totalNumberOfFiles).sum
+    found
+  }
+
+  test("pruning follows ADD and DROP PARTITION, and survives a reopen") {
+    val wh = Files.createTempDirectory("graft-pp-ddl-wh-")
+    val eng = new OlapEngine(spark, wh)
+    eng.createDatabase("db")
+    eng.createTable(TableDef(
+      db = "db", name = "t", schema = TableSchema(KeysType.Duplicate, Seq(
+        ColumnSpec.key("k", LongType),
+        ColumnSpec.value("d", StringType),
+        ColumnSpec.value("v", LongType))),
+      policy = PartitionPolicy.Range,
+      partitionColumn = Some("d"),
+      partitions = Seq(
+        PartitionSpec("pa", upperExclusive = Some("2024-02"), numBuckets = 2),
+        PartitionSpec("pb", upperExclusive = Some("2024-03"), numBuckets = 2)),
+      bucketColumn = Some("k"), numBuckets = 2))
+    // 30 rows per month, keys 0..29 in every month (both buckets)
+    def load(months: Seq[String], v: Long): Unit = eng.ingest("db", "t",
+      spark.createDataFrame(months.flatMap(m => (0L until 30L).map(i => Row(i, m, i)))
+        .asJava, schema), Some(Version(v, v)))
+    load(Seq("2024-01-15", "2024-02-15"), 1)
+    eng.addPartition("db", "t",
+      PartitionSpec("pc", upperExclusive = Some("2024-04"), numBuckets = 2))
+    load(Seq("2024-01-15", "2024-02-15", "2024-03-15"), 2)
+    def newMonth(e: OlapEngine) = e.scan("db", "t").filter(col("d") === "2024-03-15")
+    def beforeMarch(e: OlapEngine) = e.scan("db", "t").filter(col("d") < "2024-03")
+    // the added partition routes the filter: only pc's 2 bucket files
+    assert(newMonth(eng).count() == 30L)
+    assert(partitionsRead(newMonth(eng)) == Set("pc"))
+    assert(filesRead(newMonth(eng)) == 2L)
+    assert(partitionsRead(beforeMarch(eng)) == Set("pa", "pb"))
+    eng.dropPartition("db", "t", "pa")
+    // the dropped partition's files are no longer read
+    assert(beforeMarch(eng).count() == 60L) // pb's rows in both rowsets
+    assert(!partitionsRead(beforeMarch(eng)).contains("pa"))
+    val files = (filesRead(newMonth(eng)), filesRead(beforeMarch(eng)))
+    // a fresh engine over the warehouse reads the same files
+    val reopened = new OlapEngine(spark, wh)
+    assert(newMonth(reopened).count() == 30L && beforeMarch(reopened).count() == 60L)
+    assert((filesRead(newMonth(reopened)), filesRead(beforeMarch(reopened))) == files)
   }
 
   test("range predicate opens only the qualifying partitions") {

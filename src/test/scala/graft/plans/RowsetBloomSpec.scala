@@ -105,12 +105,11 @@ class RowsetBloomSpec extends AnyFunSuite {
       col("n") === lit(2814), col("id").isin("id-000001", "id-000002"))
     val withRule = preds.map(p =>
       eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
-    RowsetPruneRewrite.setEnabled(false)
-    try {
+    graft.GraftExtensions.withoutRules(spark, RowsetPruneRewrite) {
       val without = preds.map(p =>
         eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
       assert(withRule == without)
-    } finally RowsetPruneRewrite.setEnabled(true)
+    }
   }
 
   test("compaction rebuilds blooms for the merged rowset") {

@@ -114,17 +114,15 @@ class RowsetPruneSpec extends AnyFunSuite {
       col("s") > "s0150", col("k").isin(5L, 105L), col("v").isNull)
     val withRule = preds.map(p =>
       eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
-    // clearing the registry is not enough — the read path re-registers at
-    // DataFrame construction; the disable switch observes the true unpruned
-    // plan (PruneProbe relies on the same)
-    RowsetPruneRewrite.setEnabled(false)
-    try {
+    // excluding the rule through the session conf observes the true
+    // unpruned plan
+    graft.GraftExtensions.withoutRules(spark, RowsetPruneRewrite) {
       val without = preds.map(p =>
         eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
       assert(withRule == without)
       assert(scansIn(eng.scan("db", "t").filter(col("k") >= 150L)) == 2,
-        "disabled rule must leave every branch")
-    } finally RowsetPruneRewrite.setEnabled(true)
+        "excluded rule must leave every branch")
+    }
   }
 
   test("IS NULL prunes a null-free rowset; all-null columns prune comparisons") {

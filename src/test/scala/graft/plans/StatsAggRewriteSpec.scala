@@ -59,13 +59,12 @@ class StatsAggRewriteSpec extends AnyFunSuite {
     val df = agg(eng)
     assert(scans(df) == 0, df.queryExecution.optimizedPlan.toString)
     val served = df.collect().head
-    StatsAggRewrite.setEnabled(false)
-    try {
+    graft.GraftExtensions.withoutRules(spark, StatsAggRewrite) {
       val scanned = agg(eng)
       assert(scans(scanned) == 2)
       assert(served == scanned.collect().head,
         "metadata-served row must equal the scanned aggregate")
-    } finally StatsAggRewrite.setEnabled(true)
+    }
     assert(served.getLong(6) == 150L && served.getLong(7) == 149L) // one null v
     assert(served.getDouble(3) == 298.0 && served.getString(5) == "s149")
   }
@@ -125,13 +124,12 @@ class StatsAggRewriteSpec extends AnyFunSuite {
     val df = q()
     assert(scans(df) == 0, df.queryExecution.optimizedPlan.toString)
     val served = df.collect().head
-    StatsAggRewrite.setEnabled(false)
-    try {
+    graft.GraftExtensions.withoutRules(spark, StatsAggRewrite) {
       val scanned = q()
       assert(scans(scanned) == 2)
       assert(served == scanned.collect().head,
         "metadata-served SUM/AVG must equal the scanned aggregate")
-    } finally StatsAggRewrite.setEnabled(true)
+    }
     assert(served.getLong(0) == (0L until 150L).sum)
     assert(served.getLong(1) == (0L until 150L).sum - 3L)
     assert(served.getLong(2) == (0L until 150L).map(_ * 7L).sum)

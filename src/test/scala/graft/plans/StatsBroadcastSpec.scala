@@ -20,6 +20,9 @@ import graft.model._
 class StatsBroadcastSpec extends AnyFunSuite {
   private lazy val spark = { val s = SparkTestSession.spark; graft.GraftExtensions.register(s); s }
 
+  private def ruleOff[T](body: => T): T =
+    graft.GraftExtensions.withoutRules(spark, StatsBroadcastRewrite)(body)
+
   private val NKeys = 400
   private val Loads = 10
 
@@ -97,11 +100,10 @@ class StatsBroadcastSpec extends AnyFunSuite {
     // the estimate the PLANNER compares against the threshold: the dim
     // side's stats inside the optimized join (pruning/pushdown can move it
     // off the standalone plan's number)
-    val native = {
-      StatsBroadcastRewrite.setEnabled(false)
-      try fact.join(dim, "k").queryExecution.optimizedPlan.collectFirst {
+    val native = ruleOff {
+      fact.join(dim, "k").queryExecution.optimizedPlan.collectFirst {
         case j: LJoin => j.right.stats.sizeInBytes.toDouble
-      }.get finally StatsBroadcastRewrite.setEnabled(true)
+      }.get
     }
     assert(bound < native, s"churned premise: bound $bound < native $native")
     val thr = ((bound + native) / 2).toLong
@@ -109,17 +111,12 @@ class StatsBroadcastSpec extends AnyFunSuite {
     withThreshold(thr) {
       assert(hinted(joined) && physicallyBroadcast(joined),
         "rule must plant the hint and the planner must honor it")
-      StatsBroadcastRewrite.setEnabled(false)
-      try assert(!hinted(joined) && !physicallyBroadcast(joined),
-        "without the rule the same threshold must shuffle")
-      finally StatsBroadcastRewrite.setEnabled(true)
+      ruleOff(assert(!hinted(joined) && !physicallyBroadcast(joined),
+        "without the rule the same threshold must shuffle"))
     }
     // results identical either way (strategy hints cannot change answers)
     val broadcastRes = withThreshold(thr)(joined.collect().toSeq)
-    StatsBroadcastRewrite.setEnabled(false)
-    val shuffleRes =
-      try withThreshold(thr)(joined.collect().toSeq)
-      finally StatsBroadcastRewrite.setEnabled(true)
+    val shuffleRes = ruleOff(withThreshold(thr)(joined.collect().toSeq))
     assert(broadcastRes == shuffleRes)
   }
 
@@ -179,11 +176,10 @@ class StatsBroadcastSpec extends AnyFunSuite {
     assert(bound.isDefined, "Aggregate-model merge view must bound by key NDV")
     val exactBytes = dim.count() * (8.0 + plan.output.map(_.dataType.defaultSize).sum)
     assert(bound.get >= exactBytes && bound.get <= 4.0 * exactBytes)
-    val native = {
-      StatsBroadcastRewrite.setEnabled(false)
-      try fact.join(dim, "k").queryExecution.optimizedPlan.collectFirst {
+    val native = ruleOff {
+      fact.join(dim, "k").queryExecution.optimizedPlan.collectFirst {
         case j: LJoin => j.right.stats.sizeInBytes.toDouble
-      }.get finally StatsBroadcastRewrite.setEnabled(true)
+      }.get
     }
     assert(bound.get < native, s"premise: bound ${bound.get} < native $native")
     withThreshold(((bound.get + native) / 2).toLong) {
