@@ -1687,7 +1687,10 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val root = tableRoot(db, table)
     if (data.isEmpty) {
       val td = catalog.getTable(db, table).get
+      // the layout columns a parquet read infers from the hive dirs, so
+      // bucket and partition filters resolve on an empty table too
       val st = td.schema.toStructType.add(VersionCol, "long").add(SeqCol, "long")
+        .add(PartCol, "string").add(BucketCol, "int")
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
     }
@@ -1891,13 +1894,23 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     }
   }
 
-  /** Point lookup by bucket key: routes the key to its bucket on the driver
-    * (FNV-1a, exactly like the reference's `tablet_for_row`,
-    * src/table.rs:32-41) and scans ONLY that bucket's directories — at 100 TB
-    * this reads 1/numBuckets of one partition instead of the table, and the
-    * parquet bloom filter on the key column (written at ingest) prunes
-    * segments within the bucket, completing the reference's write-only bloom
-    * index (P3, src/index/mod.rs:152-211) at query time.
+  /** Point lookup by bucket key, in three steps:
+    *  1. Bucket route: the key goes to its bucket on the driver (FNV-1a,
+    *     exactly like the reference's `tablet_for_row`, src/table.rs:32-41),
+    *     and the scan reads only that bucket's directories.
+    *  2. Candidate rowsets: of the one covering capture, the union holds
+    *     every delete marker and only the data rowsets that could hold the
+    *     key — the zone map, then the bloom sidecar, decide it through
+    *     [[graft.plans.RowsetPruneRewrite.refutes]], the predicate the
+    *     optimizer rule uses (the reference's segment skipping,
+    *     src/index/mod.rs:61-108, 152-211). A rowset that refutes the key
+    *     is never listed, planned or opened.
+    *  3. One-stage merge: on Unique and Aggregate tables the merge input is
+    *     `coalesce(1)`; the key filter pins one bucket-column value, so one
+    *     partition satisfies the merge's clustering and no Exchange is
+    *     planned. The trade-off is that a lookup reads its candidate files
+    *     in one task — the shape Doris uses for a one-tablet point read.
+    *     Duplicate lookups do not merge, so their scan stays parallel.
     */
   def lookupByKey(db: String, table: String, keyValue: String): DataFrame = {
     val td = catalog.getTable(db, table).getOrElse(
@@ -1911,14 +1924,37 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val keyType = td.schema.columns.find(_.name == keyCol).get.dataType
     // single capture for data + proof (see scanPartitions' race note)
     val covering = m.captureConsistentVersions(lo, m.maxVersion)
-    val pruned = rawFromRowsets(db, table, covering)
+    val root = tableRoot(db, table)
+    val candidates = keyPredicate(td, keyCol, keyType, keyValue).fold(covering) { p =>
+      covering.filter(r => r.isDeleteMarker || !graft.plans.RowsetPruneRewrite.refutes(
+        p, root.resolve(r.relDir).toAbsolutePath.normalize.toString, r))
+    }
+    val pruned = rawFromRowsets(db, table, candidates)
       .filter(col(BucketCol) === bucket && col(keyCol) === lit(keyValue).cast(keyType))
     td.schema.keysType match {
       case KeysType.Duplicate =>
         pruned.transform(projectDeclared(td))
-      case KeysType.Unique => mergeOrServe(td, covering, pruned)
-      case _ => MergeView(td, pruned, VersionCol, SeqCol)
+      // the unmerged-serve proof takes the full covering set: a subset of
+      // its rowsets only removes rows
+      case KeysType.Unique => mergeOrServe(td, covering, pruned.coalesce(1))
+      case _ => MergeView(td, pruned.coalesce(1), VersionCol, SeqCol)
     }
+  }
+
+  /** `keyCol = keyValue` as the expression rowset pruning reads. Stats and
+    * sidecars are keyed by each rowset's physical column names, so a rowset
+    * written before the key column's rename has none under the current name
+    * and is kept. None (no pruning) when the current name once belonged to
+    * another column, or when the value does not cast to the key type.
+    */
+  private def keyPredicate(td: TableDef, keyCol: String,
+      keyType: org.apache.spark.sql.types.DataType,
+      keyValue: String): Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, EqualTo, Literal}
+    if (td.renamedColumns.contains(keyCol)) return None
+    scala.util.Try(Cast(Literal(keyValue), keyType,
+        Some(spark.sessionState.conf.sessionLocalTimeZone)).eval()).toOption
+      .map(v => EqualTo(AttributeReference(keyCol, keyType)(), Literal(v, keyType)))
   }
 
   /** Colocate join (Doris colocation groups): join two tables that share

@@ -59,10 +59,19 @@ object RowsetPruneRewrite extends Rule[LogicalPlan] {
           logWarning(s"rowset prune bailed: $e"); f }
     }
 
-  private def mustBeEmpty(cond: Expression, lr: LogicalRelation): Boolean = {
-    val (dir, r) = rowsetOf(lr).getOrElse(return false)
+  private def mustBeEmpty(cond: Expression, lr: LogicalRelation): Boolean =
+    rowsetOf(lr).exists { case (dir, r) => refutes(cond, dir, r) }
+
+  /** The one rowset-pruning predicate: is `cond` provably false for every
+    * row of rowset `r`, whose files sit in `dir`? True when some
+    * deterministic conjunct is refuted by the zone map or a bloom or n-gram
+    * sidecar. Attribute names are read as the rowset's physical column
+    * names. This rule calls it per scan branch at optimization;
+    * [[graft.engine.OlapEngine.lookupByKey]] calls it per covering rowset
+    * before it builds the union.
+    */
+  def refutes(cond: Expression, dir: String, r: RowsetMeta): Boolean =
     conjuncts(cond).exists(c => c.deterministic && disjoint(c, dir, r))
-  }
 
   /** The one rowset dir a relation reads and its manifest entry. */
   private def rowsetOf(lr: LogicalRelation): Option[(String, RowsetMeta)] =

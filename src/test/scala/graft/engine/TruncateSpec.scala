@@ -105,6 +105,25 @@ class TruncateSpec extends AnyFunSuite {
     assert(eng.scan("db", "t").select("w").count() == 10L)
   }
 
+  test("lookupByKey and scanPartitions on a table with no data rows: empty, declared schema") {
+    val eng = mkEngine()
+    val declared = eng.catalog.getTable("db", "t").get.schema.toStructType
+    def emptyReads(): Unit = {
+      val lk = eng.lookupByKey("db", "t", "150")
+      val sp = eng.scanPartitions("db", "t", Seq("p0"))
+      Seq(lk, sp).foreach { df =>
+        assert(df.schema.map(f => (f.name, f.dataType)) ==
+          declared.map(f => (f.name, f.dataType)))
+        assert(df.collect().isEmpty)
+      }
+    }
+    emptyReads() // fresh table: no rowset at all
+    load(eng, 100 until 300, 1)
+    assert(eng.lookupByKey("db", "t", "150").count() == 1L)
+    eng.truncateTable("db", "t")
+    emptyReads() // truncate's replacement is a zero-row rowset
+  }
+
   test("SQL faces: TRUNCATE TABLE db.t [PARTITION (p)]; one-part delegates") {
     val eng = mkEngine()
     graft.sql.GraftSql.bind(spark, eng)

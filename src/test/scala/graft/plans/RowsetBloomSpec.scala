@@ -112,6 +112,31 @@ class RowsetBloomSpec extends AnyFunSuite {
     }
   }
 
+  test("lookupByKey does not read a rowset refuted only by its key bloom") {
+    val eng = new OlapEngine(spark, Files.createTempDirectory("graft-bl-lk-"))
+    eng.createDatabase("db")
+    eng.createTable(TableDef(
+      db = "db", name = "u", schema = TableSchema(KeysType.Unique, Seq(
+        ColumnSpec.key("k", LongType),
+        ColumnSpec.value("id", StringType),
+        ColumnSpec.value("n", IntegerType))),
+      bucketColumn = Some("k"), numBuckets = 2, bloomColumns = Seq("k")))
+    Seq(0L, 1L).foreach { parity =>
+      eng.ingest("db", "u", spark.createDataFrame(
+        (parity until 1000L by 2L).map(i => Row(i, f"id-$i%06d", i.toInt)).asJava,
+        schema))
+    }
+    // both zone maps hold key 402; only the even load's bloom does
+    assert(eng.manifest("db", "u").visibleRowsets.forall { r =>
+      r.stats("k").min.get.toLong <= 402L && r.stats("k").max.get.toLong >= 402L })
+    val df = eng.lookupByKey("db", "u", "402")
+    assert(df.queryExecution.analyzed.collect {
+      case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr
+    }.size == 1)
+    assert(scansIn(df) == 1)
+    assert(df.collect().toSeq == Seq(Row(402L, "id-000402", 402)))
+  }
+
   test("compaction rebuilds blooms for the merged rowset") {
     val eng = engine()
     eng.compact("db", "t")
