@@ -22,7 +22,7 @@ import graft.functions.{FnvHash64, Md5Prefix60, VectorDot, ZorderInterleave}
   *    the similarity-search kernel: `SELECT vector_dot(embedding, embedding)`.
   *  - `md5_prefix60(str)` — top 60 bits of md5 as a positive BIGINT, the
   *    portable hash behind SimHash/LSH (recomputable in any engine with md5).
-  *  - the seven `graft.plans` optimizer rules ([[GraftExtensions.rules]]);
+  *  - the five `graft.plans` optimizer rules ([[GraftExtensions.rules]]);
   *    a session skips any rule its `spark.sql.optimizer.excludedRules`
   *    names.
   */
@@ -43,8 +43,8 @@ object GraftExtensions {
     */
   val rules: Seq[Rule[LogicalPlan]] = {
     import graft.plans._
-    Seq(RollupRewrite, JoinMvRewrite, BucketPruneRewrite, PartitionPruneRewrite,
-      RowsetPruneRewrite, StatsAggRewrite, StatsBroadcastRewrite)
+    Seq(RollupRewrite, JoinMvRewrite, ScanPruneRewrite, StatsAggRewrite,
+      StatsBroadcastRewrite)
   }
 
   private val ExcludedRulesKey = "spark.sql.optimizer.excludedRules"

@@ -950,7 +950,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     // a metadata read costing O(files in this load) — cheaper than the
     // count-back Spark job it replaces, and it yields the per-column
     // min/max/null stats that power transparent rowset pruning
-    // (plans.RowsetPruneRewrite) and metadata-served MIN/MAX (minMaxStats).
+    // (plans.ScanPruneRewrite) and metadata-served MIN/MAX (minMaxStats).
     // A zero-row load writes no part files and harvests (0, empty): Doris
     // semantics — an empty load is still a VERSION (the graph stays
     // hole-free); the read path skips file-less rowsets.
@@ -1901,7 +1901,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     *  2. Candidate rowsets: of the one covering capture, the union holds
     *     every delete marker and only the data rowsets that could hold the
     *     key — the zone map, then the bloom sidecar, decide it through
-    *     [[graft.plans.RowsetPruneRewrite.refutes]], the predicate the
+    *     [[graft.plans.ScanPruneRewrite.refutes]], the predicate the
     *     optimizer rule uses (the reference's segment skipping,
     *     src/index/mod.rs:61-108, 152-211). A rowset that refutes the key
     *     is never listed, planned or opened.
@@ -1926,7 +1926,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val covering = m.captureConsistentVersions(lo, m.maxVersion)
     val root = tableRoot(db, table)
     val candidates = keyPredicate(td, keyCol, keyType, keyValue).fold(covering) { p =>
-      covering.filter(r => r.isDeleteMarker || !graft.plans.RowsetPruneRewrite.refutes(
+      covering.filter(r => r.isDeleteMarker || !graft.plans.ScanPruneRewrite.refutes(
         p, root.resolve(r.relDir).toAbsolutePath.normalize.toString, r))
     }
     val pruned = rawFromRowsets(db, table, candidates)
@@ -2186,7 +2186,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     * ngram_bf column (Doris's NGRAM_BF index at the rowset tier) for a
     * freshly written rowset dir. Every 3-gram of every non-null value
     * hashes into the bitset — substring predicates then prune rowsets
-    * where ANY needle gram is absent ([[graft.plans.RowsetPruneRewrite]]).
+    * where ANY needle gram is absent ([[graft.plans.ScanPruneRewrite]]).
     * Two delta-sized passes per column over THIS load only: an exact gram
     * count (so the bitset sizes to real insert volume), then the
     * hash-and-fold. Gram slicing is Spark's own character `substring`, and
@@ -2799,10 +2799,10 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     (out, candidates.size)
   }
 
-  /** EXPLAIN PRUNE: the per-rowset decision the transparent prune rules
+  /** EXPLAIN PRUNE: the per-rowset decision the transparent scan-prune rule
     * would make for `scan(db,table).filter(cond)` — one row per covering
-    * data rowset with `decision` ∈ scanned | zone-map | bloom. The plan is
-    * optimized with the rowset rule EXCLUDED so the pruned branches still
+    * data rowset with `decision` ∈ scanned | zone-map | bloom | ngram. The
+    * plan is optimized with the rule EXCLUDED so the pruned branches still
     * exist to be inspected with their Catalyst-normalized per-branch
     * conditions (exactly what the enabled rule sees). The exclusion is
     * session-scoped: a query racing an explain on the SAME session merely
@@ -2817,8 +2817,8 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val root = tableRoot(db, table)
     val byDir = covering.filter(r => !r.isDeleteMarker && r.numRows > 0)
       .map(r => root.resolve(r.relDir).toAbsolutePath.normalize.toString -> r).toMap
-    val decided = graft.GraftExtensions.withoutRules(spark, graft.plans.RowsetPruneRewrite) {
-      graft.plans.RowsetPruneRewrite.explain(
+    val decided = graft.GraftExtensions.withoutRules(spark, graft.plans.ScanPruneRewrite) {
+      graft.plans.ScanPruneRewrite.explain(
         scan(db, table).filter(cond).queryExecution.optimizedPlan)
     }.toMap
     val rows = byDir.toSeq.map { case (dir, r) =>

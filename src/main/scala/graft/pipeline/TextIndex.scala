@@ -26,7 +26,7 @@ import graft.model._
   *    posting rather than one array per word, so no single reducer ever
   *    materializes a hot word's full list (the q98 scale note, made real).
   *    Bucketed by `word` so a keyword probe bucket-prunes: the serve's
-  *    `word IN (…)` filter routes through [[graft.plans.BucketPruneRewrite]]
+  *    `word IN (…)` filter routes through [[graft.plans.ScanPruneRewrite]]
   *    and opens only the probed terms' buckets.
   *  - `inv_doclen` doc_id → dl: per-document token count, the BM25 length
   *    normalizer. Corpus-rows-but-2-columns narrow; bucketed by doc_id.

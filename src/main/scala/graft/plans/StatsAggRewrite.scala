@@ -14,7 +14,7 @@ import graft.engine.OlapEngine
   * zone maps and row counts, with the scan deleted from the plan entirely
   * (the Aggregate becomes a one-row Project of literals). The API faces
   * (`OlapEngine.minMaxStats` / `countStar`) already serve these; this rule
-  * removes the API requirement the way BucketPruneRewrite does for point
+  * removes the API requirement the way ScanPruneRewrite does for point
   * lookups: any plan — DataFrame or `spark.sql` over a registered view —
   * with this shape is served. At 100 TB the commonest health-check query
   * costs a driver-side manifest fold and zero tasks.

@@ -32,6 +32,15 @@ object TableRegistry {
 
     /** Absolute normalized dir of one of this table's rowsets. */
     def dirOf(r: RowsetMeta): String = root.resolve(r.relDir).toAbsolutePath.normalize.toString
+
+    /** The manifest entry of one rowset dir — visible, stale or borrowed by
+      * a shallow clone (the source manifest keeps a borrowed rowset while
+      * any clone lives).
+      */
+    def rowsetAt(dir: String): Option[RowsetMeta] = {
+      val leaf = java.nio.file.Paths.get(dir).getFileName.toString
+      manifest.allRowsets.find(r => r.relDir.endsWith(leaf) && dirOf(r) == dir)
+    }
   }
 
   private val byRoot = TrieMap.empty[String, Table]
@@ -69,15 +78,5 @@ object TableRegistry {
         dirs.forall(listed)
       }
     }
-  }
-
-  /** The manifest entry of one rowset dir — visible, stale or borrowed by
-    * a shallow clone (the source manifest keeps a borrowed rowset while any
-    * clone lives).
-    */
-  def rowset(dir: String): Option[RowsetMeta] = {
-    val t = ofDirs(Seq(dir)).getOrElse(return None)
-    val leaf = java.nio.file.Paths.get(dir).getFileName.toString
-    t.manifest.allRowsets.find(r => r.relDir.endsWith(leaf) && t.dirOf(r) == dir)
   }
 }

@@ -105,7 +105,7 @@ object EngineFixture {
     // Three MVCC loads over disjoint event_id thirds (the natural shape of
     // time-keyed ingest). q224 filters above the top boundary and REQUIRES
     // the plan to scan exactly one rowset: the manifest zone maps
-    // (StatsHarvest → RowsetPruneRewrite) drop the other two branches at
+    // (StatsHarvest → ScanPruneRewrite) drop the other two branches at
     // optimization time — no listing, no footer read, no task.
     val segSchema = TableSchema(KeysType.Duplicate, Seq(
       ColumnSpec.key("event_id", LongType),
@@ -986,7 +986,7 @@ object EngineQueries {
 
   /** Transparent PARTITION pruning: the SAME predicate as q25, but written
     * as a plain filter over the base scan — no partition-naming API. The
-    * [[graft.plans.PartitionPruneRewrite]] optimizer rule maps the
+    * [[graft.plans.ScanPruneRewrite]] optimizer rule maps the
     * date-range predicate to the one qualifying Range partition and injects
     * a `__graft_part` filter, so the other partitions' directories never
     * open. `PartitionPruneSpec` asserts the file pruning; the oracle
@@ -1035,7 +1035,7 @@ object EngineQueries {
 
   /** Transparent bucket pruning: the SAME point query as q27, but written as
     * a plain filter over the base scan — no engine lookup API. The
-    * [[graft.plans.BucketPruneRewrite]] optimizer rule routes the literal
+    * [[graft.plans.ScanPruneRewrite]] optimizer rule routes the literal
     * with the write path's FNV-1a and injects a `__graft_bucket` filter, so
     * the scan opens 1/numBuckets of the directories (then the parquet bloom
     * filter prunes within the bucket). `BucketPruneSpec` asserts the plan
@@ -1669,7 +1669,7 @@ object EngineQueries {
   /** q224: transparent ROWSET pruning by manifest zone maps. The filter's
     * bound is re-derived with the same arithmetic the fixture used to split
     * the loads, so the predicate excludes two of the three rowsets by
-    * range; [[graft.plans.RowsetPruneRewrite]] collapses their branches at
+    * range; [[graft.plans.ScanPruneRewrite]] collapses their branches at
     * optimization time and the `require` pins that the final plan reads
     * exactly ONE parquet relation. On a year of versioned loads this is
     * the difference between touching one day's rowsets and all of them —

@@ -74,7 +74,7 @@ object Tables {
       val streamDir = java.nio.file.Files.createTempDirectory("graft-events-stream-")
       val src = java.nio.file.Paths.get(s"$dir/events.parquet")
       if (java.nio.file.Files.isDirectory(src)) {
-        // Spark-written table (e.g. a ScaleProbe replica): the file stream
+        // Spark-written table (a directory of part files): the file stream
         // source does not recurse through a symlinked DIRECTORY, so link
         // each part file individually — zero data copies either way
         java.nio.file.Files.list(src).filter(_.toString.endsWith(".parquet"))

@@ -34,7 +34,7 @@ class BucketPruneSpec extends AnyFunSuite {
       bucketColumn = Some("k"), numBuckets = buckets))
     import scala.jdk.CollectionConverters._
     // parity split (NOT a range split): both rowsets span [0,511], so the
-    // rowset-level zone maps (RowsetPruneRewrite) can never exclude a
+    // rowset-level zone maps (ScanPruneRewrite) can never exclude a
     // rowset and this suite keeps pinning BUCKET pruning in isolation
     eng.ingest("db", "t", spark.createDataFrame(
       (0L until 512L).filter(_ % 2 == 0).map(i => Row(i, i * 10)).asJava,

@@ -102,7 +102,7 @@ class NgramBloomSpec extends AnyFunSuite {
       col("msg").contains("QxA"))
     val withRule = preds.map(p =>
       eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
-    graft.GraftExtensions.withoutRules(spark, RowsetPruneRewrite) {
+    graft.GraftExtensions.withoutRules(spark, ScanPruneRewrite) {
       val without = preds.map(p =>
         eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
       assert(withRule == without)

@@ -109,10 +109,17 @@ class PartitionPruneSpec extends AnyFunSuite {
     // the dropped partition's files are no longer read
     assert(beforeMarch(eng).count() == 60L) // pb's rows in both rowsets
     assert(!partitionsRead(beforeMarch(eng)).contains("pa"))
+    // the DROP PARTITION marker's mask on the rowsets older than it must not
+    // switch partition pruning off: the new month still reads only pc
+    assert(newMonth(eng).count() == 30L)
+    assert(partitionsRead(newMonth(eng)) == Set("pc"))
+    assert(filesRead(newMonth(eng)) == 2L)
     val files = (filesRead(newMonth(eng)), filesRead(beforeMarch(eng)))
     // a fresh engine over the warehouse reads the same files
     val reopened = new OlapEngine(spark, wh)
     assert(newMonth(reopened).count() == 30L && beforeMarch(reopened).count() == 60L)
+    assert(partitionsRead(newMonth(reopened)) == Set("pc"))
+    assert(filesRead(newMonth(reopened)) == 2L)
     assert((filesRead(newMonth(reopened)), filesRead(beforeMarch(reopened))) == files)
   }
 

@@ -105,7 +105,7 @@ class RowsetBloomSpec extends AnyFunSuite {
       col("n") === lit(2814), col("id").isin("id-000001", "id-000002"))
     val withRule = preds.map(p =>
       eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
-    graft.GraftExtensions.withoutRules(spark, RowsetPruneRewrite) {
+    graft.GraftExtensions.withoutRules(spark, ScanPruneRewrite) {
       val without = preds.map(p =>
         eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
       assert(withRule == without)

@@ -116,7 +116,7 @@ class RowsetPruneSpec extends AnyFunSuite {
       eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
     // excluding the rule through the session conf observes the true
     // unpruned plan
-    graft.GraftExtensions.withoutRules(spark, RowsetPruneRewrite) {
+    graft.GraftExtensions.withoutRules(spark, ScanPruneRewrite) {
       val without = preds.map(p =>
         eng.scan("db", "t").filter(p).orderBy("k").collect().toSeq)
       assert(withRule == without)
