@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, LinkOption, Path, Paths}
+
 /** Point scratch space at tmpfs when available.
   *
   * Everything ephemeral this engine writes — temporary streaming checkpoints
@@ -13,16 +15,36 @@ package graft
   */
 object FastTmp {
 
-  /** The scratch root actually chosen (tmpfs when possible, else default). */
+  /** The scratch root actually chosen (tmpfs when possible, else default).
+    * A tmpfs root holds nothing but this JVM's scratch, so it is deleted
+    * whole when the JVM exits.
+    */
   lazy val dir: String = {
-    val shm = java.nio.file.Paths.get("/dev/shm")
+    val shm = Paths.get("/dev/shm")
     try {
-      if (java.nio.file.Files.isDirectory(shm) && java.nio.file.Files.isWritable(shm)) {
-        val d = java.nio.file.Files.createTempDirectory(shm, "graft-tmp-")
-        d.toFile.deleteOnExit()
+      if (Files.isDirectory(shm) && Files.isWritable(shm)) {
+        val d = Files.createDirectory(shm.resolve(
+          s"graft-tmp-${ProcessHandle.current().pid()}-${System.nanoTime()}"))
+        Runtime.getRuntime.addShutdownHook(new Thread(() => deleteTree(d)))
         System.setProperty("java.io.tmpdir", d.toString)
         d.toString
       } else System.getProperty("java.io.tmpdir")
     } catch { case _: Exception => System.getProperty("java.io.tmpdir") }
+  }
+
+  /** A fresh temp dir under `java.io.tmpdir` as it is NOW. The JDK's
+    * `Files.createTempDirectory(prefix)` keeps using the value the JVM
+    * started with, so it would never reach the root [[dir]] chooses.
+    */
+  def newDir(prefix: String): Path =
+    Files.createTempDirectory(Paths.get(System.getProperty("java.io.tmpdir")), prefix)
+
+  /** Best effort, never following a symlink (a scratch dir may link to
+    * input data), and going on past entries that vanish or resist.
+    */
+  private def deleteTree(p: Path): Unit = {
+    if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS))
+      Option(p.toFile.listFiles()).foreach(_.foreach(f => deleteTree(f.toPath)))
+    try { Files.deleteIfExists(p); () } catch { case _: Exception => () }
   }
 }

@@ -33,7 +33,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
   // the surviving subset. Spark's missing-file behavior is exactly that —
   // but only while ignoreMissingFiles stays false, so a session that flips
   // it would turn the race into silent partial rows. Refuse to run on one —
-  // AND pin the option per-read in [[rawFromRowsets]], so flipping the conf
+  // AND pin the option per-read in [[rowsetReader]], so flipping the conf
   // on the shared session AFTER construction cannot re-enable the forbidden
   // outcome for already-built engines. (GcReaderRaceSpec pins both.)
   require(!spark.conf.get("spark.sql.files.ignoreMissingFiles", "false").toBoolean,
@@ -53,16 +53,20 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     */
   val results = new ResultCache(this)
   private val manifests = TrieMap.empty[String, TableManifest]
-  // Per-rowset-dir reader cache: a rowset is IMMUTABLE once published (MVCC),
-  // so its parquet reader — whose construction pays a directory listing +
-  // schema inference — is built once per JVM and reused by every later scan.
-  // On a 48-load table this turns O(rowsets) driver-side footer reads PER
-  // QUERY into O(new rowsets) per lifetime (perfbench's `history_reads`
-  // workload exercises it). GC'd dirs leave dead entries that are never
-  // consulted again (their rowsets left the manifest); a pinned reader
+  // Per-rowset-dir reader cache of THIS engine: a rowset is IMMUTABLE once
+  // published (MVCC), so its parquet reader — whose construction pays a
+  // directory listing (and, for a rowset from before schemas were recorded,
+  // a schema-inference job) — is built once per engine and reused by every
+  // later scan. On a 48-load table this turns O(rowsets) driver-side
+  // listings PER QUERY into O(new rowsets) per engine lifetime (perfbench's
+  // `history_reads` workload exercises it). [[gc]] evicts the entries of the
+  // rowsets it deletes, so the cache tracks the manifest; a pinned reader
   // racing GC still fails loudly at execution (ignoreMissingFiles=false is
   // baked into the cached reader).
   private val rawReaders = TrieMap.empty[String, DataFrame]
+
+  /** The dirs the reader cache holds (specs check it tracks the manifest). */
+  private[engine] def cachedReaderDirs: Set[String] = rawReaders.keySet.toSet
   // cross-table LOAD GROUPS (the Doris global-transaction-id shape): staged
   // rowsets are invisible until the ledger's one atomic rename commits the
   // whole group; the coord lock makes a reader racing the activation sweep
@@ -83,8 +87,8 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
   }
 
   // Internal column names (never leak out of scan()).
-  val PartCol = "__graft_part"
-  val BucketCol = "__graft_bucket"
+  val PartCol = RowsetSchema.PartCol
+  val BucketCol = RowsetSchema.BucketCol
   val VersionCol = "__graft_version"
   val SeqCol = "__graft_seq"
   val OpCol = "__graft_op"
@@ -946,29 +950,21 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     }
     writer.parquet(outDir.toString)
 
-    // Row count + rowset zone map in ONE parquet-footer pass (StatsHarvest):
-    // a metadata read costing O(files in this load) — cheaper than the
-    // count-back Spark job it replaces, and it yields the per-column
-    // min/max/null stats that power transparent rowset pruning
+    // Row count + rowset zone map + read schema in ONE parquet-footer pass
+    // (StatsHarvest): a metadata read costing O(files in this load) —
+    // cheaper than the count-back Spark job it replaces, and it yields the
+    // per-column min/max/null stats that power transparent rowset pruning
     // (plans.ScanPruneRewrite) and metadata-served MIN/MAX (minMaxStats).
     // A zero-row load writes no part files and harvests (0, empty): Doris
     // semantics — an empty load is still a VERSION (the graph stays
     // hole-free); the read path skips file-less rowsets.
-    val (numRows, colStats, partRows) = harvestStats(outDir)
-    val blooms = buildBlooms(db, table, outDir, numRows)
-    val ngrams = buildNgramBlooms(db, table, outDir, numRows)
-    val sums = harvestSums(db, table, outDir, numRows)
-    val ndvs = buildNdvSketches(db, table, outDir, numRows)
-    val dicts = buildDictStats(db, table, outDir, numRows)
+    val written = describeWritten(db, table, rowsetId, v, relDir)
     // the write validated and landed: NOW the auto-minted partitions become
     // catalog state — before publish, so the prune rules know the new
     // partitions by the time any reader can see the new rowset
     commitMintedPartitions(db, table, minted)
-    val meta = RowsetMeta(rowsetId, v, relDir, numRows,
-      createdMs = System.currentTimeMillis(), pendingGroup = group,
-      stats = colStats, bloomCols = blooms, sums = sums,
-      ngramCols = ngrams, keyUnique = mergedOnWrite, ndvCols = ndvs,
-      partRows = partRows, dictCols = dicts)
+    val meta = written.copy(createdMs = System.currentTimeMillis(),
+      pendingGroup = group, keyUnique = mergedOnWrite)
     m.publish(meta)
     // dynamic-partition EXPIRY (the complement of the self-extension above):
     // after the load is visible, retire everything older than the newest
@@ -1706,12 +1702,8 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val td0 = catalog.getTable(db, table).get
     val renames = td0.renamedColumns
     val unioned = data.map { r =>
-      // ignoreMissingFiles pinned false PER READ: the constructor guard
-      // covers engine creation, but the conf is session-mutable — the
-      // GC-race contract must not depend on nobody flipping it later
-      val raw = rawReaders.getOrElseUpdate(root.resolve(r.relDir).toString,
-        spark.read.option("ignoreMissingFiles", "false")
-          .parquet(root.resolve(r.relDir).toString))
+      val dir = root.resolve(r.relDir).toString
+      val raw = rawReaders.getOrElseUpdate(dir, rowsetReader(dir, r.schema))
       val renamed = renames.foldLeft(raw) { case (d, (oldName, newName)) =>
         if (d.columns.contains(oldName) && !d.columns.contains(newName))
           d.withColumnRenamed(oldName, newName)
@@ -1741,6 +1733,28 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
           df.filter(!(coalesce(expr(mk.deletePredicate.get), lit(false)) &&
             col(VersionCol) < lit(mk.version.start)))
       }
+    }
+  }
+
+  /** The one reader of a rowset dir. With the schema the manifest recorded
+    * at publish ([[graft.manifest.RowsetMeta.schema]]) building it starts no
+    * Spark job — only the driver-side file listing. Without one (a rowset
+    * from before schemas were recorded, or a failed footer harvest) parquet
+    * inference runs one job, and the layout columns are then pinned to the
+    * recorded types, so old and new rowsets union alike. ignoreMissingFiles
+    * is pinned false PER READ: the constructor guard covers engine
+    * creation, but the conf is session-mutable — the GC-race contract must
+    * not depend on nobody flipping it later.
+    */
+  private def rowsetReader(dir: String,
+      schema: Option[org.apache.spark.sql.types.StructType]): DataFrame = {
+    def reader = spark.read.option("ignoreMissingFiles", "false")
+    schema match {
+      case Some(st) => reader.schema(st).parquet(dir)
+      case None =>
+        val inferred = reader.parquet(dir)
+        val pinned = RowsetSchema.pinLayout(inferred.schema)
+        if (pinned == inferred.schema) inferred else reader.schema(pinned).parquet(dir)
     }
   }
 
@@ -2122,20 +2136,43 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     }
   }
 
-  /** Footer-pass row count + zone map of a freshly written rowset dir —
-    * shared by every data-writing path (ingest, compact, rebucket). Never
-    * fails a load over stats: a harvest error degrades to (spark count, no
-    * stats) so the rowset still publishes (unknown stats never prune).
+  /** The manifest entry of a freshly written rowset dir, before it
+    * publishes — shared by every data-writing path (ingest, compact,
+    * compactCumulative, rebucket). One footer pass ([[StatsHarvest]]) gives
+    * the row count, zone map, per-partition rows and read schema; the
+    * declared sidecars then read the dir through ONE reader built with that
+    * schema, so describing a rowset runs no schema-inference job. Callers
+    * set `createdMs` (after any markStale, so time travel never sees a
+    * compaction's inputs and output at once) and the write-specific flags.
     */
-  private def harvestStats(outDir: Path)
-      : (Long, Map[String, ColStats], Map[String, Long]) =
+  private def describeWritten(db: String, table: String, rowsetId: Long,
+      version: Version, relDir: String): RowsetMeta = {
+    val outDir = tableRoot(db, table).resolve(relDir)
+    val h = harvestStats(outDir)
+    lazy val reader = scala.util.Try(rowsetReader(outDir.toString, h.schema))
+      .toOption
+    RowsetMeta(rowsetId, version, relDir, h.rows, stats = h.stats,
+      partRows = h.partRows, schema = h.schema,
+      bloomCols = buildBlooms(db, table, outDir, h.rows, reader),
+      ngramCols = buildNgramBlooms(db, table, outDir, h.rows, reader),
+      sums = harvestSums(db, table, outDir, h.rows, reader),
+      ndvCols = buildNdvSketches(db, table, outDir, h.rows, reader),
+      dictCols = buildDictStats(db, table, outDir, h.rows, reader))
+  }
+
+  /** Footer pass over a freshly written rowset dir. Never fails a load over
+    * stats: a harvest error degrades to (spark count, no stats, no schema)
+    * so the rowset still publishes (unknown stats never prune, and its
+    * readers infer the schema).
+    */
+  private def harvestStats(outDir: Path): Harvest =
     try StatsHarvest.harvest(outDir, spark.sparkContext.hadoopConfiguration)
     catch {
       case scala.util.control.NonFatal(e) =>
         System.err.println(s"[graft] WARN stats harvest failed for $outDir: $e")
-        val n = try spark.read.parquet(outDir.toString).count()
+        val n = try rowsetReader(outDir.toString, None).count()
           catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-        (n, Map.empty, Map.empty)
+        Harvest(n, Map.empty, Map.empty, None)
     }
 
   /** Build one [[RowsetBloom]] sidecar per declared bloom column for a
@@ -2145,12 +2182,11 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     * never fails a load — a bloom error degrades to no-bloom (no pruning).
     */
   private def buildBlooms(db: String, table: String, outDir: Path,
-      numRows: Long): Seq[String] = {
+      numRows: Long, reader: => Option[DataFrame]): Seq[String] = {
     val td = catalog.getTable(db, table).getOrElse(return Nil)
     if (td.bloomColumns.isEmpty || numRows == 0) return Nil
     import spark.implicits._
-    val df = try spark.read.parquet(outDir.toString)
-      catch { case scala.util.control.NonFatal(_) => return Nil }
+    val df = reader.getOrElse(return Nil)
     td.bloomColumns.filter(df.columns.contains).flatMap { c =>
       try {
         val dt = df.schema(c).dataType
@@ -2197,12 +2233,11 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     * Never fails a load — an error degrades to no-index (no pruning).
     */
   private def buildNgramBlooms(db: String, table: String, outDir: Path,
-      numRows: Long): Seq[String] = {
+      numRows: Long, reader: => Option[DataFrame]): Seq[String] = {
     val td = catalog.getTable(db, table).getOrElse(return Nil)
     if (td.ngramBloomColumns.isEmpty || numRows == 0) return Nil
     import spark.implicits._
-    val df = try spark.read.parquet(outDir.toString)
-      catch { case scala.util.control.NonFatal(_) => return Nil }
+    val df = reader.getOrElse(return Nil)
     val n = RowsetBloom.NgramSize
     td.ngramBloomColumns.filter(df.columns.contains).flatMap { c =>
       try {
@@ -2242,11 +2277,10 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     * absence means un-harvested, never zero. Never fails a load.
     */
   private def buildNdvSketches(db: String, table: String, outDir: Path,
-      numRows: Long): Seq[String] = {
+      numRows: Long, reader: => Option[DataFrame]): Seq[String] = {
     val td = catalog.getTable(db, table).getOrElse(return Nil)
     if (td.ndvStatsColumns.isEmpty || numRows == 0) return Nil
-    val df = try spark.read.parquet(outDir.toString)
-      catch { case scala.util.control.NonFatal(_) => return Nil }
+    val df = reader.getOrElse(return Nil)
     val cols = td.ndvStatsColumns.filter(df.columns.contains)
     if (cols.isEmpty) return Nil
     try {
@@ -2278,12 +2312,11 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     * fails a load.
     */
   private def buildDictStats(db: String, table: String, outDir: Path,
-      numRows: Long): Seq[String] = {
+      numRows: Long, reader: => Option[DataFrame]): Seq[String] = {
     import graft.manifest.DictStats
     val td = catalog.getTable(db, table).getOrElse(return Nil)
     if (td.dictStatsColumns.isEmpty || numRows == 0) return Nil
-    val df = try spark.read.parquet(outDir.toString)
-      catch { case scala.util.control.NonFatal(_) => return Nil }
+    val df = reader.getOrElse(return Nil)
     td.dictStatsColumns.filter(df.columns.contains).flatMap { c =>
       try {
         val dt = df.schema(c).dataType
@@ -2411,11 +2444,10 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     * degrades to no-sums (the serve refuses, the scan answers).
     */
   private def harvestSums(db: String, table: String, outDir: Path,
-      numRows: Long): Map[String, String] = {
+      numRows: Long, reader: => Option[DataFrame]): Map[String, String] = {
     val td = catalog.getTable(db, table).getOrElse(return Map.empty)
     if (td.sumStatsColumns.isEmpty || numRows == 0) return Map.empty
-    val df = try spark.read.parquet(outDir.toString)
-      catch { case scala.util.control.NonFatal(_) => return Map.empty }
+    val df = reader.getOrElse(return Map.empty)
     val cols = td.sumStatsColumns.filter(df.columns.contains)
     if (cols.isEmpty) return Map.empty
     try {
@@ -3104,19 +3136,11 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     // all-rows-tombstoned compactions legitimately produce zero rows;
     // the footer harvest yields (0, empty) for the file-less dir — publish
     // the empty replacement (version continuity) instead of dying
-    val (numRows, colStats, partRows) = harvestStats(outDir)
-    val blooms = buildBlooms(db, table, outDir, numRows)
-    val ngrams = buildNgramBlooms(db, table, outDir, numRows)
-    val sums = harvestSums(db, table, outDir, numRows)
-    val ndvs = buildNdvSketches(db, table, outDir, numRows)
-    val dicts = buildDictStats(db, table, outDir, numRows)
+    val written = describeWritten(db, table, rowsetId, Version(lo, hi), relDir)
     m.markStaleAll(inputs.map(_.rowsetId))
-    val meta = RowsetMeta(rowsetId, Version(lo, hi), relDir, numRows,
-      createdMs = System.currentTimeMillis(), stats = colStats,
-      bloomCols = blooms, sums = sums, ngramCols = ngrams,
+    val meta = written.copy(createdMs = System.currentTimeMillis(),
       // the merge grouped by key: merge-model outputs hold one record/key
-      keyUnique = td.schema.keysType != KeysType.Duplicate,
-      ndvCols = ndvs, partRows = partRows, dictCols = dicts)
+      keyUnique = td.schema.keysType != KeysType.Duplicate)
     m.publish(meta)
     // the rewrite ran under the current schema: dropped columns are now
     // physically gone from every live rowset, so their names free up
@@ -3187,21 +3211,13 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
       .sortWithinPartitions(Seq(PartCol, BucketCol).map(col) ++ clusterCols(newTd): _*)
       .write.mode("errorifexists").partitionBy(PartCol, BucketCol)
       .parquet(outDir.toString)
-    val (numRows, colStats, partRows) = harvestStats(outDir)
-    val blooms = buildBlooms(db, table, outDir, numRows)
-    val ngrams = buildNgramBlooms(db, table, outDir, numRows)
-    val sums = harvestSums(db, table, outDir, numRows)
-    val ndvs = buildNdvSketches(db, table, outDir, numRows)
-    val dicts = buildDictStats(db, table, outDir, numRows)
+    val written = describeWritten(db, table, rowsetId, Version(lo, hi), relDir)
     // routing swap before the manifest swap (see scaladoc ordering argument)
     catalog.alterTable(newTd)
     m.markStaleAll(inputs.map(_.rowsetId))
-    val meta = RowsetMeta(rowsetId, Version(lo, hi), relDir, numRows,
-      createdMs = System.currentTimeMillis(), stats = colStats,
-      bloomCols = blooms, sums = sums, ngramCols = ngrams,
+    val meta = written.copy(createdMs = System.currentTimeMillis(),
       // the merge grouped by key: merge-model outputs hold one record/key
-      keyUnique = td.schema.keysType != KeysType.Duplicate,
-      ndvCols = ndvs, partRows = partRows, dictCols = dicts)
+      keyUnique = td.schema.keysType != KeysType.Duplicate)
     m.publish(meta)
     autoGc(db, table)
     meta
@@ -3240,18 +3256,10 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     // over a version hole in the delta tier
     require(!m.hasVersionHoles(lo, hi),
       s"delta tier [$lo,$hi] of ${td.qualified} has version holes; cannot merge")
-    val root = tableRoot(db, table)
-    // zero-row rowsets hold their version range but have no files to read
-    val scannable = suffix.filter(_.numRows > 0)
-    val raw =
-      if (scannable.isEmpty) {
-        val st = td.schema.toStructType.add(VersionCol, "long").add(SeqCol, "long")
-        spark.createDataFrame(
-          spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
-      } else backfillSchema(db, table, scannable.map { r =>
-        spark.read.parquet(root.resolve(r.relDir).toString)
-          .withColumn(VersionCol, lit(r.version.end))
-      }.reduce(_.unionByName(_, allowMissingColumns = true)))
+    // the suffix holds no delete marker, so this is the plain union of its
+    // rowsets, read like any snapshot: renamed-column eras map to their
+    // current names and DEFAULT backfill applies per rowset
+    val raw = rawFromRowsets(db, table, suffix)
     val merged = td.schema.keysType match {
       case KeysType.Duplicate =>
         raw.transform(projectDeclared(td))
@@ -3260,7 +3268,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
 
     val rowsetId = m.nextRowsetId
     val relDir = s"r$rowsetId"
-    val outDir = root.resolve(relDir)
+    val outDir = tableRoot(db, table).resolve(relDir)
     var out = merged
       .withColumn(PartCol, partitionNameCol(td))
       .withColumn(BucketCol, bucketIdxCol(td))
@@ -3276,19 +3284,11 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     // all-rows-tombstoned compactions legitimately produce zero rows;
     // the footer harvest yields (0, empty) for the file-less dir — publish
     // the empty replacement (version continuity) instead of dying
-    val (numRows, colStats, partRows) = harvestStats(outDir)
-    val blooms = buildBlooms(db, table, outDir, numRows)
-    val ngrams = buildNgramBlooms(db, table, outDir, numRows)
-    val sums = harvestSums(db, table, outDir, numRows)
-    val ndvs = buildNdvSketches(db, table, outDir, numRows)
-    val dicts = buildDictStats(db, table, outDir, numRows)
+    val written = describeWritten(db, table, rowsetId, Version(lo, hi), relDir)
     m.markStaleAll(suffix.map(_.rowsetId))
-    val meta = RowsetMeta(rowsetId, Version(lo, hi), relDir, numRows,
-      createdMs = System.currentTimeMillis(), stats = colStats,
-      bloomCols = blooms, sums = sums, ngramCols = ngrams,
+    val meta = written.copy(createdMs = System.currentTimeMillis(),
       // the merge grouped by key: merge-model outputs hold one record/key
-      keyUnique = td.schema.keysType != KeysType.Duplicate,
-      ndvCols = ndvs, partRows = partRows, dictCols = dicts)
+      keyUnique = td.schema.keysType != KeysType.Duplicate)
     m.publish(meta)
     autoGc(db, table)
     meta
@@ -3303,6 +3303,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     *  - KeepMs(t): delete stale retired more than `t` ms before `nowMs`.
     *  - KeepVersions(n): delete stale whose version range fell out of the
     *    last `n` published versions.
+    * The reader-cache entries of the deleted rowsets go with them.
     */
   def gc(db: String, table: String,
          nowMs: Long = System.currentTimeMillis()): Seq[Long] = {
@@ -3315,7 +3316,8 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
       val pinned = cloneProtectedIds(db, table)
       r => !pinned.contains(r.rowsetId)
     }
-    td.retention match {
+    val dirs = m.allRowsets.map(r => r.rowsetId -> r.relDir).toMap
+    val deleted = td.retention match {
       case Retention.Manual          => m.gc(unborrowed)
       case Retention.Forever         => Nil
       case Retention.KeepMs(t)       =>
@@ -3324,6 +3326,9 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
         val floor = m.maxVersion - n + 1
         m.gc(r => unborrowed(r) && r.version.end < floor)
     }
+    deleted.flatMap(dirs.get).foreach(d =>
+      rawReaders.remove(tableRoot(db, table).resolve(d).toString))
+    deleted
   }
 
   /** Automated retention policies enforce themselves wherever rowsets get

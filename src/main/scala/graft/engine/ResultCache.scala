@@ -72,8 +72,8 @@ final class ResultCache(eng: OlapEngine, maxRows: Long = 100000L) {
       val tmp = root.resolve(s"$fp.tmp${Thread.currentThread().getId}")
       // small results by contract: one file keeps the hit read one task
       df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val (rows, _, _) = StatsHarvest.harvest(tmp,
-        eng.spark.sparkContext.hadoopConfiguration)
+      val rows = StatsHarvest.harvest(tmp,
+        eng.spark.sparkContext.hadoopConfiguration).rows
       if (rows > maxRows) {
         deleteRecursively(tmp)
         (df, false)

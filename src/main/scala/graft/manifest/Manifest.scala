@@ -4,6 +4,7 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.collection.mutable
 import org.json4s._
 import org.json4s.jackson.{JsonMethods, Serialization}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Rowset lifecycle states (reference: src/meta.rs:84-85,123-124). */
 sealed trait RowsetState { def name: String }
@@ -105,7 +106,13 @@ final case class RowsetMeta(
     // columns ([[DictStats]]), folded across the covering set to serve
     // GROUP BY counts from metadata. Same lazy-load/degrade contract as
     // bloomCols; a column past the distinct-value cap is simply absent.
-    dictCols: Seq[String] = Nil) {
+    dictCols: Seq[String] = Nil,
+    // the schema a reader of this rowset's dir sees ([[RowsetSchema]]),
+    // recorded from the footers at write time so reads supply it instead of
+    // running a parquet schema-inference job. None on delete markers,
+    // zero-row rowsets and rowsets from before schemas were recorded; their
+    // readers infer, as every reader once did.
+    schema: Option[StructType] = None) {
   def isDeleteMarker: Boolean = deletePredicate.isDefined || deletePartition.isDefined
   def isPending: Boolean = pendingGroup.isDefined
 }
@@ -120,7 +127,10 @@ final case class RowsetMeta(
   * At 100 TB the physical layout partitions data by (partition dir, bucket
   * file); a single manifest file per table scales to ~1e5 loads (~150 bytes
   * per entry; `ManifestScaleSpec` pins the 10k-publish point at well under
-  * 3 MB and a fast reload). Three mechanisms keep it bounded and cheap:
+  * 3 MB and a fast reload). Rowset schemas are written once per distinct
+  * schema, in a manifest-level dictionary the entries refer to by index, so
+  * a schema costs a few bytes per entry, not its JSON. Three mechanisms
+  * keep it bounded and cheap:
   *  - each persist rewrites the WHOLE file, so multi-rowset commits must go
   *    through [[publishAll]] (one rewrite per BATCH, not per rowset — the
   *    10k-partition ingest shape);
@@ -398,6 +408,9 @@ final class TableManifest(
 
   private def persist(): Unit = {
     Files.createDirectories(tableRoot)
+    val schemaIds = mutable.LinkedHashMap.empty[StructType, Int]
+    rowsets.values.foreach(_.schema.foreach(s =>
+      schemaIds.getOrElseUpdate(s, schemaIds.size)))
     val entries = rowsets.values.map { r =>
       val base = JObject(
         "rowsetId" -> JLong(r.rowsetId), "start" -> JLong(r.version.start),
@@ -447,12 +460,18 @@ final class TableManifest(
         if (r.dictCols.isEmpty) withPr
         else JObject(withPr.obj :+ ("dicts" ->
           (JArray(r.dictCols.toList.map(JString(_): JValue)): JValue)))
-      r.staleMs.fold(withDict)(s =>
-        JObject(withDict.obj :+ ("staleMs" -> (JLong(s): JValue))))
+      val withSchema = r.schema.fold(withDict)(s =>
+        JObject(withDict.obj :+ ("schema" -> (JInt(schemaIds(s)): JValue))))
+      r.staleMs.fold(withSchema)(s =>
+        JObject(withSchema.obj :+ ("staleMs" -> (JLong(s): JValue))))
     }
-    val doc = JObject("maxVersion" -> JLong(maxVersionV),
-      "gcFloorMs" -> JLong(gcFloorV), "autoIdNext" -> JLong(autoIdNextV),
-      "rowsets" -> JArray(entries.toList))
+    val head = JObject("maxVersion" -> JLong(maxVersionV),
+      "gcFloorMs" -> JLong(gcFloorV), "autoIdNext" -> JLong(autoIdNextV))
+    val withSchemas =
+      if (schemaIds.isEmpty) head
+      else JObject(head.obj :+ ("schemas" -> (JArray(schemaIds.keys.toList
+        .map(s => JsonMethods.parse(s.json))): JValue)))
+    val doc = JObject(withSchemas.obj :+ ("rowsets" -> (JArray(entries.toList): JValue)))
     val tmp = tableRoot.resolve(s"_manifest.json.tmp${Thread.currentThread().getId}")
     Files.writeString(tmp, JsonMethods.compact(JsonMethods.render(doc)))
     Files.move(tmp, manifestPath, StandardCopyOption.ATOMIC_MOVE,
@@ -465,6 +484,11 @@ final class TableManifest(
       maxVersionV = (doc \ "maxVersion").extract[Long]
       gcFloorV = (doc \ "gcFloorMs").extractOpt[Long].getOrElse(-1L)
       autoIdNextV = (doc \ "autoIdNext").extractOpt[Long].getOrElse(1L)
+      val schemas = (doc \ "schemas") match {
+        case JArray(vs) => vs.toVector.map(v => DataType.fromJson(
+          JsonMethods.compact(JsonMethods.render(v))).asInstanceOf[StructType])
+        case _ => Vector.empty[StructType]
+      }
       (doc \ "rowsets").extract[List[JValue]].foreach { j =>
         val r = RowsetMeta(
           (j \ "rowsetId").extract[Long],
@@ -511,7 +535,8 @@ final class TableManifest(
           (j \ "dicts") match {
             case JArray(vs) => vs.collect { case JString(c) => c }
             case _ => Nil
-          })
+          },
+          (j \ "schema").extractOpt[Int].flatMap(schemas.lift))
         rowsets(r.rowsetId) = r
         idGen.updateAndGet(cur => math.max(cur, r.rowsetId))
         if (r.state == RowsetState.Visible && !r.isPending) {

@@ -10,6 +10,7 @@ import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
 import org.apache.parquet.schema.{LogicalTypeAnnotation, PrimitiveType}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName._
+import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, MapType, StringType, StructType}
 
 /** Per-column zone map of ONE rowset: min/max/null-count over every file the
   * rowset holds — the reference's write-time ZoneMapIndex
@@ -50,6 +51,48 @@ object ColStats {
   }
 }
 
+/** What one footer pass over a rowset dir yields ([[StatsHarvest.harvest]]). */
+final case class Harvest(rows: Long, stats: Map[String, ColStats],
+    partRows: Map[String, Long], schema: Option[StructType])
+
+/** The schema a reader of a rowset dir sees: the data columns the files
+  * were written with, then the two hive layout columns every rowset write
+  * partitions by. The manifest records it per rowset at publish, so a
+  * reader is built with it and never asks the files (no inference job).
+  * `__graft_part` is always a string — partition names are engine-minted
+  * identifiers, and a name like `2024` must not read as a number.
+  */
+object RowsetSchema {
+  val PartCol = "__graft_part"
+  val BucketCol = "__graft_bucket"
+
+  /** The read schema of a rowset whose files hold `data`. Every field is
+    * nullable, as a file-source relation makes them.
+    */
+  def of(data: StructType): StructType =
+    StructType(data.fields.map(f => f.copy(dataType = nullable(f.dataType),
+      nullable = true))).add(PartCol, StringType).add(BucketCol, IntegerType)
+
+  /** An inferred rowset schema with the layout columns given their
+    * recorded types (partition inference types a numeric-looking name as
+    * a number).
+    */
+  def pinLayout(inferred: StructType): StructType =
+    StructType(inferred.fields.map {
+      case f if f.name == PartCol => f.copy(dataType = StringType)
+      case f if f.name == BucketCol => f.copy(dataType = IntegerType)
+      case f => f
+    })
+
+  private def nullable(dt: DataType): DataType = dt match {
+    case st: StructType => StructType(st.fields.map(f =>
+      f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case ArrayType(e, _) => ArrayType(nullable(e), containsNull = true)
+    case MapType(k, v, _) => MapType(nullable(k), nullable(v), valueContainsNull = true)
+    case other => other
+  }
+}
+
 /** Harvests rowset zone maps from parquet FOOTERS — a metadata read, never a
   * data scan: cost is O(files in this rowset), so ingest pays for its OWN
   * load only (delta-sized, like every maintenance path in this engine). As a
@@ -66,18 +109,22 @@ object ColStats {
   */
 object StatsHarvest {
 
-  /** (total rows, per-column zone map, per-PARTITION row counts) of every
-    * parquet file under `dir`. A column missing usable stats in ANY file is
-    * dropped from the map (unknown, not empty). Unsupported physical/logical
-    * types (decimal, INT96 timestamps, unsigned ints, nested) are skipped
-    * the same way. Partition attribution comes from the hive-layout path
-    * segment the engine itself wrote (`__graft_part=<name>`) — partition
-    * names are engine-minted identifiers, so no unescaping is needed; files
-    * outside such a segment count under no partition (the map stays a
-    * partial attribution, summing to ≤ total rows).
+  /** Total rows, per-column zone map, per-PARTITION row counts and read
+    * schema of every parquet file under `dir`. A column missing usable
+    * stats in ANY file is dropped from the map (unknown, not empty).
+    * Unsupported physical/logical types (decimal, INT96 timestamps,
+    * unsigned ints, nested) are skipped the same way. Partition attribution
+    * comes from the hive-layout path segment the engine itself wrote
+    * (`__graft_part=<name>`) — partition names are engine-minted
+    * identifiers, so no unescaping is needed; files outside such a segment
+    * count under no partition (the map stays a partial attribution, summing
+    * to ≤ total rows). The schema is the Spark schema every footer recorded
+    * at write time — exactly what parquet schema inference would read —
+    * with the layout columns appended ([[RowsetSchema.of]]); None when the
+    * dir holds no file, or a footer lacks the schema or disagrees with
+    * another.
     */
-  def harvest(dir: Path, conf: Configuration)
-      : (Long, Map[String, ColStats], Map[String, Long]) = {
+  def harvest(dir: Path, conf: Configuration): Harvest = {
     val files =
       if (!Files.exists(dir)) Seq.empty
       else Files.walk(dir).iterator().asScala
@@ -87,14 +134,18 @@ object StatsHarvest {
     val acc = scala.collection.mutable.Map.empty[String, ColStats]
     val bad = scala.collection.mutable.Set.empty[String]
     val partAcc = scala.collection.mutable.Map.empty[String, Long]
+    val schemas = scala.collection.mutable.Set.empty[Option[String]]
     files.foreach { f =>
       val part = f.iterator().asScala.map(_.toString)
-        .find(_.startsWith("__graft_part=")).map(_.stripPrefix("__graft_part="))
+        .find(_.startsWith(s"${RowsetSchema.PartCol}="))
+        .map(_.stripPrefix(s"${RowsetSchema.PartCol}="))
       val reader = ParquetFileReader.open(
         HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
       try {
         val footer = reader.getFooter
         val schema = footer.getFileMetaData.getSchema
+        schemas += Option(footer.getFileMetaData.getKeyValueMetaData
+          .get(SparkSchemaKey))
         footer.getBlocks.asScala.foreach { block =>
           rows += block.getRowCount
           part.foreach(p => partAcc(p) = partAcc.getOrElse(p, 0L) + block.getRowCount)
@@ -115,8 +166,20 @@ object StatsHarvest {
         }
       } finally reader.close()
     }
-    (rows, acc.toMap, partAcc.toMap)
+    val sparkSchema = schemas.toSeq match {
+      case Seq(Some(json)) =>
+        scala.util.Try(DataType.fromJson(json)).toOption.collect {
+          case st: StructType => RowsetSchema.of(st)
+        }
+      case _ => None
+    }
+    Harvest(rows, acc.toMap, partAcc.toMap, sparkSchema)
   }
+
+  /** The footer key Spark's parquet writer stores the written schema under
+    * (`ParquetReadSupport.SPARK_METADATA_KEY`).
+    */
+  private val SparkSchemaKey = "org.apache.spark.sql.parquet.row.metadata"
 
   private def merge(a: ColStats, b: ColStats): ColStats = {
     require(a.kind == b.kind, s"stats kind mismatch: ${a.kind} vs ${b.kind}")

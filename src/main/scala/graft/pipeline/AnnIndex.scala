@@ -599,7 +599,7 @@ object AnnIndex {
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
     cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-annidx-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-annidx-"))
       createTables(eng)
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       bootstrap(eng, emb.filter(col("vec_id") % 10 =!= 0))
@@ -617,7 +617,7 @@ object AnnIndex {
   private[pipeline] def deletesEngineFor(spark: SparkSession, dir: String)
   : OlapEngine =
     cache.getOrElseUpdate(s"$dir|deletes", {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-anndel-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-anndel-"))
       createTables(eng)
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       bootstrap(eng, emb.filter(col("vec_id") % 10 =!= 0))
@@ -883,7 +883,7 @@ object AnnIndex {
     */
   def gateAudit(spark: SparkSession, dir: String): DataFrame = {
     val eng = gateCache.getOrElseUpdate(dir, {
-      val e = new OlapEngine(spark, Files.createTempDirectory("graft-anngate-"))
+      val e = new OlapEngine(spark, graft.FastTmp.newDir("graft-anngate-"))
       createTables(e)
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding")).localCheckpoint(true)

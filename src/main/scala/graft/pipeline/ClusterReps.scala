@@ -223,7 +223,7 @@ object ClusterReps {
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
     cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-clusterreps-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-clusterreps-"))
       createIndexTable(eng)
       val d = docs(spark, dir)
       bootstrap(eng, d.filter(col("doc_id") % 10 =!= 0))

@@ -99,7 +99,7 @@ object LshIndex {
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
     cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-lshidx-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-lshidx-"))
       createTables(eng)
       val d = spark.read.parquet(s"$dir/documents.parquet")
       fold(eng, d.filter(col("doc_id") % 10 =!= 0))
@@ -146,7 +146,7 @@ object LshIndex {
     */
   private[pipeline] def deletesEngineFor(spark: SparkSession, dir: String): OlapEngine =
     cache.getOrElseUpdate(s"$dir|deletes", {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-lshidx-del-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-lshidx-del-"))
       createTables(eng)
       val d = spark.read.parquet(s"$dir/documents.parquet")
       fold(eng, d.filter(col("doc_id") % 10 =!= 0))

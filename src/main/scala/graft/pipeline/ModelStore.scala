@@ -411,7 +411,7 @@ object ModelStore {
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
     cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-modelstore-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-modelstore-"))
       createTables(eng)
       val d = docs(spark, dir)
       lmFold(eng, d.filter(col("doc_id") % 10 =!= 0))

@@ -255,7 +255,7 @@ object PhraseIndex {
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
     cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-phridx-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-phridx-"))
       createTables(eng)
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       bootstrap(eng, docs.filter(col("doc_id") % 10 =!= 0))

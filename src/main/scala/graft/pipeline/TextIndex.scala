@@ -616,7 +616,7 @@ object TextIndex {
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
     cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-txtidx-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-txtidx-"))
       createTables(eng)
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       bootstrap(eng, docs.filter(col("doc_id") % 10 =!= 0))
@@ -683,7 +683,7 @@ object TextIndex {
     */
   def refoldEngineFor(spark: SparkSession, dir: String): OlapEngine =
     cache.getOrElseUpdate(s"$dir|refold", {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-txtrefold-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-txtrefold-"))
       createTables(eng)
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       bootstrap(eng, docs)
@@ -700,7 +700,7 @@ object TextIndex {
     */
   def deletesEngineFor(spark: SparkSession, dir: String): OlapEngine =
     cache.getOrElseUpdate(s"$dir|deletes", {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-txtdel-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-txtdel-"))
       createTables(eng)
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       bootstrap(eng, docs)

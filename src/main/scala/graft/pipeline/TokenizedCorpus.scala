@@ -151,7 +151,7 @@ object TokenizedCorpus {
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
     engCache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-tokcorpus-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-tokcorpus-"))
       createTable(eng)
       val d = spark.read.parquet(s"$dir/documents.parquet")
       fold(eng, d.filter(col("doc_id") % 10 =!= 0))

@@ -33,7 +33,7 @@ object EngineFixture {
     cache.getOrElseUpdate(sfDir, build(spark, sfDir))
 
   private def build(spark: SparkSession, sfDir: String): OlapEngine = {
-    val wh = Files.createTempDirectory("graft-warehouse-")
+    val wh = graft.FastTmp.newDir("graft-warehouse-")
     val eng = new OlapEngine(spark, wh)
     eng.createDatabase("graft")
 
@@ -1836,7 +1836,7 @@ object EngineQueries {
     */
   def warehouseRestartServe(spark: SparkSession, dir: String): DataFrame = {
     val eng2 = restartCache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, Files.createTempDirectory("graft-q222-"))
+      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-q222-"))
       graft.sql.GraftSql.bind(spark, eng)
       spark.read.parquet(s"$dir/orders.parquet")
         .withColumn("price_c", col("o_totalprice").cast("decimal(18,2)"))
@@ -1853,7 +1853,7 @@ object EngineQueries {
         "AGG (SUM(price_c) AS sum_price, COUNT(*) AS n)")
       graft.sql.GraftSql.unbind(spark)
       // "restart": copy the warehouse, open a fresh engine, replay NOTHING
-      val dst = Files.createTempDirectory("graft-q222-restart-")
+      val dst = graft.FastTmp.newDir("graft-q222-restart-")
       def copyDir(src: java.nio.file.Path, to: java.nio.file.Path): Unit = {
         import scala.jdk.CollectionConverters._
         Files.walk(src).iterator().asScala.foreach { p =>

@@ -283,7 +283,7 @@ object Relational {
     val o = t(spark, dir, "orders")
       .filter(col("o_orderkey") < 1000)
       .select(col("o_orderkey"), col("o_orderstatus"))
-    val tmp = java.nio.file.Files.createTempDirectory("graft-fmt-").toString
+    val tmp = graft.FastTmp.newDir("graft-fmt-").toString
     o.write.mode("overwrite").option("header", "true").csv(s"$tmp/csv")
     o.write.mode("overwrite").json(s"$tmp/json")
     o.write.mode("overwrite").orc(s"$tmp/orc")
@@ -610,7 +610,7 @@ object Relational {
     */
   def schemaEvolution(spark: SparkSession, dir: String): DataFrame = {
     val o = t(spark, dir, "orders")
-    val tmp = java.nio.file.Files.createTempDirectory("graft-evo-").toString
+    val tmp = graft.FastTmp.newDir("graft-evo-").toString
     o.filter(col("o_orderkey") < 500)
       .select(col("o_orderkey"), col("o_orderstatus"))
       .write.mode("overwrite").parquet(s"$tmp/v1")

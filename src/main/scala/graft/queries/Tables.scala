@@ -71,7 +71,7 @@ object Tables {
     */
   def eventsStreamDir(dir: String): String =
     streamDirCache.getOrElseUpdate(dir, {
-      val streamDir = java.nio.file.Files.createTempDirectory("graft-events-stream-")
+      val streamDir = graft.FastTmp.newDir("graft-events-stream-")
       val src = java.nio.file.Paths.get(s"$dir/events.parquet")
       if (java.nio.file.Files.isDirectory(src)) {
         // Spark-written table (a directory of part files): the file stream

@@ -409,7 +409,7 @@ object GraftSqlParser {
     val cuts = commas.result().filter(_ < whereAt)
     val bounds = (-1 +: cuts) :+ assignText.length
     val AssignRe = """(?s)\s*([A-Za-z_]\w*)\s*=\s*(.+)""".r
-    val sets = bounds.sliding(2).map { case Seq(a, b) =>
+    val sets = bounds.zip(bounds.tail).map { case (a, b) =>
       assignText.substring(a + 1, b) match {
         case AssignRe(name, rhs) =>
           val r = rhs.trim

@@ -81,8 +81,8 @@ object StreamingQueries {
   private def drainedSink(key: String, dir: String)(
       start: (String, String) => org.apache.spark.sql.streaming.StreamingQuery): String = {
     val (ckpt, sink) = drainCache.getOrElseUpdate((key, dir), {
-      val c = java.nio.file.Files.createTempDirectory(s"graft-ckpt-$key-").toString
-      val s = java.nio.file.Files.createTempDirectory(s"graft-sink-$key-").toString
+      val c = graft.FastTmp.newDir(s"graft-ckpt-$key-").toString
+      val s = graft.FastTmp.newDir(s"graft-sink-$key-").toString
       tempDirs.add(c); tempDirs.add(s)
       (c, s)
     })
@@ -238,19 +238,19 @@ object StreamingQueries {
       val d = spark.read.parquet(s"$dir/documents.parquet")
       val eng = streamIdxCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-scidx-wh-"))
+          spark, graft.FastTmp.newDir("graft-scidx-wh-"))
         tempDirs.add(e.warehouse.toString)
         ClusterReps.createIndexTable(e)
         val corpus = d.filter(col("doc_id") % 10 =!= 0)
         ClusterReps.bootstrap(e, corpus)
         // arrival layout: the delta split into three doc_id bands
-        val sd = Files.createTempDirectory("graft-scidx-stream-")
-        val ckpt = Files.createTempDirectory("graft-scidx-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-scidx-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-scidx-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = d.filter(col("doc_id") % 10 === 0)
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-scidx-part-")
+          val tmp = graft.FastTmp.newDir("graft-scidx-part-")
           delta.filter(pmod(col("doc_id") / 10, lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -308,7 +308,7 @@ object StreamingQueries {
         .select(col("event_id"), col("user_id"), col("value"))
       val eng = streamSumCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-ssum-wh-"))
+          spark, graft.FastTmp.newDir("graft-ssum-wh-"))
         tempDirs.add(e.warehouse.toString)
         e.createDatabase("stream")
         e.createTable(TableDef(
@@ -320,12 +320,12 @@ object StreamingQueries {
           bucketColumn = Some("event_id"), numBuckets = 2,
           sumStatsColumns = Seq("event_id", "user_id"),
           ndvStatsColumns = Seq("event_id")))
-        val sd = Files.createTempDirectory("graft-ssum-stream-")
-        val ckpt = Files.createTempDirectory("graft-ssum-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-ssum-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-ssum-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-ssum-part-")
+          val tmp = graft.FastTmp.newDir("graft-ssum-part-")
           ev.filter(pmod(col("event_id"), lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -395,7 +395,7 @@ object StreamingQueries {
         .select(col("event_id"), col("event_type"), col("value"))
       val eng = streamDictCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-sdict-wh-"))
+          spark, graft.FastTmp.newDir("graft-sdict-wh-"))
         tempDirs.add(e.warehouse.toString)
         e.createDatabase("stream")
         e.createTable(TableDef(
@@ -406,12 +406,12 @@ object StreamingQueries {
             ColumnSpec.value("value", org.apache.spark.sql.types.DoubleType))),
           bucketColumn = Some("event_id"), numBuckets = 2,
           dictStatsColumns = Seq("event_type")))
-        val sd = Files.createTempDirectory("graft-sdict-stream-")
-        val ckpt = Files.createTempDirectory("graft-sdict-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-sdict-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-sdict-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-sdict-part-")
+          val tmp = graft.FastTmp.newDir("graft-sdict-part-")
           ev.filter(pmod(col("event_id"), lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -476,7 +476,7 @@ object StreamingQueries {
       import graft.model._
       val eng = streamFunnelCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-sfun-wh-"))
+          spark, graft.FastTmp.newDir("graft-sfun-wh-"))
         tempDirs.add(e.warehouse.toString)
         e.createDatabase("stream")
         e.createTable(TableDef(
@@ -492,12 +492,12 @@ object StreamingQueries {
               AggType.Sum))),
           bucketColumn = Some("stage"), numBuckets = 1))
         val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val sd = Files.createTempDirectory("graft-sfun-stream-")
-        val ckpt = Files.createTempDirectory("graft-sfun-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-sfun-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-sfun-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-sfun-part-")
+          val tmp = graft.FastTmp.newDir("graft-sfun-part-")
           docs.filter(pmod(col("doc_id"), lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -563,7 +563,7 @@ object StreamingQueries {
       import graft.model._
       val eng = streamDatacardCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-sdc-wh-"))
+          spark, graft.FastTmp.newDir("graft-sdc-wh-"))
         tempDirs.add(e.warehouse.toString)
         e.createDatabase("stream")
         e.createTable(TableDef(
@@ -588,12 +588,12 @@ object StreamingQueries {
               AggType.Sum))),
           bucketColumn = Some("fp"), numBuckets = 4))
         val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val sd = Files.createTempDirectory("graft-sdc-stream-")
-        val ckpt = Files.createTempDirectory("graft-sdc-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-sdc-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-sdc-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-sdc-part-")
+          val tmp = graft.FastTmp.newDir("graft-sdc-part-")
           docs.filter(pmod(col("doc_id"), lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -690,17 +690,17 @@ object StreamingQueries {
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       streamAnnCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-sann-wh-"))
+          spark, graft.FastTmp.newDir("graft-sann-wh-"))
         tempDirs.add(e.warehouse.toString)
         AnnIndex.createTables(e)
         AnnIndex.bootstrap(e, emb.filter(col("vec_id") % 10 =!= 0))
-        val sd = Files.createTempDirectory("graft-sann-stream-")
-        val ckpt = Files.createTempDirectory("graft-sann-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-sann-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-sann-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = emb.filter(col("vec_id") % 10 === 0)
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-sann-part-")
+          val tmp = graft.FastTmp.newDir("graft-sann-part-")
           delta.filter(pmod(col("vec_id") / 10, lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -747,17 +747,17 @@ object StreamingQueries {
       streamLshCache.getOrElseUpdate(dir, {
         val docs = spark.read.parquet(s"$dir/documents.parquet")
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-slsh-wh-"))
+          spark, graft.FastTmp.newDir("graft-slsh-wh-"))
         tempDirs.add(e.warehouse.toString)
         LshIndex.createTables(e)
         LshIndex.fold(e, docs.filter(col("doc_id") % 10 =!= 0))
-        val sd = Files.createTempDirectory("graft-slsh-stream-")
-        val ckpt = Files.createTempDirectory("graft-slsh-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-slsh-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-slsh-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = docs.filter(col("doc_id") % 10 === 0)
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-slsh-part-")
+          val tmp = graft.FastTmp.newDir("graft-slsh-part-")
           delta.filter(pmod(col("doc_id") / 10, lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -815,12 +815,12 @@ object StreamingQueries {
       streamLshCdcCache.getOrElseUpdate(dir, {
         val docs = spark.read.parquet(s"$dir/documents.parquet")
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-slshcdc-wh-"))
+          spark, graft.FastTmp.newDir("graft-slshcdc-wh-"))
         tempDirs.add(e.warehouse.toString)
         LshIndex.createTables(e)
         LshIndex.fold(e, docs)
-        val sd = Files.createTempDirectory("graft-slshcdc-stream-")
-        val ckpt = Files.createTempDirectory("graft-slshcdc-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-slshcdc-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-slshcdc-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val doomed = docs.filter(col("doc_id") % 5 === 1)
         val ops = Seq(
@@ -829,7 +829,7 @@ object StreamingQueries {
           doomed.filter(col("doc_id") % 2 === 1).withColumn("op", lit(1)))
         val now = System.currentTimeMillis()
         ops.zipWithIndex.foreach { case (df, i) =>
-          val tmp = Files.createTempDirectory("graft-slshcdc-part-")
+          val tmp = graft.FastTmp.newDir("graft-slshcdc-part-")
           df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
             .findFirst.orElseThrow()
@@ -913,17 +913,17 @@ object StreamingQueries {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       streamTextCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-stxt-wh-"))
+          spark, graft.FastTmp.newDir("graft-stxt-wh-"))
         tempDirs.add(e.warehouse.toString)
         TextIndex.createTables(e)
         TextIndex.bootstrap(e, docs.filter(col("doc_id") % 10 =!= 0))
-        val sd = Files.createTempDirectory("graft-stxt-stream-")
-        val ckpt = Files.createTempDirectory("graft-stxt-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-stxt-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-stxt-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = docs.filter(col("doc_id") % 10 === 0)
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-stxt-part-")
+          val tmp = graft.FastTmp.newDir("graft-stxt-part-")
           delta.filter(pmod(col("doc_id") / 10, lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -984,17 +984,17 @@ object StreamingQueries {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       streamPhraseCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-sphr-wh-"))
+          spark, graft.FastTmp.newDir("graft-sphr-wh-"))
         tempDirs.add(e.warehouse.toString)
         PhraseIndex.createTables(e)
         PhraseIndex.bootstrap(e, docs.filter(col("doc_id") % 10 =!= 0))
-        val sd = Files.createTempDirectory("graft-sphr-stream-")
-        val ckpt = Files.createTempDirectory("graft-sphr-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-sphr-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-sphr-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = docs.filter(col("doc_id") % 10 === 0)
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-sphr-part-")
+          val tmp = graft.FastTmp.newDir("graft-sphr-part-")
           delta.filter(pmod(col("doc_id") / 10, lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -1053,16 +1053,16 @@ object StreamingQueries {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       streamPercolCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-sperc-wh-"))
+          spark, graft.FastTmp.newDir("graft-sperc-wh-"))
         tempDirs.add(e.warehouse.toString)
         TextIndex.createPercolatorTables(e)
         TextIndex.registerQueries(e, TextIndex.defaultRules(spark))
-        val sd = Files.createTempDirectory("graft-sperc-stream-")
-        val ckpt = Files.createTempDirectory("graft-sperc-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-sperc-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-sperc-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-sperc-part-")
+          val tmp = graft.FastTmp.newDir("graft-sperc-part-")
           docs.filter(pmod(col("doc_id"), lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -1127,17 +1127,17 @@ object StreamingQueries {
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       streamLmCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-slm-wh-"))
+          spark, graft.FastTmp.newDir("graft-slm-wh-"))
         tempDirs.add(e.warehouse.toString)
         ModelStore.createTables(e)
         ModelStore.lmFold(e, docs.filter(col("doc_id") % 10 =!= 0))
-        val sd = Files.createTempDirectory("graft-slm-stream-")
-        val ckpt = Files.createTempDirectory("graft-slm-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-slm-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-slm-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = docs.filter(col("doc_id") % 10 === 0)
         val now = System.currentTimeMillis()
         (0 until 3).foreach { i =>
-          val tmp = Files.createTempDirectory("graft-slm-part-")
+          val tmp = graft.FastTmp.newDir("graft-slm-part-")
           delta.filter(pmod(col("doc_id") / 10, lit(3)) === i)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -1201,7 +1201,7 @@ object StreamingQueries {
       import graft.model._
       streamDynCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-sdyn-wh-"))
+          spark, graft.FastTmp.newDir("graft-sdyn-wh-"))
         tempDirs.add(e.warehouse.toString)
         e.createDatabase("graft")
         e.createTable(TableDef(
@@ -1218,8 +1218,8 @@ object StreamingQueries {
         val orders = spark.read.parquet(s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderdate"))
           .filter(col("o_orderdate") >= "1999-12-01")
-        val sd = Files.createTempDirectory("graft-sdyn-stream-")
-        val ckpt = Files.createTempDirectory("graft-sdyn-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-sdyn-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-sdyn-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         // three TIME-ORDERED arrival files — the real ingestion order of a
         // date-partitioned fact table (out-of-order rows would route into
@@ -1231,7 +1231,7 @@ object StreamingQueries {
           col("o_orderdate") >= "2001-02-01")
         val now = System.currentTimeMillis()
         cuts.zipWithIndex.foreach { case (c, i) =>
-          val tmp = Files.createTempDirectory("graft-sdyn-part-")
+          val tmp = graft.FastTmp.newDir("graft-sdyn-part-")
           orders.filter(c)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -1278,7 +1278,7 @@ object StreamingQueries {
       import graft.model._
       streamDlqCache.getOrElseUpdate(dir, {
         val e = new graft.engine.OlapEngine(
-          spark, Files.createTempDirectory("graft-sdlq-wh-"))
+          spark, graft.FastTmp.newDir("graft-sdlq-wh-"))
         tempDirs.add(e.warehouse.toString)
         e.createDatabase("graft")
         e.createTable(TableDef(
@@ -1295,8 +1295,8 @@ object StreamingQueries {
           expiredToDeadLetter = true))
         val orders = spark.read.parquet(s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderdate"))
-        val sd = Files.createTempDirectory("graft-sdlq-stream-")
-        val ckpt = Files.createTempDirectory("graft-sdlq-ckpt-")
+        val sd = graft.FastTmp.newDir("graft-sdlq-stream-")
+        val ckpt = graft.FastTmp.newDir("graft-sdlq-ckpt-")
         Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         // bands 0-1: the live feed in time order (exactly q199's load 1,
         // split); band 2: the late replay inside the expired range (q199's
@@ -1307,7 +1307,7 @@ object StreamingQueries {
           col("o_orderdate") >= "1999-06-01" && col("o_orderdate") < "1999-12-01")
         val now = System.currentTimeMillis()
         cuts.zipWithIndex.foreach { case (c, i) =>
-          val tmp = Files.createTempDirectory("graft-sdlq-part-")
+          val tmp = graft.FastTmp.newDir("graft-sdlq-part-")
           orders.filter(c)
             .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
@@ -1698,10 +1698,10 @@ object StreamingQueries {
       val streamDir = outerLayoutCache.getOrElseUpdate(dir, {
         val mx = ev.agg(max(col("ts"))).head().getTimestamp(0)
         val flushTs = java.sql.Timestamp.from(mx.toInstant.plus(240, ChronoUnit.HOURS))
-        val sd = Files.createTempDirectory("graft-outer-stream-")
+        val sd = graft.FastTmp.newDir("graft-outer-stream-")
         tempDirs.add(sd.toString)
         def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-          val tmp = Files.createTempDirectory("graft-outer-part-")
+          val tmp = graft.FastTmp.newDir("graft-outer-part-")
           df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
           val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
             .findFirst.orElseThrow()
@@ -1781,10 +1781,10 @@ object StreamingQueries {
       val seedSplit = java.sql.Timestamp.from(
         mx.toInstant.truncatedTo(ChronoUnit.HOURS).minus(2, ChronoUnit.HOURS))
 
-      val sd = Files.createTempDirectory("graft-late-stream-")
+      val sd = graft.FastTmp.newDir("graft-late-stream-")
       tempDirs.add(sd.toString)
       def writeOne(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = Files.createTempDirectory("graft-late-part-")
+        val tmp = graft.FastTmp.newDir("graft-late-part-")
         df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
         val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
           .findFirst.orElseThrow()
