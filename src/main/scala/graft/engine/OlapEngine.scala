@@ -2,7 +2,9 @@ package graft.engine
 
 import java.nio.file.{Files, Path}
 import scala.collection.concurrent.TrieMap
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
+import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
+import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 import graft.catalog._
 import graft.manifest._
@@ -13,8 +15,9 @@ import graft.functions.FnvHash64.fnvBucket
   * key-model merge-on-read + compaction. This is the Spark-first re-expression
   * of the reference's `StorageEngine` (src/storage.rs), `Tablet`/rowset layer
   * (src/tablet.rs, src/meta.rs) and segment format (src/segment.rs): Parquet
-  * supplies pages/encodings/compression/zonemaps/blooms (SURVEY.md §2.1-2.3),
-  * Spark supplies scan/prune/merge execution, and this class supplies the
+  * supplies pages/encodings/compression/zonemaps (SURVEY.md §2.1-2.3),
+  * rowset sidecars supply the opt-in blooms, Spark supplies
+  * scan/prune/merge execution, and this class supplies the
   * layers the reference actually defines — placement, MVCC, model semantics.
   *
   * Physical layout (cf. reference src/storage.rs:108-115 path scheme):
@@ -744,15 +747,46 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
       pmod(monotonically_increasing_id(), lit(td.numBuckets.toLong)).cast("int")
   }
 
-  /** Routed ingest: route rows to (partition, bucket), sort within partitions
-    * by key columns (the short-key-locality analogue of the reference's
-    * sorted segments + short-key index, src/index/mod.rs:114-147 — Parquet
-    * min/max stats on sorted data give the same seek pruning), write one
-    * immutable rowset, publish it to the manifest (src/storage.rs:79-87).
-    *
-    * `version`: explicit [start,end] for replaying the reference's rowset
-    * fixtures; default = [max+1, max+1].
+  /** The layout columns every rowset write adds: the routed partition name
+    * and bucket; for the merge models `__graft_seq`, the persisted
+    * load-order tiebreaker within one rowset (the reference leaves it
+    * undefined, SURVEY.md §7 "hard parts"); and for Unique tables
+    * `__graft_op` (0 upsert, 1 delete tombstone, the StarRocks/Doris
+    * batch-delete marker that merge-on-read honours), set to `op` unless
+    * the frame already carries one.
     */
+  private def withLayout(td: TableDef, df: DataFrame, op: Column = lit(0)): DataFrame = {
+    val routed = df.withColumn(PartCol, partitionNameCol(td))
+      .withColumn(BucketCol, bucketIdxCol(td))
+    val sequenced =
+      if (td.schema.keysType == KeysType.Duplicate) routed
+      else routed.withColumn(SeqCol, monotonically_increasing_id())
+    if (td.schema.keysType != KeysType.Unique || df.columns.contains(OpCol)) sequenced
+    else sequenced.withColumn(OpCol, op)
+  }
+
+  /** Write `frame` (laid out by [[withLayout]]) as rowset `rowsetId` of
+    * `td` and describe it ([[describeWritten]]): one dir per (partition,
+    * bucket), each sorted by [[clusterCols]], so parquet min/max on sorted
+    * data give the seek pruning of the reference's sorted segments and
+    * short-key index (src/index/mod.rs:114-147). LZ4 block compression,
+    * the reference's default codec (src/compression/mod.rs:6-13,
+    * src/field_type.rs:90). No parquet bloom: key-sorted files already
+    * skip by row-group and page min/max, the bucket route picks one file
+    * per partition, and declared `bloom_filter_columns` get a rowset
+    * sidecar sized to the data.
+    */
+  private def writeRowset(td: TableDef, frame: DataFrame, rowsetId: Long,
+      version: Version): RowsetMeta = {
+    val relDir = s"r$rowsetId"
+    frame.repartition(col(PartCol), col(BucketCol))
+      .sortWithinPartitions(Seq(PartCol, BucketCol).map(col) ++ clusterCols(td): _*)
+      .write.mode("errorifexists").partitionBy(PartCol, BucketCol)
+      .option("compression", "lz4_raw")
+      .parquet(tableRoot(td.db, td.name).resolve(relDir).toString)
+    describeWritten(td, rowsetId, version, relDir)
+  }
+
   /** Conform an input frame to the table schema: every declared column must
     * be present (loud failure otherwise), values are cast to the declared
     * types, extra columns are dropped — the schema contract the reference
@@ -827,6 +861,13 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     seqd.groupBy(td.schema.keyNames.map(col): _*).agg(aggs.head, aggs.tail: _*)
   }
 
+  /** Routed ingest: conform the load, lay it out ([[withLayout]]), write
+    * one immutable rowset ([[writeRowset]]) and publish it to the manifest
+    * (src/storage.rs:79-87).
+    *
+    * `version`: explicit [start,end] for replaying the reference's rowset
+    * fixtures; default = [max+1, max+1].
+    */
   def ingest(db: String, table: String, df: DataFrame,
              version: Option[Version] = None,
              explicitRowsetId: Option[Long] = None,
@@ -889,27 +930,12 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val m = manifest(db, table)
     val v = version.getOrElse(Version(m.maxVersion + 1, m.maxVersion + 1))
     val rowsetId = explicitRowsetId.getOrElse(m.nextRowsetId)
-    val relDir = s"r$rowsetId"
-    val outDir = tableRoot(db, table).resolve(relDir)
 
-    val keyNames = td1.schema.keyNames
-    var routed = conform(td1, routable, opColumn.toSeq)
-      .withColumn(PartCol, partitionNameCol(td1))
-      .withColumn(BucketCol, bucketIdxCol(td1))
-    // __graft_seq: persisted load-order tiebreaker for Unique/Replace
-    // determinism *within* one rowset (the reference leaves this undefined —
-    // SURVEY.md §7 "hard parts"; we define it and persist it).
-    if (td.schema.keysType != KeysType.Duplicate)
-      routed = routed.withColumn(SeqCol, monotonically_increasing_id())
-    // __graft_op: 0 = upsert, 1 = delete tombstone (Unique model only) —
-    // the StarRocks/Doris-style batch-delete marker; merge-on-read drops a
-    // key whose latest (version, seq) record is a tombstone. `opColumn`
-    // supplies a per-row op (the MERGE INTO shape); `op` a whole-load one.
-    if (td.schema.keysType == KeysType.Unique) {
-      routed = routed.withColumn(OpCol,
-        opColumn.map(n => col(n).cast("int")).getOrElse(lit(op)))
-      opColumn.foreach(n => routed = routed.drop(n))
-    }
+    // `opColumn` supplies a per-row op (the MERGE INTO shape); `op` a
+    // whole-load one
+    val laidOut = withLayout(td1, conform(td1, routable, opColumn.toSeq),
+      opColumn.fold(lit(op))(n => col(n).cast("int")))
+      .drop(opColumn.toSeq: _*)
     // MERGE-ON-WRITE (TableDef.mergeOnWrite): pre-merge THIS load per key
     // before writing — the same (sequence?, seq) latest-wins resolution
     // merge-on-read applies, evaluated one load early. The winner's op
@@ -920,45 +946,22 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     // every rowset holds at most one record per key (RowsetMeta.keyUnique),
     // which lets key-disjoint covering sets serve with no merge aggregate.
     val mergedOnWrite = td.schema.keysType == KeysType.Unique && td1.mergeOnWrite
-    if (mergedOnWrite) {
-      val keyNames2 = td1.schema.keyNames
-      val ord = td1.sequenceColumn match {
-        case Some(sc) => struct(col(sc), col(SeqCol))
-        case None => struct(col(SeqCol))
+    val toWrite =
+      if (!mergedOnWrite) laidOut
+      else {
+        val keyNames = td1.schema.keyNames
+        val ord = td1.sequenceColumn match {
+          case Some(sc) => struct(col(sc), col(SeqCol))
+          case None => struct(col(SeqCol))
+        }
+        val payloadNames = laidOut.columns.filterNot(keyNames.contains).toSeq
+        val payload = struct(payloadNames.map(col): _*)
+        laidOut.groupBy(keyNames.map(col): _*)
+          .agg(max_by(payload, ord).as("__graft_mow"))
+          .select(keyNames.map(col) ++
+            payloadNames.map(n => col(s"__graft_mow.$n").as(n)): _*)
       }
-      val payloadNames = routed.columns.filterNot(keyNames2.contains).toSeq
-      val payload = struct(payloadNames.map(col): _*)
-      routed = routed.groupBy(keyNames2.map(col): _*)
-        .agg(max_by(payload, ord).as("__graft_mow"))
-        .select(keyNames2.map(col) ++
-          payloadNames.map(n => col(s"__graft_mow.$n").as(n)): _*)
-    }
-
-    val sortCols = Seq(PartCol, BucketCol).map(col) ++ clusterCols(td)
-    var writer = routed
-      .repartition(col(PartCol), col(BucketCol))
-      .sortWithinPartitions(sortCols: _*)
-      .write
-      .mode("errorifexists")
-      .partitionBy(PartCol, BucketCol)
-      // LZ4 block compression, as the reference's default codec
-      // (src/compression/mod.rs:6-13, src/field_type.rs:90)
-      .option("compression", "lz4_raw")
-    // bloom filter on the leading key, cf. reference P3 (src/index/mod.rs:152-211)
-    keyNames.headOption.foreach { k =>
-      writer = writer.option(s"parquet.bloom.filter.enabled#$k", "true")
-    }
-    writer.parquet(outDir.toString)
-
-    // Row count + rowset zone map + read schema in ONE parquet-footer pass
-    // (StatsHarvest): a metadata read costing O(files in this load) —
-    // cheaper than the count-back Spark job it replaces, and it yields the
-    // per-column min/max/null stats that power transparent rowset pruning
-    // (plans.ScanPruneRewrite) and metadata-served MIN/MAX (minMaxStats).
-    // A zero-row load writes no part files and harvests (0, empty): Doris
-    // semantics — an empty load is still a VERSION (the graph stays
-    // hole-free); the read path skips file-less rowsets.
-    val written = describeWritten(db, table, rowsetId, v, relDir)
+    val written = writeRowset(td1, toWrite, rowsetId, v)
     // the write validated and landed: NOW the auto-minted partitions become
     // catalog state — before publish, so the prune rules know the new
     // partitions by the time any reader can see the new rowset
@@ -1934,7 +1937,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val m = manifest(db, table)
     val lo = m.visibleRowsets.map(_.version.start).minOption.getOrElse(0L)
     // cast the literal (not the column) so the equality pushes down to the
-    // parquet scan and hits the bloom filter / row-group stats
+    // parquet scan and skips by row-group and page min/max on the sorted key
     val keyType = td.schema.columns.find(_.name == keyCol).get.dataType
     // single capture for data + proof (see scanPartitions' race note)
     val covering = m.captureConsistentVersions(lo, m.maxVersion)
@@ -2137,27 +2140,33 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
   }
 
   /** The manifest entry of a freshly written rowset dir, before it
-    * publishes — shared by every data-writing path (ingest, compact,
-    * compactCumulative, rebucket). One footer pass ([[StatsHarvest]]) gives
-    * the row count, zone map, per-partition rows and read schema; the
-    * declared sidecars then read the dir through ONE reader built with that
-    * schema, so describing a rowset runs no schema-inference job. Callers
-    * set `createdMs` (after any markStale, so time travel never sees a
-    * compaction's inputs and output at once) and the write-specific flags.
+    * publishes — shared by every data write ([[writeRowset]]). One footer
+    * pass ([[StatsHarvest]]) gives the row count, zone map, column bytes,
+    * per-partition rows and read schema, with no Spark job; then at most
+    * one job builds every declared sidecar ([[withSidecars]]). A zero-row
+    * write (an empty load, an all-tombstoned compaction) harvests
+    * (0, empty) and still publishes: in Doris an empty load is a version
+    * too, so the graph stays hole-free, and the read path skips file-less
+    * rowsets. A sidecar failure never fails the write: the rowset
+    * publishes with no sidecars (nothing prunes or serves from them).
+    * Callers set `createdMs` (after any markStale, so time travel never
+    * sees a compaction's inputs and output at once) and the write-specific
+    * flags.
     */
-  private def describeWritten(db: String, table: String, rowsetId: Long,
-      version: Version, relDir: String): RowsetMeta = {
-    val outDir = tableRoot(db, table).resolve(relDir)
+  private def describeWritten(td: TableDef, rowsetId: Long, version: Version,
+      relDir: String): RowsetMeta = {
+    val outDir = tableRoot(td.db, td.name).resolve(relDir)
     val h = harvestStats(outDir)
-    lazy val reader = scala.util.Try(rowsetReader(outDir.toString, h.schema))
-      .toOption
-    RowsetMeta(rowsetId, version, relDir, h.rows, stats = h.stats,
-      partRows = h.partRows, schema = h.schema,
-      bloomCols = buildBlooms(db, table, outDir, h.rows, reader),
-      ngramCols = buildNgramBlooms(db, table, outDir, h.rows, reader),
-      sums = harvestSums(db, table, outDir, h.rows, reader),
-      ndvCols = buildNdvSketches(db, table, outDir, h.rows, reader),
-      dictCols = buildDictStats(db, table, outDir, h.rows, reader))
+    val meta = RowsetMeta(rowsetId, version, relDir, h.rows, stats = h.stats,
+      partRows = h.partRows, schema = h.schema)
+    if (h.rows == 0) meta
+    else
+      try withSidecars(td, outDir, h, meta)
+      catch {
+        case scala.util.control.NonFatal(e) =>
+          System.err.println(s"[graft] WARN sidecar build failed for $outDir: $e")
+          meta
+      }
   }
 
   /** Footer pass over a freshly written rowset dir. Never fails a load over
@@ -2172,174 +2181,89 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
         System.err.println(s"[graft] WARN stats harvest failed for $outDir: $e")
         val n = try rowsetReader(outDir.toString, None).count()
           catch { case _: org.apache.spark.sql.AnalysisException => 0L }
-        Harvest(n, Map.empty, Map.empty, None)
+        Harvest(n, Map.empty, Map.empty, Map.empty, None)
     }
 
-  /** Build one [[RowsetBloom]] sidecar per declared bloom column for a
-    * freshly written rowset dir (pre-publish, so the sidecars land
-    * atomically with the rowset). Cost: one delta-sized Spark job per bloom
-    * column over THIS load only. Returns the columns whose sidecars landed;
-    * never fails a load — a bloom error degrades to no-bloom (no pruning).
+  /** Build every declared sidecar of a freshly written rowset dir from ONE
+    * aggregate over it, one buffer per (family, column), and land them
+    * before publish, so they are atomic with the rowset:
+    *  - bloom ([[RowsetBloom]]): xxhash64 (seed 42) of every non-null value,
+    *    ~10 bits per row. An all-null column gets the empty bitset, which
+    *    correctly excludes every probe.
+    *  - ngram (Doris NGRAM_BF at the rowset tier): xxhash64 of every
+    *    character trigram, sliced by Spark's own `substring` — the probe
+    *    slices needles the same way, so a false negative is impossible.
+    *    Values under 3 chars add nothing: they cannot contain a needle the
+    *    index answers. The bitset is sized from the column's uncompressed
+    *    bytes in the footers, which bound its distinct trigrams from above
+    *    (every distinct value sits in a dictionary or plain page, and a
+    *    char is at least one byte); sizing moves only the false-positive
+    *    rate.
+    *  - sum: the exact decimal(38,0) sum, "0" for an all-null column
+    *    (null-ness is the zone map's nullCount); [[sumFold]] decides
+    *    Long-range fit.
+    *  - ndv ([[NdvSketch]]): Spark's `hll_sketch_agg` at lgK=12 (~1.6%
+    *    relative error). An all-null column writes the empty sketch —
+    *    absence means un-harvested, never zero.
+    *  - dict ([[graft.manifest.DictStats]]): the exact value histogram in
+    *    Spark's string form (injective for the admitted types), with the
+    *    physical type pinned; past MaxDistinct distinct values the column
+    *    writes none (the serve refuses rather than truncate).
+    * The scan is one partition, so the aggregate needs no exchange, which
+    * adaptive execution would run as a job of its own.
     */
-  private def buildBlooms(db: String, table: String, outDir: Path,
-      numRows: Long, reader: => Option[DataFrame]): Seq[String] = {
-    val td = catalog.getTable(db, table).getOrElse(return Nil)
-    if (td.bloomColumns.isEmpty || numRows == 0) return Nil
-    import spark.implicits._
-    val df = reader.getOrElse(return Nil)
-    td.bloomColumns.filter(df.columns.contains).flatMap { c =>
-      try {
-        val dt = df.schema(c).dataType
-        val nLongs = RowsetBloom.sizeLongs(numRows)
-        // xxhash64 (seed 42) per non-null value, OR-folded into per-partition
-        // bitsets. treeAggregate so a 1000-executor load merges bitsets
-        // executor-side instead of hauling every partition's array to the
-        // driver; the zero value also makes an all-null column legal (an
-        // empty bloom correctly excludes every probe — no non-null value
-        // can equal anything).
-        val or = (x: Array[Long], y: Array[Long]) => {
-          var i = 0; while (i < x.length) { x(i) |= y(i); i += 1 }; x
-        }
-        val bits = df.filter(col(c).isNotNull)
-          .select(xxhash64(col(c))).as[Long]
-          .mapPartitions { it =>
-            val arr = new Array[Long](nLongs)
-            it.foreach(h => RowsetBloom.add(arr, h))
-            Iterator.single(arr)
-          }.rdd.treeAggregate(new Array[Long](nLongs))(or, or, depth = 2)
-        RowsetBloom.write(outDir, c,
-          new RowsetBloom(RowsetBloom.K, bits, dt.catalogString))
-        Some(c)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] WARN bloom build failed for $outDir/$c: $e")
-          None
-      }
-    }
-  }
-
-  /** Build one character-trigram [[RowsetBloom]] sidecar per declared
-    * ngram_bf column (Doris's NGRAM_BF index at the rowset tier) for a
-    * freshly written rowset dir. Every 3-gram of every non-null value
-    * hashes into the bitset — substring predicates then prune rowsets
-    * where ANY needle gram is absent ([[graft.plans.ScanPruneRewrite]]).
-    * Two delta-sized passes per column over THIS load only: an exact gram
-    * count (so the bitset sizes to real insert volume), then the
-    * hash-and-fold. Gram slicing is Spark's own character `substring`, and
-    * the probe slices needles with the SAME UTF8String character indexing +
-    * the SAME Catalyst XxHash64 — false negatives impossible. Values
-    * shorter than 3 chars contribute nothing, correctly: they cannot
-    * contain a ≥3-char needle, so even an EMPTY bitset excludes exactly.
-    * Never fails a load — an error degrades to no-index (no pruning).
-    */
-  private def buildNgramBlooms(db: String, table: String, outDir: Path,
-      numRows: Long, reader: => Option[DataFrame]): Seq[String] = {
-    val td = catalog.getTable(db, table).getOrElse(return Nil)
-    if (td.ngramBloomColumns.isEmpty || numRows == 0) return Nil
-    import spark.implicits._
-    val df = reader.getOrElse(return Nil)
-    val n = RowsetBloom.NgramSize
-    td.ngramBloomColumns.filter(df.columns.contains).flatMap { c =>
-      try {
-        val grams = df
-          .filter(col(c).isNotNull && length(col(c)) >= n)
-          .select(explode(expr(
-            s"transform(sequence(1, char_length(`$c`) - ${n - 1}), " +
-              s"i -> substring(`$c`, i, $n))")).as("g"))
-        val nGrams = grams.count()
-        val nLongs = RowsetBloom.sizeLongs(nGrams)
-        val or = (x: Array[Long], y: Array[Long]) => {
-          var i = 0; while (i < x.length) { x(i) |= y(i); i += 1 }; x
-        }
-        val bits = grams.select(xxhash64(col("g"))).as[Long]
-          .mapPartitions { it =>
-            val arr = new Array[Long](nLongs)
-            it.foreach(h => RowsetBloom.add(arr, h))
-            Iterator.single(arr)
-          }.rdd.treeAggregate(new Array[Long](nLongs))(or, or, depth = 2)
-        RowsetBloom.write(outDir, c,
-          new RowsetBloom(RowsetBloom.K, bits, s"ngram$n:string"),
-          RowsetBloom.KindNgram)
-        Some(c)
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] WARN ngram bloom build failed for $outDir/$c: $e")
-          None
-      }
-    }
-  }
-
-  /** Build one NDV-sketch sidecar ([[NdvSketch]]) per declared ndv column
-    * for a freshly written rowset dir: ONE delta-sized Spark aggregate
-    * (Spark's own `hll_sketch_agg`, lgK=12 ⇒ ~1.6% relative error) over
-    * THIS load's rows, all columns in a single job. An all-null column
-    * writes the EMPTY sketch (its true contribution) rather than nothing —
-    * absence means un-harvested, never zero. Never fails a load.
-    */
-  private def buildNdvSketches(db: String, table: String, outDir: Path,
-      numRows: Long, reader: => Option[DataFrame]): Seq[String] = {
-    val td = catalog.getTable(db, table).getOrElse(return Nil)
-    if (td.ndvStatsColumns.isEmpty || numRows == 0) return Nil
-    val df = reader.getOrElse(return Nil)
-    val cols = td.ndvStatsColumns.filter(df.columns.contains)
-    if (cols.isEmpty) return Nil
-    try {
-      val aggs = cols.map(c => expr(s"hll_sketch_agg(`$c`, 12)").as(c))
-      val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      cols.zipWithIndex.map { case (c, i) =>
-        val bytes =
-          if (row.isNullAt(i))
-            new org.apache.datasketches.hll.HllSketch(12).toCompactByteArray
-          else row.getAs[Array[Byte]](i)
-        NdvSketch.write(outDir, c, bytes)
-        c
-      }
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft] WARN ndv sketch build failed for $outDir: $e")
-        Nil
-    }
-  }
-
-  /** Build one [[graft.manifest.DictStats]] VALUE HISTOGRAM sidecar per
-    * declared dict column for a freshly written rowset dir — one
-    * delta-sized exact groupBy-count over THIS load per column. A column
-    * exceeding [[graft.manifest.DictStats.MaxDistinct]] distinct values in
-    * this rowset writes NO sidecar (absent = unknown; the serve refuses
-    * rather than truncating a histogram). Values store in Spark's string
-    * form — injective for the admitted types — with the physical type
-    * pinned so a later widen can never mis-reconstruct a group. Never
-    * fails a load.
-    */
-  private def buildDictStats(db: String, table: String, outDir: Path,
-      numRows: Long, reader: => Option[DataFrame]): Seq[String] = {
+  private def withSidecars(td: TableDef, outDir: Path, h: Harvest,
+      meta: RowsetMeta): RowsetMeta = {
     import graft.manifest.DictStats
-    val td = catalog.getTable(db, table).getOrElse(return Nil)
-    if (td.dictStatsColumns.isEmpty || numRows == 0) return Nil
-    val df = reader.getOrElse(return Nil)
-    td.dictStatsColumns.filter(df.columns.contains).flatMap { c =>
-      try {
-        val dt = df.schema(c).dataType
-        // cap+2 fetch detects overflow without a separate distinct count
-        // (+1 for the possible null group, +1 as the overflow sentinel)
-        val grouped = df.groupBy(col(c).cast("string").as("v"))
-          .agg(count(lit(1)).as("n"))
-          .limit(DictStats.MaxDistinct + 2).collect()
-        val nulls = grouped.find(_.isNullAt(0)).map(_.getLong(1)).getOrElse(0L)
-        val values = grouped.filterNot(_.isNullAt(0))
-          .map(r => r.getString(0) -> r.getLong(1)).toMap
-        if (values.size > DictStats.MaxDistinct) None
-        else {
-          DictStats.write(outDir, c,
-            DictStats.Dict(dt.catalogString, nulls, values))
-          Some(c)
-        }
-      } catch {
-        case scala.util.control.NonFatal(e) =>
-          System.err.println(s"[graft] WARN dict stats build failed for $outDir/$c: $e")
-          None
-      }
+    val df = rowsetReader(outDir.toString, h.schema)
+    def declared(cs: Seq[String]) = cs.filter(df.columns.contains)
+    val blooms = declared(td.bloomColumns)
+    val ngrams = declared(td.ngramBloomColumns)
+    val sums = declared(td.sumStatsColumns)
+    val ndvs = declared(td.ndvStatsColumns)
+    val dicts = declared(td.dictStatsColumns)
+    val n = RowsetBloom.NgramSize
+    def bits(nLongs: Int, hashes: Column) =
+      udaf(new BloomBits(nLongs), ExpressionEncoder[Array[Long]]())(hashes)
+    val aggs =
+      blooms.map(c => bits(RowsetBloom.sizeLongs(h.rows),
+        when(col(c).isNotNull, array(xxhash64(col(c)))))) ++
+      ngrams.map(c => bits(RowsetBloom.sizeLongs(h.bytes.getOrElse(c, h.rows)),
+        when(char_length(col(c)) >= n,
+          transform(sequence(lit(1), char_length(col(c)) - (n - 1)),
+            i => xxhash64(substring(col(c), i, lit(n))))))) ++
+      sums.map(c => sum(col(c).cast(org.apache.spark.sql.types.DecimalType(38, 0)))) ++
+      ndvs.map(c => hll_sketch_agg(col(c), 12)) ++
+      dicts.map(c => udaf(new CappedHistogram(DictStats.MaxDistinct),
+        org.apache.spark.sql.Encoders.STRING)(col(c).cast("string")))
+    if (aggs.isEmpty) return meta
+    // the cells come back in the order of the families above
+    val cells = df.coalesce(1).agg(aggs.head, aggs.tail: _*).collect()(0)
+      .toSeq.iterator
+    def bitset(cell: Any) = cell.asInstanceOf[scala.collection.Seq[Long]].toArray
+    blooms.foreach(c => RowsetBloom.write(outDir, c, new RowsetBloom(RowsetBloom.K,
+      bitset(cells.next()), df.schema(c).dataType.catalogString)))
+    ngrams.foreach(c => RowsetBloom.write(outDir, c, new RowsetBloom(RowsetBloom.K,
+      bitset(cells.next()), s"ngram$n:string"), RowsetBloom.KindNgram))
+    val sumOf = sums.map(c => c -> (cells.next() match {
+      case null => "0"
+      case d: java.math.BigDecimal => d.toBigInteger.toString
+    })).toMap
+    ndvs.foreach(c => NdvSketch.write(outDir, c, cells.next() match {
+      case null => new org.apache.datasketches.hll.HllSketch(12).toCompactByteArray
+      case b: Array[Byte] => b
+    }))
+    val dictsWritten = dicts.filter { c =>
+      val hist = cells.next().asInstanceOf[org.apache.spark.sql.Row]
+      val within = !hist.getAs[Boolean]("overflow")
+      if (within)
+        DictStats.write(outDir, c, DictStats.Dict(df.schema(c).dataType.catalogString,
+          hist.getAs[Long]("nulls"),
+          hist.getAs[scala.collection.Map[String, Long]]("counts").toMap))
+      within
     }
+    meta.copy(bloomCols = blooms, ngramCols = ngrams, sums = sumOf, ndvCols = ndvs,
+      dictCols = dictsWritten)
   }
 
   /** Exact GROUP BY counts of a declared dict column over the current
@@ -2434,44 +2358,13 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     NdvSketch.unionEstimate(sketches)
   }
 
-  /** Exact per-column SUMs of a freshly written rowset dir, for the table's
-    * declared [[graft.catalog.TableDef.sumStatsColumns]] — ONE delta-sized
-    * Spark aggregate over THIS load only (all columns in a single job).
-    * Sums accumulate in decimal(38,0) so the stored value is exact at any
-    * magnitude; the serve side ([[sumFold]]) decides Long-range fit. An
-    * all-null column stores "0" — its additive contribution — with null-ness
-    * left to the zone map's nullCount. Never fails a load: an error
-    * degrades to no-sums (the serve refuses, the scan answers).
-    */
-  private def harvestSums(db: String, table: String, outDir: Path,
-      numRows: Long, reader: => Option[DataFrame]): Map[String, String] = {
-    val td = catalog.getTable(db, table).getOrElse(return Map.empty)
-    if (td.sumStatsColumns.isEmpty || numRows == 0) return Map.empty
-    val df = reader.getOrElse(return Map.empty)
-    val cols = td.sumStatsColumns.filter(df.columns.contains)
-    if (cols.isEmpty) return Map.empty
-    try {
-      val aggs = cols.map(c => sum(col(c)
-        .cast(org.apache.spark.sql.types.DecimalType(38, 0))).as(c))
-      val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-      cols.zipWithIndex.map { case (c, i) =>
-        c -> (if (row.isNullAt(i)) "0"
-          else row.getDecimal(i).toBigInteger.toString)
-      }.toMap
-    } catch {
-      case scala.util.control.NonFatal(e) =>
-        System.err.println(s"[graft] WARN sum harvest failed for $outDir: $e")
-        Map.empty
-    }
-  }
-
   /** Metadata SUM serve data for one declared column over the current
     * covering set: `Some((dataType, sum or None-if-all-null, nonNullCount))`
     * when provably exact, else None. The additive sibling of [[zoneFold]],
     * powering SUM/AVG in [[graft.plans.StatsAggRewrite]].
     *
     * Exactness argument: per-rowset sums are exact decimals
-    * ([[harvestSums]]); their fold is exact big-integer addition; and when
+    * ([[withSidecars]]); their fold is exact big-integer addition; and when
     * the total fits in a signed 64-bit Long it EQUALS what Spark's
     * `sum(integral)` computes over the scan — under LEGACY eval Long
     * addition is associative modulo 2^64 (any accumulation order lands on
@@ -3114,29 +3007,12 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     require(inputs.exists(!_.isDeleteMarker), s"nothing to compact in $db.$table")
     val lo = inputs.map(_.version.start).min
     val hi = inputs.map(_.version.end).max
-    val merged = snapshot(db, table, lo, hi)
-    val rowsetId = m.nextRowsetId
-    val relDir = s"r$rowsetId"
-    val outDir = tableRoot(db, table).resolve(relDir)
-
-    var out = merged
-      .withColumn(PartCol, partitionNameCol(td))
-      .withColumn(BucketCol, bucketIdxCol(td))
-    if (td.schema.keysType != KeysType.Duplicate)
-      out = out.withColumn(SeqCol, monotonically_increasing_id())
     // merge-on-read already dropped tombstoned keys; the survivors are plain
-    // upserts — compaction is where deletes become physical
-    if (td.schema.keysType == KeysType.Unique)
-      out = out.withColumn(OpCol, lit(0))
-    out.repartition(col(PartCol), col(BucketCol))
-      .sortWithinPartitions(Seq(PartCol, BucketCol).map(col) ++ clusterCols(td): _*)
-      .write.mode("errorifexists").partitionBy(PartCol, BucketCol)
-      .parquet(outDir.toString)
-
-    // all-rows-tombstoned compactions legitimately produce zero rows;
-    // the footer harvest yields (0, empty) for the file-less dir — publish
-    // the empty replacement (version continuity) instead of dying
-    val written = describeWritten(db, table, rowsetId, Version(lo, hi), relDir)
+    // upserts (op 0) — compaction is where deletes become physical. An
+    // all-tombstoned table compacts to an empty replacement rowset, which
+    // still publishes (version continuity).
+    val merged = snapshot(db, table, lo, hi)
+    val written = writeRowset(td, withLayout(td, merged), m.nextRowsetId, Version(lo, hi))
     m.markStaleAll(inputs.map(_.rowsetId))
     val meta = written.copy(createdMs = System.currentTimeMillis(),
       // the merge grouped by key: merge-model outputs hold one record/key
@@ -3198,20 +3074,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
       // the layout floor persists with the catalog, so a RESTARTED engine
       // keeps the prune rule's old-rowsets-never-pruned guard
       bucketLayoutFloor = rowsetId)
-    val relDir = s"r$rowsetId"
-    val outDir = tableRoot(db, table).resolve(relDir)
-    var out = merged
-      .withColumn(PartCol, partitionNameCol(newTd))
-      .withColumn(BucketCol, bucketIdxCol(newTd))
-    if (td.schema.keysType != KeysType.Duplicate)
-      out = out.withColumn(SeqCol, monotonically_increasing_id())
-    if (td.schema.keysType == KeysType.Unique)
-      out = out.withColumn(OpCol, lit(0))
-    out.repartition(col(PartCol), col(BucketCol))
-      .sortWithinPartitions(Seq(PartCol, BucketCol).map(col) ++ clusterCols(newTd): _*)
-      .write.mode("errorifexists").partitionBy(PartCol, BucketCol)
-      .parquet(outDir.toString)
-    val written = describeWritten(db, table, rowsetId, Version(lo, hi), relDir)
+    val written = writeRowset(newTd, withLayout(newTd, merged), rowsetId, Version(lo, hi))
     // routing swap before the manifest swap (see scaladoc ordering argument)
     catalog.alterTable(newTd)
     m.markStaleAll(inputs.map(_.rowsetId))
@@ -3265,26 +3128,8 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
         raw.transform(projectDeclared(td))
       case _ => MergeView.compacting(td, raw, VersionCol, SeqCol)
     }
-
-    val rowsetId = m.nextRowsetId
-    val relDir = s"r$rowsetId"
-    val outDir = tableRoot(db, table).resolve(relDir)
-    var out = merged
-      .withColumn(PartCol, partitionNameCol(td))
-      .withColumn(BucketCol, bucketIdxCol(td))
-    if (td.schema.keysType != KeysType.Duplicate)
-      out = out.withColumn(SeqCol, monotonically_increasing_id())
-    if (td.schema.keysType == KeysType.Unique && !out.columns.contains(OpCol))
-      out = out.withColumn(OpCol, lit(0))
-    out.repartition(col(PartCol), col(BucketCol))
-      .sortWithinPartitions(Seq(PartCol, BucketCol).map(col) ++ clusterCols(td): _*)
-      .write.mode("errorifexists").partitionBy(PartCol, BucketCol)
-      .parquet(outDir.toString)
-
-    // all-rows-tombstoned compactions legitimately produce zero rows;
-    // the footer harvest yields (0, empty) for the file-less dir — publish
-    // the empty replacement (version continuity) instead of dying
-    val written = describeWritten(db, table, rowsetId, Version(lo, hi), relDir)
+    // the merge keeps each key's winning op, which the layout carries over
+    val written = writeRowset(td, withLayout(td, merged), m.nextRowsetId, Version(lo, hi))
     m.markStaleAll(suffix.map(_.rowsetId))
     val meta = written.copy(createdMs = System.currentTimeMillis(),
       // the merge grouped by key: merge-model outputs hold one record/key
@@ -3684,4 +3529,53 @@ object MergeView {
         g.select(outCols(g): _*)
     }
   }
+}
+
+/** One bloom or n-gram sidecar buffer of the sidecar aggregate: ORs each
+  * row's xxhash64 values into a [[RowsetBloom]] bitset of `nLongs` longs.
+  * A null row adds nothing.
+  */
+private final class BloomBits(nLongs: Int)
+    extends Aggregator[Array[Long], Array[Long], Array[Long]] {
+  def zero: Array[Long] = new Array[Long](nLongs)
+  def reduce(bits: Array[Long], hashes: Array[Long]): Array[Long] = {
+    if (hashes != null) hashes.foreach(RowsetBloom.add(bits, _))
+    bits
+  }
+  def merge(x: Array[Long], y: Array[Long]): Array[Long] = {
+    var i = 0; while (i < x.length) { x(i) |= y(i); i += 1 }; x
+  }
+  def finish(bits: Array[Long]): Array[Long] = bits
+  def bufferEncoder: Encoder[Array[Long]] = ExpressionEncoder()
+  def outputEncoder: Encoder[Array[Long]] = ExpressionEncoder()
+}
+
+/** A column's exact value histogram and null count; `overflow` once it
+  * has held more distinct non-null values than its cap (the counts are
+  * then dropped).
+  */
+private[engine] final case class Histogram(nulls: Long, counts: Map[String, Long],
+    overflow: Boolean)
+
+/** The dict sidecar buffer of the sidecar aggregate: a [[Histogram]]
+  * capped at `cap` distinct non-null values.
+  */
+private final class CappedHistogram(cap: Int)
+    extends Aggregator[String, Histogram, Histogram] {
+  def zero: Histogram = Histogram(0L, Map.empty, overflow = false)
+  def reduce(h: Histogram, v: String): Histogram =
+    if (v == null) h.copy(nulls = h.nulls + 1)
+    else if (h.overflow) h
+    else capped(h.copy(counts = h.counts.updated(v, h.counts.getOrElse(v, 0L) + 1)))
+  def merge(x: Histogram, y: Histogram): Histogram =
+    capped(Histogram(x.nulls + y.nulls,
+      y.counts.foldLeft(x.counts) { case (acc, (v, n)) =>
+        acc.updated(v, acc.getOrElse(v, 0L) + n) },
+      x.overflow || y.overflow))
+  private def capped(h: Histogram): Histogram =
+    if (h.overflow || h.counts.size > cap) Histogram(h.nulls, Map.empty, overflow = true)
+    else h
+  def finish(h: Histogram): Histogram = h
+  def bufferEncoder: Encoder[Histogram] = ExpressionEncoder()
+  def outputEncoder: Encoder[Histogram] = ExpressionEncoder()
 }

@@ -11,8 +11,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
 /** `simhash60(words)` — the 60-bit SimHash of a word multiset, computed in
   * ONE per-row pass (optimization r13).
   *
-  * Bit-identical to the dataset-scale explode shape it replaces
-  * (explode(words) → 60 conditional long sums per doc → sign-bit assembly):
+  * On arrays with no null element it is bit-identical to the
+  * dataset-scale explode shape it replaces (explode(words) → 60
+  * conditional long sums per doc → sign-bit assembly):
   * per word occurrence each bit position accumulates +1 when the word's
   * [[Md5Prefix60]] hash has that bit set, −1 otherwise, and the signature
   * takes the sign of each accumulated counter — integer addition commutes,
@@ -26,9 +27,12 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType}
   * any real document (the explode form's long sums had the same practical
   * bound through the collect-side row count).
   *
-  * Null elements (legal in array<string> with containsNull=true) are
-  * skipped — the explode shape dropped them the same way because
-  * md5(null) is null and the conditional sum ignored the row.
+  * Nulls: this expression defines the semantics. A null element (legal
+  * in array<string> with containsNull=true) is skipped, and a null array
+  * gives a null signature, keeping the document's row. The explode shape
+  * differed on both: a null word's hash was null, so its bit test fell to
+  * the −1 branch at every bit, and exploding a null array dropped the
+  * row. `PipelineSpec` pins both cases.
   */
 case class Simhash60(child: Expression) extends UnaryExpression {
 

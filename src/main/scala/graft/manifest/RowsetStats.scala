@@ -51,9 +51,12 @@ object ColStats {
   }
 }
 
-/** What one footer pass over a rowset dir yields ([[StatsHarvest.harvest]]). */
+/** What one footer pass over a rowset dir yields ([[StatsHarvest.harvest]]).
+  * `bytes` holds each top-level column's uncompressed size over every
+  * file.
+  */
 final case class Harvest(rows: Long, stats: Map[String, ColStats],
-    partRows: Map[String, Long], schema: Option[StructType])
+    bytes: Map[String, Long], partRows: Map[String, Long], schema: Option[StructType])
 
 /** The schema a reader of a rowset dir sees: the data columns the files
   * were written with, then the two hive layout columns every rowset write
@@ -109,8 +112,8 @@ object RowsetSchema {
   */
 object StatsHarvest {
 
-  /** Total rows, per-column zone map, per-PARTITION row counts and read
-    * schema of every parquet file under `dir`. A column missing usable
+  /** Total rows, per-column zone map and uncompressed bytes, per-PARTITION
+    * row counts and read schema of every parquet file under `dir`. A column missing usable
     * stats in ANY file is dropped from the map (unknown, not empty).
     * Unsupported physical/logical types (decimal, INT96 timestamps,
     * unsigned ints, nested) are skipped the same way. Partition attribution
@@ -133,6 +136,7 @@ object StatsHarvest {
     var rows = 0L
     val acc = scala.collection.mutable.Map.empty[String, ColStats]
     val bad = scala.collection.mutable.Set.empty[String]
+    val bytes = scala.collection.mutable.Map.empty[String, Long]
     val partAcc = scala.collection.mutable.Map.empty[String, Long]
     val schemas = scala.collection.mutable.Set.empty[Option[String]]
     files.foreach { f =>
@@ -153,6 +157,7 @@ object StatsHarvest {
             val path = chunk.getPath.toArray
             if (path.length == 1) {
               val name = path(0)
+              bytes(name) = bytes.getOrElse(name, 0L) + chunk.getTotalUncompressedSize
               if (!bad.contains(name)) {
                 fileColStats(schema, name, chunk.getStatistics) match {
                   case Some(cs) =>
@@ -173,7 +178,7 @@ object StatsHarvest {
         }
       case _ => None
     }
-    Harvest(rows, acc.toMap, partAcc.toMap, sparkSchema)
+    Harvest(rows, acc.toMap, bytes.toMap, partAcc.toMap, sparkSchema)
   }
 
   /** The footer key Spark's parquet writer stores the written schema under

@@ -270,7 +270,8 @@ object Dedup {
     * over the word array ([[graft.functions.Simhash60]]) — a pure
     * projection, NO explode, NO 60-accumulator aggregation, NO doc_id
     * shuffle (documents already arrive one row per doc). Bit-identical to
-    * both prior shapes: the expression folds the same +1/−1 per-bit
+    * both prior shapes on null-free word arrays (nulls: see
+    * [[graft.functions.Simhash60]]): the expression folds the same +1/−1 per-bit
     * contributions of the same [[wordHash60]] values, and integer addition
     * commutes (`PipelineSpec` pins equality against the [[simhashCol]]
     * left fold). The r12 explode form paid 18+ exec core-sec at sf0.1 for

@@ -58,7 +58,7 @@ object TextIndex {
     * to find the rows to tombstone — linear in index size per batch, the
     * cost trade [[refold]]'s scaladoc used to document. One corpus-rows
     * narrow table (keyed, sorted and bucketed by doc_id, so the lookup
-    * rides the engine's key-sorted files + bloom filters) turns that scan
+    * rides the engine's key-sorted files and their min/max stats) turns that scan
     * into a point-ish lookup sized by the batch.
     */
   val FwdTable = "fwd_words"

@@ -1037,8 +1037,8 @@ object EngineQueries {
     * a plain filter over the base scan — no engine lookup API. The
     * [[graft.plans.ScanPruneRewrite]] optimizer rule routes the literal
     * with the write path's FNV-1a and injects a `__graft_bucket` filter, so
-    * the scan opens 1/numBuckets of the directories (then the parquet bloom
-    * filter prunes within the bucket). `BucketPruneSpec` asserts the plan
+    * the scan opens 1/numBuckets of the directories (then row-group and
+    * page min/max on the key-sorted files skip within the bucket). `BucketPruneSpec` asserts the plan
     * really prunes; the oracle catches a wrong-bucket routing (0 rows).
     */
   def bucketPrunePoint(spark: SparkSession, dir: String): DataFrame = {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for all suites (JVM-wide; suites run in one fork). */
@@ -14,5 +15,35 @@ object SparkTestSession {
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")
     s
+  }
+
+  /** Jobs `body` starts on this thread, counted by a listener. A barrier
+    * job after `body` proves the listener has seen every earlier job.
+    */
+  def jobsDuring[T](spark: SparkSession)(body: => T): (T, Int) = {
+    import scala.jdk.CollectionConverters._
+    val sc = spark.sparkContext
+    val group = s"jobs-during-${java.util.UUID.randomUUID()}"
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val out = body
+      sc.setJobGroup(group + "-barrier", "barrier")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!seen.contains(group + "-barrier") && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      assert(seen.contains(group + "-barrier"), "listener never saw the barrier job")
+      (out, seen.asScala.count(_ == group))
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
   }
 }

@@ -100,6 +100,20 @@ class DictStatsSpec extends AnyFunSuite {
     load(eng, 0 until (DictStats.MaxDistinct + 10), 1, i => s"u$i")
     assert(eng.manifest("db", "t").visibleRowsets.head.dictCols.isEmpty)
     assert(eng.groupCounts("db", "t", "cls").isEmpty)
+    // exactly MaxDistinct distinct values plus nulls: the sidecar lands and
+    // the fold serves it
+    val at = mkEngine()
+    load(at, 0 until (DictStats.MaxDistinct + 20), 1,
+      i => if (i < DictStats.MaxDistinct) s"u$i" else null)
+    assert(at.manifest("db", "t").visibleRowsets.head.dictCols == Seq("cls"))
+    val served = at.groupCounts("db", "t", "cls").get._2.toMap
+    assert(served.size == DictStats.MaxDistinct + 1)
+    assert(served(None) == 20L && served.values.sum == DictStats.MaxDistinct + 20L)
+    // one distinct value past the cap: none
+    val past = mkEngine()
+    load(past, 0 until (DictStats.MaxDistinct + 1), 1, i => s"u$i")
+    assert(past.manifest("db", "t").visibleRowsets.head.dictCols.isEmpty)
+    assert(past.groupCounts("db", "t", "cls").isEmpty)
   }
 
   test("delete markers and merge models refuse; compaction re-arms the serve") {

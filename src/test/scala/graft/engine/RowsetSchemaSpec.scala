@@ -2,7 +2,6 @@ package graft.engine
 
 import java.nio.file.{Files, Path, Paths}
 import org.scalatest.funsuite.AnyFunSuite
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -15,7 +14,8 @@ import graft.model._
   * a rowset dir never runs a parquet schema-inference job:
   *  - on every write path, the recorded schema is exactly what inference
   *    reads from the dir (with `__graft_part` typed string and
-  *    `__graft_bucket` int);
+  *    `__graft_bucket` int), and every file is LZ4_RAW with no parquet
+  *    bloom filter;
   *  - a fresh engine builds `scan`, `snapshot`, `snapshotAsOf`,
   *    `scanPartitions` and `lookupByKey` frames without starting a job;
   *  - manifests written before schemas were recorded read the same answers
@@ -45,15 +45,33 @@ class RowsetSchemaSpec extends AnyFunSuite {
     else eng.tableRoot(db, t).resolve(r.relDir)
 
   /** Every data rowset of the table (stale ones too) records the schema
-    * inference reads from its dir; returns how many were checked.
+    * inference reads from its dir, and every column chunk of its files is
+    * LZ4_RAW with no parquet bloom filter; returns how many were checked.
     */
   private def assertRecorded(eng: OlapEngine, db: String, t: String): Int = {
+    import org.apache.parquet.hadoop.ParquetFileReader
+    import org.apache.parquet.hadoop.metadata.CompressionCodecName
+    import org.apache.parquet.hadoop.util.HadoopInputFile
     val data = eng.manifest(db, t).allRowsets.filter(r => !r.isDeleteMarker && r.numRows > 0)
     data.foreach { r =>
-      val inferred = RowsetSchema.pinLayout(
-        spark.read.parquet(dirOf(eng, db, t, r).toString).schema)
+      val dir = dirOf(eng, db, t, r)
+      val inferred = RowsetSchema.pinLayout(spark.read.parquet(dir.toString).schema)
       assert(r.schema.contains(inferred),
         s"$db.$t rowset ${r.rowsetId}: recorded ${r.schema} vs inferred $inferred")
+      val files = Files.walk(dir).iterator().asScala
+        .filter(_.toString.endsWith(".parquet")).toSeq
+      assert(files.nonEmpty)
+      files.foreach { f =>
+        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+          new org.apache.hadoop.fs.Path(f.toUri), spark.sparkContext.hadoopConfiguration))
+        try reader.getFooter.getBlocks.asScala.flatMap(_.getColumns.asScala).foreach { c =>
+          assert(c.getCodec == CompressionCodecName.LZ4_RAW,
+            s"$db.$t rowset ${r.rowsetId} $f ${c.getPath}: ${c.getCodec}")
+          assert(c.getBloomFilterOffset < 0,
+            s"$db.$t rowset ${r.rowsetId} $f ${c.getPath} has a parquet bloom filter")
+        }
+        finally reader.close()
+      }
     }
     data.size
   }
@@ -86,35 +104,6 @@ class RowsetSchemaSpec extends AnyFunSuite {
     val doc = JsonMethods.parse(Files.readString(p))
     val stripped = (doc removeField { case (n, _) => n == "schemas" || n == "schema" })
     Files.writeString(p, JsonMethods.compact(JsonMethods.render(stripped)))
-  }
-
-  /** Jobs `body` starts on this thread, counted by a listener. A barrier
-    * job after `body` proves the listener has seen every earlier job.
-    */
-  private def jobsDuring[T](body: => T): (T, Int) = {
-    val sc = spark.sparkContext
-    val group = s"rowset-schema-${java.util.UUID.randomUUID()}"
-    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.jobGroup.id"))).getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobGroup(group, "construction")
-      val out = body
-      sc.setJobGroup(group + "-barrier", "barrier")
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!seen.contains(group + "-barrier") && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      assert(seen.contains(group + "-barrier"), "listener never saw the barrier job")
-      (out, seen.asScala.count(_ == group))
-    } finally {
-      sc.clearJobGroup()
-      sc.removeSparkListener(listener)
-    }
   }
 
   test("every write path records the schema parquet inference reads") {
@@ -236,7 +225,7 @@ class RowsetSchemaSpec extends AnyFunSuite {
     val m = eng.manifest("db", "y")
     assert(m.visibleRowsets.count(r => !r.isDeleteMarker && r.numRows > 0) >= 3)
     val lo = m.visibleRowsets.map(_.version.start).min
-    val (frames, jobs) = jobsDuring(Seq(
+    val (frames, jobs) = SparkTestSession.jobsDuring(spark)(Seq(
       eng.scan("db", "y"),
       eng.snapshot("db", "y", lo, lo + 1),
       eng.snapshotAsOf("db", "y", System.currentTimeMillis()),
@@ -244,7 +233,7 @@ class RowsetSchemaSpec extends AnyFunSuite {
       eng.lookupByKey("db", "y", "25")))
     assert(jobs == 0, s"building the reads started $jobs Spark job(s)")
     // the frames are real: running them starts jobs and gives the answers
-    val (_, runJobs) = jobsDuring(frames.foreach(_.collect()))
+    val (_, runJobs) = SparkTestSession.jobsDuring(spark)(frames.foreach(_.collect()))
     assert(runJobs > 0)
     assert(answers(eng) == expected)
   }

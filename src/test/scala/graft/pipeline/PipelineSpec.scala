@@ -73,6 +73,24 @@ class PipelineSpec extends AnyFunSuite {
     assert(viaFold == viaAgg)
   }
 
+  test("simhash60: a null word is skipped, a null text keeps its row with a null signature") {
+    import spark.implicits._
+    val words = Seq((0L, Seq("quick", "brown", "fox")),
+      (1L, Seq("quick", null, "brown", null, "fox")), (2L, null: Seq[String]))
+      .toDF("doc_id", "w")
+      .select(col("doc_id"), graft.functions.Simhash60.simhash60(col("w")).as("h"))
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(words(0L).isDefined && words(1L) == words(0L))
+    assert(words(2L).isEmpty)
+    val docs = Seq((0L, "quick brown fox"), (1L, null: String)).toDF("doc_id", "text")
+    val sig = Dedup.simhashSignatures(docs, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> Option(r.get(1))).toMap
+    assert(sig == Map(0L -> words(0L), 1L -> None))
+    // the row fold agrees on null text
+    assert(docs.orderBy("doc_id").select(Dedup.simhashCol(col("text"))).collect()
+      .map(r => Option(r.get(0))).toSeq == Seq(words(0L), None))
+  }
+
   test("shingles: k-grams over words; short texts degrade to one shingle") {
     import spark.implicits._
     val s = Seq((1L, "a b c d"), (2L, "a b")).toDF("doc_id", "text")

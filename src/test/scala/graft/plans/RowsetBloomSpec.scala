@@ -137,6 +137,99 @@ class RowsetBloomSpec extends AnyFunSuite {
     assert(df.collect().toSeq == Seq(Row(402L, "id-000402", 402)))
   }
 
+  test("one job beyond the write builds every declared sidecar, " +
+    "equal to the per-column queries") {
+    import spark.implicits._
+    import graft.manifest.{DictStats, NdvSketch, RowsetMeta}
+    val eng = new OlapEngine(spark, Files.createTempDirectory("graft-bl-one-"))
+    eng.createDatabase("db")
+    val wide = StructType(schema.fields :+ StructField("cls", StringType))
+    def table(name: String, sidecars: Boolean): Unit = {
+      def declare(cs: String*) = if (sidecars) cs.toSeq else Nil
+      eng.createTable(TableDef(
+        db = "db", name = name, schema = TableSchema(KeysType.Duplicate, Seq(
+          ColumnSpec.key("k", LongType), ColumnSpec.value("id", StringType),
+          ColumnSpec.value("n", IntegerType), ColumnSpec.value("cls", StringType))),
+        bucketColumn = Some("k"), numBuckets = 2,
+        bloomColumns = declare("id", "n"), ngramBloomColumns = declare("id"),
+        sumStatsColumns = declare("n"), ndvStatsColumns = declare("id", "n", "cls"),
+        dictStatsColumns = declare("cls")))
+    }
+    table("plain", sidecars = false)
+    table("full", sidecars = true)
+    // ids: some null, some shorter than a trigram; n: past the sketches'
+    // exact mode (thousands of distinct values); cls: low cardinality
+    def batch(lo: Long) = spark.createDataFrame((lo until lo + 5000L).map(i => Row(i,
+      if (i % 11 == 0) null else if (i % 13 == 0) s"${i % 10}" else f"id-$i%06d",
+      (i * 7).toInt, if (i % 17 == 0) null else s"c${i % 5}")).asJava, wide)
+    def jobs(body: String => Any): (Int, Int) =
+      (SparkTestSession.jobsDuring(spark)(body("plain"))._2,
+        SparkTestSession.jobsDuring(spark)(body("full"))._2)
+    val (plainIngest, fullIngest) = jobs(t => eng.ingest("db", t, batch(0L)))
+    assert(plainIngest > 0 && fullIngest == plainIngest + 1,
+      s"ingest: $plainIngest jobs with no sidecars, $fullIngest with five families")
+    eng.ingest("db", "plain", batch(3000L))
+    eng.ingest("db", "full", batch(3000L))
+    val loaded = eng.manifest("db", "full").visibleRowsets
+    val (plainCompact, fullCompact) = jobs(t => eng.compact("db", t))
+    assert(plainCompact > 0 && fullCompact == plainCompact + 1,
+      s"compact: $plainCompact jobs with no sidecars, $fullCompact with five families")
+    assert(eng.manifest("db", "plain").visibleRowsets.forall(r =>
+      r.bloomCols.isEmpty && r.ngramCols.isEmpty && r.sums.isEmpty &&
+        r.ndvCols.isEmpty && r.dictCols.isEmpty))
+
+    // reference: each sidecar recomputed by its own per-column query
+    def check(r: RowsetMeta): Unit = {
+      val dir = eng.tableRoot("db", "full").resolve(r.relDir).toString
+      val df = spark.read.parquet(dir)
+      assert(r.bloomCols == Seq("id", "n") && r.ngramCols == Seq("id") &&
+        r.ndvCols == Seq("id", "n", "cls") && r.dictCols == Seq("cls"))
+      Seq("id", "n").foreach { c =>
+        val want = new Array[Long](RowsetBloom.sizeLongs(r.numRows))
+        df.filter(col(c).isNotNull).select(xxhash64(col(c))).as[Long].collect()
+          .foreach(RowsetBloom.add(want, _))
+        val got = RowsetBloom.load(dir, c).get
+        assert(got.bits.toSeq == want.toSeq, s"rowset ${r.rowsetId} bloom $c")
+        assert(got.typeTag == df.schema(c).dataType.catalogString)
+      }
+      val wantSum = df.agg(sum(col("n").cast(DecimalType(38, 0)))).head().getDecimal(0)
+      assert(r.sums == Map("n" -> wantSum.toBigInteger.toString))
+      // NDV: the same sketch. Under the sketch's exact mode (cls) the
+      // estimates are equal. Past it (id, n) the registers are equal, so
+      // the composite estimate is; the served estimate may still differ,
+      // because a sketch built in one partition keeps the HIP estimator
+      // and a union of partition sketches falls back to the composite one.
+      Seq("id", "n", "cls").foreach { c =>
+        val want = org.apache.datasketches.hll.HllSketch.heapify(
+          df.agg(expr(s"hll_sketch_agg(`$c`, 12)")).head().getAs[Array[Byte]](0))
+        val got = org.apache.datasketches.hll.HllSketch.heapify(NdvSketch.load(dir, c).get)
+        if (c == "cls")
+          assert(got.getEstimate == want.getEstimate && math.round(got.getEstimate) == 5L)
+        else assert(math.abs(got.getCompositeEstimate / want.getCompositeEstimate - 1) < 1e-9,
+          s"rowset ${r.rowsetId} ndv $c: " +
+            s"${got.getCompositeEstimate} vs ${want.getCompositeEstimate}")
+      }
+      val grouped = df.groupBy(col("cls").cast("string").as("v"))
+        .agg(count(lit(1)).as("n")).collect()
+      assert(DictStats.load(dir, "cls").get == DictStats.Dict("string",
+        grouped.find(_.isNullAt(0)).map(_.getLong(1)).getOrElse(0L),
+        grouped.filterNot(_.isNullAt(0)).map(g => g.getString(0) -> g.getLong(1)).toMap))
+      // the n-gram sidecar admits every trigram of every value
+      val grams = RowsetBloom.load(dir, "id", RowsetBloom.KindNgram).get
+      assert(grams.typeTag == "ngram3:string")
+      val hashes = df.filter(length(col("id")) >= 3)
+        .select(explode(expr("transform(sequence(1, char_length(id) - 2), " +
+          "i -> substring(id, i, 3))")).as("g"))
+        .select(xxhash64(col("g"))).as[Long].collect()
+      assert(hashes.nonEmpty && hashes.forall(grams.mightContain),
+        s"rowset ${r.rowsetId}: an n-gram of a stored value is missing")
+    }
+    loaded.foreach(check)
+    val Seq(compacted) = eng.manifest("db", "full").visibleRowsets
+    check(compacted)
+    assert(compacted.numRows == 10000L)
+  }
+
   test("compaction rebuilds blooms for the merged rowset") {
     val eng = engine()
     eng.compact("db", "t")
