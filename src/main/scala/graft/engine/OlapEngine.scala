@@ -6,6 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Encoder, SparkSession}
 import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
 import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.catalog._
 import graft.manifest._
 import graft.model._
@@ -65,7 +66,8 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
   // `history_reads` workload exercises it). [[gc]] evicts the entries of the
   // rowsets it deletes, so the cache tracks the manifest; a pinned reader
   // racing GC still fails loudly at execution (ignoreMissingFiles=false is
-  // baked into the cached reader).
+  // baked into the cached reader). A driver point read lists a rowset's
+  // files through the same reader ([[pointFiles]]).
   private val rawReaders = TrieMap.empty[String, DataFrame]
 
   /** The dirs the reader cache holds (specs check it tracks the manifest). */
@@ -1686,10 +1688,12 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val root = tableRoot(db, table)
     if (data.isEmpty) {
       val td = catalog.getTable(db, table).get
-      // the layout columns a parquet read infers from the hive dirs, so
-      // bucket and partition filters resolve on an empty table too
-      val st = td.schema.toStructType.add(VersionCol, "long").add(SeqCol, "long")
-        .add(PartCol, "string").add(BucketCol, "int")
+      // typed as a rowset read types its columns (nullable, no column
+      // metadata), so an empty read has a non-empty read's schema; with the
+      // layout columns a parquet read infers from the hive dirs, so bucket
+      // and partition filters resolve on an empty table too
+      val st = StructType(td.schema.columns.map(c => StructField(c.name, c.dataType)))
+        .add(VersionCol, "long").add(SeqCol, "long").add(PartCol, "string").add(BucketCol, "int")
       return spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], st)
     }
@@ -1911,67 +1915,146 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     }
   }
 
-  /** Point lookup by bucket key, in three steps:
-    *  1. Bucket route: the key goes to its bucket on the driver (FNV-1a,
-    *     exactly like the reference's `tablet_for_row`, src/table.rs:32-41),
-    *     and the scan reads only that bucket's directories.
-    *  2. Candidate rowsets: of the one covering capture, the union holds
-    *     every delete marker and only the data rowsets that could hold the
-    *     key — the zone map, then the bloom sidecar, decide it through
+  /** Point lookup by bucket key:
+    *  1. Route: the key is cast to the key type (a value that does not cast
+    *     fails) and, on a HASH-bucketed table, goes to its bucket on the
+    *     driver (FNV-1a over the cast value's string form, exactly like the
+    *     write path and the reference's `tablet_for_row`,
+    *     src/table.rs:32-41). RANDOM bucketing places rows round-robin, so
+    *     its lookups read every bucket; so do lookups over a rowset written
+    *     before a [[rebucket]].
+    *  2. Candidates: of the one covering capture, the read takes every
+    *     delete marker and only the data rowsets that could hold the key —
+    *     the zone map, then the bloom sidecar, decide it through
     *     [[graft.plans.ScanPruneRewrite.refutes]], the predicate the
     *     optimizer rule uses (the reference's segment skipping,
-    *     src/index/mod.rs:61-108, 152-211). A rowset that refutes the key
-    *     is never listed, planned or opened.
-    *  3. One-stage merge: on Unique and Aggregate tables the merge input is
-    *     `coalesce(1)`; the key filter pins one bucket-column value, so one
-    *     partition satisfies the merge's clustering and no Exchange is
-    *     planned. The trade-off is that a lookup reads its candidate files
-    *     in one task — the shape Doris uses for a one-tablet point read.
-    *     Duplicate lookups do not merge, so their scan stays parallel.
+    *     src/index/mod.rs:61-108, 152-211).
+    *  3. Driver read and fold: when the candidates' files in the routed
+    *     bucket total at most `spark.sql.files.maxPartitionBytes` (what the
+    *     Spark path reads in one task), every candidate has a recorded read
+    *     schema with the declared column types, and [[PointRead.fold]]
+    *     covers the model (all but Aggregate SUM and HLL_UNION), the driver
+    *     reads those files with Spark's parquet reader, the key pushed
+    *     down, applies the delete markers and folds the merge (the shape of
+    *     Doris's short-circuit point query). The answer is a local relation:
+    *     building it starts no Spark job and collecting it starts none.
+    *  4. Fallback: otherwise one Spark job. On Unique and Aggregate tables
+    *     the merge input is `coalesce(1)`; the key filter pins one
+    *     bucket-column value, so one partition satisfies the merge's
+    *     clustering and no Exchange is planned. Duplicate lookups do not
+    *     merge, so their scan stays parallel.
     */
   def lookupByKey(db: String, table: String, keyValue: String): DataFrame = {
+    val p = pointLookup(db, table, keyValue)
+    pointFiles(p).fold(sparkLookup(p))(driverLookup(p, _))
+  }
+
+  /** Steps 1 and 2 of [[lookupByKey]]: the route and the candidates. */
+  private[graft] def pointLookup(db: String, table: String, keyValue: String): PointLookup = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, EqualTo, Literal}
     val td = catalog.getTable(db, table).getOrElse(
       throw new NoSuchElementException(s"no table $db.$table"))
-    val keyCol = td.bucketColumn.get
-    val bucket = td.bucketType.bucketForKey(keyValue, td.numBuckets)
+    val keyCol = td.bucketColumn.getOrElse(throw new IllegalArgumentException(
+      s"lookupByKey needs a bucket column, and ${td.qualified} declares none"))
+    val keyType = td.schema.columns.find(_.name == keyCol).get.dataType
+    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
+    val key = scala.util.Try(Cast(Literal(keyValue), keyType, tz).eval()).toOption
+      .flatMap(Option(_)).getOrElse(throw new IllegalArgumentException(
+        s"lookupByKey: '$keyValue' is not a ${keyType.simpleString} value of " +
+          s"${td.qualified}.$keyCol"))
     val m = manifest(db, table)
     val lo = m.visibleRowsets.map(_.version.start).minOption.getOrElse(0L)
-    // cast the literal (not the column) so the equality pushes down to the
-    // parquet scan and skips by row-group and page min/max on the sorted key
-    val keyType = td.schema.columns.find(_.name == keyCol).get.dataType
     // single capture for data + proof (see scanPartitions' race note)
     val covering = m.captureConsistentVersions(lo, m.maxVersion)
     val root = tableRoot(db, table)
-    val candidates = keyPredicate(td, keyCol, keyType, keyValue).fold(covering) { p =>
+    // stats and sidecars are keyed by each rowset's physical column names,
+    // so a rowset written before the key's rename has none under the
+    // current name and is kept; prune nothing when the current name once
+    // belonged to another column
+    val candidates = if (td.renamedColumns.contains(keyCol)) covering else {
+      val pred = EqualTo(AttributeReference(keyCol, keyType)(), Literal(key, keyType))
       covering.filter(r => r.isDeleteMarker || !graft.plans.ScanPruneRewrite.refutes(
-        p, root.resolve(r.relDir).toAbsolutePath.normalize.toString, r))
+        pred, root.resolve(r.relDir).toAbsolutePath.normalize.toString, r))
     }
-    val pruned = rawFromRowsets(db, table, candidates)
-      .filter(col(BucketCol) === bucket && col(keyCol) === lit(keyValue).cast(keyType))
+    val routed = td.bucketType == BucketType.Hash &&
+      candidates.forall(r => r.isDeleteMarker || r.rowsetId >= td.bucketLayoutFloor)
+    // the write path routes `cast(key as string)`, so route the cast value
+    val bucket = if (!routed) None else Some(td.bucketType.bucketForKey(
+      Cast(Literal(key, keyType), StringType, tz).eval().toString, td.numBuckets))
+    PointLookup(td, keyCol, keyType, key, bucket, covering, candidates)
+  }
+
+  /** The files a driver read of `p` opens, per candidate data rowset, or
+    * None when the lookup takes the Spark path (step 3 of [[lookupByKey]]).
+    * The listing is the cached rowset reader's ([[rawReaders]]), so it is
+    * made once per rowset and evicted with it.
+    */
+  private[graft] def pointFiles(p: PointLookup): Option[Seq[PointRowset]] = {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitionedFile}
+    val td = p.td
+    val data = p.candidates.filter(r => !r.isDeleteMarker && r.numRows > 0)
+    val declared = td.schema.columns.map(c => c.name -> c.dataType).toMap
+    def typesMatch(st: StructType): Boolean =
+      PointRead.renamed(st.fieldNames.toSeq, td.renamedColumns).zip(st.fields)
+        .forall { case (n, f) => declared.get(n).forall(_ == f.dataType) }
+    if (!PointRead.foldable(td) ||
+        !td.schema.keyColumns.forall(c => PointRead.plainKey(c.dataType)) ||
+        !data.forall(_.schema.exists(typesMatch))) return None
+    val root = tableRoot(td.db, td.name)
+    val read = data.map { r =>
+      val dir = root.resolve(r.relDir).toString
+      val rel = rawReaders.getOrElseUpdate(dir, rowsetReader(dir, r.schema))
+        .queryExecution.analyzed match {
+          case lr: LogicalRelation => lr.relation.asInstanceOf[HadoopFsRelation]
+          case other => throw new IllegalStateException(s"rowset reader of $dir is $other")
+        }
+      val bucketAt = rel.partitionSchema.fieldIndex(BucketCol)
+      val files = rel.location.listFiles(Nil, Nil)
+        .filter(d => p.bucket.forall(_ == d.values.getInt(bucketAt)))
+        .flatMap(d => d.files.map(f => PartitionedFile(d.values,
+          org.apache.spark.paths.SparkPath.fromPath(f.getPath), 0L, f.getLen,
+          Array.empty[String], f.getModificationTime, f.getLen)))
+      PointRowset(r, rel, files)
+    }
+    val bytes = read.iterator.flatMap(_.files).map(_.length).sum
+    if (bytes > spark.sessionState.conf.filesMaxPartitionBytes) None else Some(read)
+  }
+
+  /** Step 3's read and fold: a local relation with the Spark path's schema. */
+  private def driverLookup(p: PointLookup, read: Seq[PointRowset]): DataFrame = {
+    import org.apache.spark.sql.catalyst.expressions.AttributeReference
+    import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+    val attrs = p.td.schema.columns.map(c => AttributeReference(c.name, c.dataType)())
+    val rows = PointRead.mask(spark, p.td, p.candidates.filter(_.isDeleteMarker)) match {
+      // a marker the declared columns cannot resolve: the Spark path reports it
+      case None => return sparkLookup(p)
+      case Some(masked) =>
+        val hasOp = read.exists(_.meta.schema.exists(_.fieldNames.contains(OpCol)))
+        PointRead.fold(p.td,
+          PointRead.records(spark, p, read).filterNot(masked), hasOp)
+    }
+    org.apache.spark.sql.graft.shim.ofRows(spark, LocalRelation(attrs, rows))
+  }
+
+  /** The one-job path of [[lookupByKey]] (step 4); also the reference the
+    * driver read is tested against.
+    */
+  private[graft] def sparkLookup(p: PointLookup): DataFrame = {
+    val td = p.td
+    // a typed literal (not a cast column) so the equality pushes down to the
+    // parquet scan and skips by row-group and page min/max on the sorted key
+    val keyEq = col(p.keyCol) === org.apache.spark.sql.graft.shim.exprColumn(
+      org.apache.spark.sql.catalyst.expressions.Literal(p.key, p.keyType))
+    val pruned = rawFromRowsets(td.db, td.name, p.candidates)
+      .filter(p.bucket.fold(keyEq)(b => col(BucketCol) === b && keyEq))
     td.schema.keysType match {
       case KeysType.Duplicate =>
         pruned.transform(projectDeclared(td))
       // the unmerged-serve proof takes the full covering set: a subset of
       // its rowsets only removes rows
-      case KeysType.Unique => mergeOrServe(td, covering, pruned.coalesce(1))
+      case KeysType.Unique => mergeOrServe(td, p.covering, pruned.coalesce(1))
       case _ => MergeView(td, pruned.coalesce(1), VersionCol, SeqCol)
     }
-  }
-
-  /** `keyCol = keyValue` as the expression rowset pruning reads. Stats and
-    * sidecars are keyed by each rowset's physical column names, so a rowset
-    * written before the key column's rename has none under the current name
-    * and is kept. None (no pruning) when the current name once belonged to
-    * another column, or when the value does not cast to the key type.
-    */
-  private def keyPredicate(td: TableDef, keyCol: String,
-      keyType: org.apache.spark.sql.types.DataType,
-      keyValue: String): Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, EqualTo, Literal}
-    if (td.renamedColumns.contains(keyCol)) return None
-    scala.util.Try(Cast(Literal(keyValue), keyType,
-        Some(spark.sessionState.conf.sessionLocalTimeZone)).eval()).toOption
-      .map(v => EqualTo(AttributeReference(keyCol, keyType)(), Literal(v, keyType)))
   }
 
   /** Colocate join (Doris colocation groups): join two tables that share

@@ -15,12 +15,14 @@ import graft.SparkTestSession
 import graft.catalog._
 import graft.model._
 
-/** `lookupByKey` reads only the rowsets that can hold the key and merges in
-  * the scan's own stage. Whatever it prunes, its answer is the merged
-  * table's rows for that key: it must equal `scan().filter(key === k)` on
-  * every table model, after any sequence of loads, partial updates, deletes
-  * and compactions, for live, rewritten and deleted keys and for keys
-  * outside every rowset's zone map.
+/** `lookupByKey` reads only the rowsets that can hold the key and, when
+  * they are small, folds the merge on the driver with no Spark job; past
+  * that it merges in the scan's own stage. Whichever path it takes, its
+  * answer is the merged table's rows for that key: the driver path, the
+  * Spark path and `scan().filter(key === k)` must agree on every table
+  * model, after any sequence of loads, partial updates, deletes and
+  * compactions, for live, rewritten and deleted keys and for keys outside
+  * every rowset's zone map.
   */
 class LookupByKeySpec extends AnyFunSuite {
   private lazy val spark = { val s = SparkTestSession.spark; graft.GraftExtensions.register(s); s }
@@ -55,13 +57,30 @@ class LookupByKeySpec extends AnyFunSuite {
 
   private def canon(rows: Seq[Row]): Seq[String] = rows.map(_.mkString("|")).sorted
 
-  /** Every key's lookup equals the scan's rows for it. */
-  private def check(eng: OlapEngine, table: String, keys: Seq[Long], what: String): Unit = {
+  /** A lookup on both paths, canonical rows of each: `lookupByKey` and the
+    * Spark path it falls back to. Checks which path `lookupByKey` takes and
+    * that both give one schema.
+    */
+  private def both(eng: OlapEngine, table: String, key: String,
+      driver: Boolean = true): (Seq[String], Seq[String]) = {
+    val p = eng.pointLookup("db", table, key)
+    assert(eng.pointFiles(p).isDefined == driver,
+      s"$table lookup($key) took the ${if (driver) "Spark" else "driver"} path")
+    val looked = eng.lookupByKey("db", table, key)
+    val viaSpark = eng.sparkLookup(p)
+    assert(looked.schema == viaSpark.schema, s"$table lookup($key) schema")
+    (canon(looked.collect().toSeq), canon(viaSpark.collect().toSeq))
+  }
+
+  /** Every key's lookup equals the scan's rows for it, on both paths. */
+  private def check(eng: OlapEngine, table: String, keys: Seq[Long], what: String,
+      driver: Boolean): Unit = {
     val all = eng.scan("db", table).collect().toSeq
     keys.distinct.foreach { k =>
       val want = canon(all.filter(_.getAs[Long]("k") == k))
-      val got = canon(eng.lookupByKey("db", table, k.toString).collect().toSeq)
-      assert(got == want, s"$table lookup($k) after $what")
+      val (looked, viaSpark) = both(eng, table, k.toString, driver)
+      assert(looked == want, s"$table lookup($k) after $what")
+      assert(viaSpark == want, s"$table Spark-path lookup($k) after $what")
     }
   }
 
@@ -129,7 +148,8 @@ class LookupByKeySpec extends AnyFunSuite {
       if (step == ops.size / 2 || step == ops.size - 1) {
         val rewritten = written.collect { case (k, n) if n > 1 => k }.take(2)
         val probe = lastLoad.take(2) ++ rewritten ++ deleted.take(2) ++ outside
-        check(eng, name, probe, s"step ${step + 1} ($op)")
+        // SUM's widening and overflow stay with Spark: agg_sum falls back
+        check(eng, name, probe, s"step ${step + 1} ($op)", driver = agg != AggType.Sum)
       }
     }
   }
@@ -162,8 +182,7 @@ class LookupByKeySpec extends AnyFunSuite {
     val all = eng.scan("db", "t").collect().toSeq
     Seq(7L, 20L, 120L, 500L).foreach { k =>
       val want = canon(all.filter(_.getAs[Long]("id") == k))
-      assert(canon(eng.lookupByKey("db", "t", k.toString).collect().toSeq) == want,
-        s"lookup($k)")
+      assert(both(eng, "t", k.toString) == (want, want), s"lookup($k)")
     }
     assert(eng.lookupByKey("db", "t", "20").collect().map(_.getLong(1)).toSeq == Seq(20L))
     assert(eng.lookupByKey("db", "t", "7").collect().map(_.getLong(1)).toSeq == Seq(70L))
@@ -183,12 +202,186 @@ class LookupByKeySpec extends AnyFunSuite {
     assert(eng.manifest("db", "t").visibleRowsets.count(!_.isDeleteMarker) == 5)
     // (key, data rowsets whose zone map holds it)
     Seq(17L -> 1, 205L -> 2, 310L -> 1, 999L -> 0).foreach { case (k, candidates) =>
-      val df = eng.lookupByKey("db", "t", k.toString)
-      assert(parquetLeaves(df.queryExecution.analyzed) == candidates, s"lookup($k)")
-      val got = df.collect().toSeq
-      assert(shuffles(df.queryExecution.executedPlan) == 0, s"lookup($k) shuffles")
-      assert(canon(got) == canon(eng.scan("db", "t").filter(col("k") === k).collect().toSeq))
+      val p = eng.pointLookup("db", "t", k.toString)
+      // the driver read opens the candidates' files of the routed bucket only
+      val read = eng.pointFiles(p).get
+      assert(read.size == candidates, s"lookup($k) driver read set")
+      val bucket = p.bucket.get
+      assert(read.flatMap(_.files).forall(
+        _.filePath.toString.contains(s"/__graft_bucket=$bucket/")), s"lookup($k) files")
+      // the Spark path reads the same candidates, in one stage
+      val viaSpark = eng.sparkLookup(p)
+      assert(parquetLeaves(viaSpark.queryExecution.analyzed) == candidates, s"lookup($k)")
+      val got = viaSpark.collect().toSeq
+      assert(shuffles(viaSpark.queryExecution.executedPlan) == 0, s"lookup($k) shuffles")
+      val want = canon(eng.scan("db", "t").filter(col("k") === k).collect().toSeq)
+      assert(canon(got) == want)
+      assert(canon(eng.lookupByKey("db", "t", k.toString).collect().toSeq) == want)
     }
     assert(eng.lookupByKey("db", "t", "205").collect().map(_.getLong(1)).toSeq == Seq(1L))
+  }
+
+  test("a small Unique lookup starts no Spark job, built or collected") {
+    val eng = new OlapEngine(spark, Files.createTempDirectory("graft-lk-jobs-"))
+    eng.createDatabase("db")
+    create(eng, "t", KeysType.Unique, AggType.None, partial = false, seq = false)
+    eng.ingest("db", "t", frame(Seq("k", "v", "w"), (0L until 100L).map(k => Seq(k, k, k))))
+    eng.ingest("db", "t", frame(Seq("k", "v", "w"), Seq(Seq(17L, 170L, 170L))))
+    eng.deleteWhere("db", "t", "k = 18")
+    // a fresh engine: the reader cache is cold too
+    val fresh = new OlapEngine(spark, eng.warehouse)
+    val (rows, jobs) = SparkTestSession.jobsDuring(spark)(Seq(17L, 18L, 19L).map(k =>
+      fresh.lookupByKey("db", "t", k.toString).select("k", "v").collect().toSeq))
+    assert(jobs == 0, s"the lookups started $jobs Spark job(s)")
+    assert(rows == Seq(Seq(Row(17L, 170L)), Nil, Seq(Row(19L, 19L))))
+  }
+
+  test("lookups the driver fold does not take give the Spark path's answer") {
+    val eng = new OlapEngine(spark, Files.createTempDirectory("graft-lk-fb-"))
+    eng.createDatabase("db")
+    models.foreach { case (name, keys, agg, partial, seq) =>
+      create(eng, name, keys, agg, partial, seq)
+      (0 until 2).foreach { i =>
+        eng.ingest("db", name, frame(Seq("k") ++ valueCols ++ (if (seq) Seq("s") else Nil),
+          (0L until 40L).map(k => Seq(k, k + i, k * i) ++ (if (seq) Seq(i.toLong) else Nil))))
+      }
+    }
+    // a key no rowset can hold has no candidate file: it stays on the
+    // driver whatever the candidates would have needed
+    val (held, none) = (Seq(3L, 39L), Seq(77L))
+    def checkAll(e: OlapEngine, what: String, driver: Boolean): Unit =
+      models.foreach { case (name, _, _, _, _) =>
+        check(e, name, held, what, driver = driver && name != "agg_sum")
+        check(e, name, none, what, driver = name != "agg_sum")
+      }
+    // SUM: its widening and overflow rules stay with Spark
+    checkAll(eng, "two loads", driver = true)
+    // a candidate set over spark.sql.files.maxPartitionBytes
+    spark.conf.set("spark.sql.files.maxPartitionBytes", "64")
+    try checkAll(eng, "two loads, 64-byte bound", driver = false)
+    finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    // rowsets without a recorded read schema (a manifest from before
+    // schemas were recorded)
+    models.foreach { case (name, _, _, _, _) => stripSchemas(eng, name) }
+    checkAll(new OlapEngine(spark, eng.warehouse), "stripped schemas", driver = false)
+  }
+
+  /** Drop the recorded read schemas from a table's manifest on disk. */
+  private def stripSchemas(eng: OlapEngine, t: String): Unit = {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods
+    val p = eng.tableRoot("db", t).resolve("_manifest.json")
+    val doc = JsonMethods.parse(Files.readString(p))
+    val stripped = doc removeField { case (n, _) => n == "schemas" || n == "schema" }
+    Files.writeString(p, JsonMethods.compact(JsonMethods.render(stripped)))
+  }
+
+  test("RANDOM bucketing places rows round-robin, so lookups read every bucket") {
+    val eng = new OlapEngine(spark, Files.createTempDirectory("graft-lk-rnd-"))
+    eng.createDatabase("db")
+    eng.createTable(TableDef(db = "db", name = "r", schema = TableSchema(KeysType.Duplicate,
+        Seq(ColumnSpec.key("k", LongType), ColumnSpec.value("v", LongType))),
+      bucketType = BucketType.Random, bucketColumn = Some("k"), numBuckets = 4))
+    eng.ingest("db", "r", frame(Seq("k", "v"), (0L until 1000L).map(k => Seq(k, -k))))
+    (0L until 1000L by 25L).foreach { k =>
+      assert(eng.pointLookup("db", "r", k.toString).bucket.isEmpty)
+      assert(both(eng, "r", k.toString) == (Seq(s"$k|${-k}"), Seq(s"$k|${-k}")), s"lookup($k)")
+    }
+  }
+
+  test("a lookup on a table with no bucket column fails naming the table") {
+    val eng = new OlapEngine(spark, Files.createTempDirectory("graft-lk-nb-"))
+    eng.createDatabase("db")
+    eng.createTable(TableDef(db = "db", name = "nb", schema = TableSchema(KeysType.Duplicate,
+      Seq(ColumnSpec.key("k", LongType), ColumnSpec.value("v", LongType)))))
+    val e = intercept[IllegalArgumentException](eng.lookupByKey("db", "nb", "1"))
+    assert(e.getMessage.contains("db.nb"), e.getMessage)
+  }
+
+  test("edge semantics agree on both paths: bad keys, tombstones, null partial " +
+    "values, MIN/MAX/REPLACE_IF_NOT_NULL, delete masks, renames and defaults") {
+    val eng = new OlapEngine(spark, Files.createTempDirectory("graft-lk-edge-"))
+    eng.createDatabase("db")
+    create(eng, "u", KeysType.Unique, AggType.None, partial = false, seq = false)
+    eng.ingest("db", "u", frame(Seq("k", "v", "w"), (0L until 20L).map(k => Seq(k, k, k))))
+    // a value that does not cast to the key type fails in the route step,
+    // before either path; a non-canonical spelling routes as its value
+    val bad = intercept[IllegalArgumentException](eng.lookupByKey("db", "u", "seven"))
+    assert(bad.getMessage.contains("db.u.k"), bad.getMessage)
+    assert(both(eng, "u", "007") == (Seq("7|7|7"), Seq("7|7|7")))
+    // the newest record is a tombstone: the key is gone; a later upsert
+    // brings it back
+    eng.ingestDeletes("db", "u", frame(Seq("k"), Seq(Seq(5L))))
+    assert(both(eng, "u", "5") == (Nil, Nil))
+    eng.ingest("db", "u", frame(Seq("k", "v", "w"), Seq(Seq(5L, 50L, 50L))))
+    assert(both(eng, "u", "5") == (Seq("5|50|50"), Seq("5|50|50")))
+    eng.ingestDeletes("db", "u", frame(Seq("k"), Seq(Seq(5L))))
+    assert(both(eng, "u", "5") == (Nil, Nil))
+
+    // partial update: a null value column means "not set"
+    create(eng, "p", KeysType.Unique, AggType.None, partial = true, seq = false)
+    eng.ingest("db", "p", frame(Seq("k", "v", "w"), Seq(Seq(1L, 10L, 20L), Seq(2L, 11L, 21L))))
+    eng.ingestPartial("db", "p", spark.createDataFrame(
+      Seq(Row(1L, null), Row(2L, 12L)).asJava,
+      StructType(Seq(StructField("k", LongType, nullable = false),
+        StructField("v", LongType)))))
+    eng.ingestPartial("db", "p", frame(Seq("k", "w"), Seq(Seq(1L, 30L))))
+    assert(both(eng, "p", "1") == (Seq("1|10|30"), Seq("1|10|30")))
+    assert(both(eng, "p", "2") == (Seq("2|12|21"), Seq("2|12|21")))
+
+    // Aggregate MIN and MAX skip nulls; REPLACE_IF_NOT_NULL keeps the
+    // latest non-null value
+    eng.createTable(TableDef(db = "db", name = "a", schema = TableSchema(KeysType.Aggregate,
+        Seq(ColumnSpec.key("k", LongType), ColumnSpec.value("lo", LongType, AggType.Min),
+          ColumnSpec.value("hi", LongType, AggType.Max),
+          ColumnSpec.value("rn", LongType, AggType.ReplaceIfNotNull))),
+      bucketColumn = Some("k"), numBuckets = 2))
+    def aRows(rows: Row*): DataFrame = spark.createDataFrame(rows.asJava,
+      StructType(StructField("k", LongType, nullable = false) +:
+        Seq("lo", "hi", "rn").map(StructField(_, LongType))))
+    eng.ingest("db", "a", aRows(Row(1L, 5L, 5L, 10L), Row(2L, null, 3L, null)))
+    eng.ingest("db", "a", aRows(Row(1L, null, 9L, null), Row(2L, 4L, null, 20L)))
+    eng.ingest("db", "a", aRows(Row(1L, 2L, null, 30L)))
+    assert(both(eng, "a", "1") == (Seq("1|2|9|30"), Seq("1|2|9|30")))
+    assert(both(eng, "a", "2") == (Seq("2|4|3|20"), Seq("2|4|3|20")))
+
+    // deleteWhere and DROP PARTITION markers mask older rows only
+    eng.createTable(TableDef(db = "db", name = "d", schema = TableSchema(KeysType.Duplicate,
+        Seq(ColumnSpec.key("k", LongType), ColumnSpec.value("d", StringType),
+          ColumnSpec.value("v", LongType))),
+      policy = PartitionPolicy.Range, partitionColumn = Some("d"),
+      partitions = Seq(
+        PartitionSpec("pa", upperExclusive = Some("b"), numBuckets = 2),
+        PartitionSpec("pb", upperExclusive = Some("c"), numBuckets = 2)),
+      bucketColumn = Some("k"), numBuckets = 2))
+    def dRows(rows: (Long, String, Long)*): DataFrame = spark.createDataFrame(
+      rows.map { case (k, d, v) => Row(k, d, v) }.asJava,
+      StructType(Seq(StructField("k", LongType), StructField("d", StringType),
+        StructField("v", LongType))))
+    eng.ingest("db", "d", dRows((1L, "a1", 10L), (2L, "b1", 20L), (3L, "b2", 30L),
+      (3L, "b3", 31L)))
+    eng.deleteWhere("db", "d", "v >= 30")
+    eng.ingest("db", "d", dRows((3L, "b4", 32L)))
+    eng.dropPartition("db", "d", "pa")
+    assert(both(eng, "d", "1") == (Nil, Nil))
+    assert(both(eng, "d", "2") == (Seq("2|b1|20"), Seq("2|b1|20")))
+    assert(both(eng, "d", "3") == (Seq("3|b4|32"), Seq("3|b4|32")))
+    // a marker whose predicate names a dropped column resolves only against
+    // the files: the driver path hands the lookup to the Spark path
+    eng.dropColumn("db", "d", "v")
+    assert(both(eng, "d", "3") == (Seq("3|b4"), Seq("3|b4")))
+
+    // a value column renamed, then one added with a DEFAULT: old rowsets
+    // read the default, newer ones their own value
+    eng.renameColumn("db", "u", "v", "vv")
+    eng.addColumn("db", "u", ColumnSpec.value("x", LongType), Some("7"))
+    eng.ingest("db", "u", spark.createDataFrame(Seq(Row(30L, 300L, 300L, null)).asJava,
+      StructType(Seq(StructField("k", LongType, nullable = false),
+        StructField("vv", LongType), StructField("w", LongType), StructField("x", LongType)))))
+    val all = eng.scan("db", "u").collect().toSeq
+    Seq(3L -> "3|3|3|7", 30L -> "30|300|300|null").foreach { case (k, row) =>
+      assert(canon(all.filter(_.getAs[Long]("k") == k)) == Seq(row))
+      assert(both(eng, "u", k.toString) == (Seq(row), Seq(row)), s"lookup($k)")
+    }
   }
 }

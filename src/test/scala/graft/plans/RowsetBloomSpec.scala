@@ -129,12 +129,19 @@ class RowsetBloomSpec extends AnyFunSuite {
     // both zone maps hold key 402; only the even load's bloom does
     assert(eng.manifest("db", "u").visibleRowsets.forall { r =>
       r.stats("k").min.get.toLong <= 402L && r.stats("k").max.get.toLong >= 402L })
-    val df = eng.lookupByKey("db", "u", "402")
-    assert(df.queryExecution.analyzed.collect {
+    // the driver read opens the even load's files only, and so does the
+    // Spark path it falls back to
+    val p = eng.pointLookup("db", "u", "402")
+    assert(eng.pointFiles(p).get.map(_.meta) ==
+      eng.manifest("db", "u").visibleRowsets.filter(_.stats("k").min.get.toLong == 0L))
+    val viaSpark = eng.sparkLookup(p)
+    assert(viaSpark.queryExecution.analyzed.collect {
       case lr: org.apache.spark.sql.execution.datasources.LogicalRelation => lr
     }.size == 1)
-    assert(scansIn(df) == 1)
-    assert(df.collect().toSeq == Seq(Row(402L, "id-000402", 402)))
+    assert(scansIn(viaSpark) == 1)
+    assert(viaSpark.collect().toSeq == Seq(Row(402L, "id-000402", 402)))
+    assert(eng.lookupByKey("db", "u", "402").collect().toSeq ==
+      Seq(Row(402L, "id-000402", 402)))
   }
 
   test("one job beyond the write builds every declared sidecar, " +
