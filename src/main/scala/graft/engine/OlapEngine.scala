@@ -1702,7 +1702,8 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     // treat old-name and new-name rowsets as having disjoint columns and
     // null-fill both sides. Guarded per rowset (old present, new absent) so
     // a pathological stale rowset from a freed-then-reused name era can
-    // never be silently mis-mapped.
+    // never be silently mis-mapped; [[PointRead.renamed]] is the rule, shared
+    // with the driver-side point read.
     // ONE catalog snapshot for the whole union: per-branch lookups would
     // both repeat the fetch O(rowsets) times and let an ALTER landing
     // mid-loop hand different branches different schema/default views
@@ -1711,11 +1712,8 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     val unioned = data.map { r =>
       val dir = root.resolve(r.relDir).toString
       val raw = rawReaders.getOrElseUpdate(dir, rowsetReader(dir, r.schema))
-      val renamed = renames.foldLeft(raw) { case (d, (oldName, newName)) =>
-        if (d.columns.contains(oldName) && !d.columns.contains(newName))
-          d.withColumnRenamed(oldName, newName)
-        else d
-      }
+      val names = PointRead.renamed(raw.columns.toSeq, renames)
+      val renamed = if (names == raw.columns.toSeq) raw else raw.toDF(names: _*)
       // DEFAULT backfill is PER BRANCH: a declared column physically absent
       // from THIS rowset (written before its addColumn) reads the declared
       // default; rowsets that carry the column — including explicit NULLs
@@ -1930,14 +1928,16 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     *     optimizer rule uses (the reference's segment skipping,
     *     src/index/mod.rs:61-108, 152-211).
     *  3. Driver read and fold: when the candidates' files in the routed
-    *     bucket total at most `spark.sql.files.maxPartitionBytes` (what the
-    *     Spark path reads in one task), every candidate has a recorded read
-    *     schema with the declared column types, and [[PointRead.fold]]
-    *     covers the model (all but Aggregate SUM and HLL_UNION), the driver
-    *     reads those files with Spark's parquet reader, the key pushed
-    *     down, applies the delete markers and folds the merge (the shape of
-    *     Doris's short-circuit point query). The answer is a local relation:
-    *     building it starts no Spark job and collecting it starts none.
+    *     bucket total at most [[PointRead.MaxBytes]], every candidate has a
+    *     recorded read schema with the declared column types, and
+    *     [[PointRead.fold]] covers the model (all but Aggregate SUM and
+    *     HLL_UNION), the driver reads those files with Spark's parquet
+    *     reader, the key pushed down, applies the delete markers and folds
+    *     the merge (the shape of Doris's short-circuit point query). The
+    *     answer is a local relation: building it starts no Spark job and
+    *     collecting it starts none. A delete predicate the driver cannot
+    *     evaluate, or a key with more than [[PointRead.MaxRecords]] records,
+    *     hands the lookup to step 4.
     *  4. Fallback: otherwise one Spark job. On Unique and Aggregate tables
     *     the merge input is `coalesce(1)`; the key filter pins one
     *     bucket-column value, so one partition satisfies the merge's
@@ -1989,7 +1989,8 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     * The listing is the cached rowset reader's ([[rawReaders]]), so it is
     * made once per rowset and evicted with it.
     */
-  private[graft] def pointFiles(p: PointLookup): Option[Seq[PointRowset]] = {
+  private[graft] def pointFiles(p: PointLookup,
+      maxBytes: Long = PointRead.MaxBytes): Option[Seq[PointRowset]] = {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation, PartitionedFile}
     val td = p.td
     val data = p.candidates.filter(r => !r.isDeleteMarker && r.numRows > 0)
@@ -2017,23 +2018,26 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
       PointRowset(r, rel, files)
     }
     val bytes = read.iterator.flatMap(_.files).map(_.length).sum
-    if (bytes > spark.sessionState.conf.filesMaxPartitionBytes) None else Some(read)
+    if (bytes > maxBytes) None else Some(read)
   }
 
-  /** Step 3's read and fold: a local relation with the Spark path's schema. */
+  /** Step 3's read and fold: a local relation with the Spark path's schema,
+    * or the Spark path when a marker is not evaluable on the driver or the
+    * key holds more than [[PointRead.MaxRecords]] records.
+    */
   private def driverLookup(p: PointLookup, read: Seq[PointRowset]): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.AttributeReference
     import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
     val attrs = p.td.schema.columns.map(c => AttributeReference(c.name, c.dataType)())
-    val rows = PointRead.mask(spark, p.td, p.candidates.filter(_.isDeleteMarker)) match {
-      // a marker the declared columns cannot resolve: the Spark path reports it
-      case None => return sparkLookup(p)
-      case Some(masked) =>
-        val hasOp = read.exists(_.meta.schema.exists(_.fieldNames.contains(OpCol)))
-        PointRead.fold(p.td,
-          PointRead.records(spark, p, read).filterNot(masked), hasOp)
-    }
-    org.apache.spark.sql.graft.shim.ofRows(spark, LocalRelation(attrs, rows))
+    val hasOp = read.exists(_.meta.schema.exists(_.fieldNames.contains(OpCol)))
+    // a marker the driver cannot evaluate, or more records than it should
+    // hold: the Spark path answers
+    val rows = for {
+      masked <- PointRead.mask(spark, p.td, p.candidates.filter(_.isDeleteMarker))
+      recs <- PointRead.records(spark, p, read, PointRead.MaxRecords)
+    } yield PointRead.fold(p.td, recs.filterNot(masked), hasOp)
+    rows.fold(sparkLookup(p))(r =>
+      org.apache.spark.sql.graft.shim.ofRows(spark, LocalRelation(attrs, r)))
   }
 
   /** The one-job path of [[lookupByKey]] (step 4); also the reference the

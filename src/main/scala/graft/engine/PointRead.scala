@@ -3,6 +3,7 @@ package graft.engine
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions._
+import org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LocalRelation}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{FileFormat, HadoopFsRelation, PartitionedFile}
@@ -36,6 +37,22 @@ private[graft] final case class PointRowset(meta: RowsetMeta,
   * `LookupByKeySpec` holds the two equal on every model.
   */
 private[engine] object PointRead {
+  /** The most candidate file bytes a driver read takes; larger candidate
+    * sets go to the Spark path. On a 4-core host the driver read beat the
+    * one-job path for Unique and Duplicate keys of a few records up to
+    * about 100 MB of candidate files (the column index finds the key's
+    * pages, so bytes cost little); the bound sits well inside that.
+    */
+  val MaxBytes: Long = 32L << 20
+
+  /** The most records of one key a driver read collects; past it the read
+    * stops and the lookup goes to the Spark path. Matching rows, not bytes,
+    * are what a driver read pays for: on the same host a hot Duplicate key
+    * of about 13k rows still read faster on the driver, one of about 51k
+    * did not.
+    */
+  val MaxRecords: Int = 16384
+
   private val VersionCol = "__graft_version"
   private val SeqCol = "__graft_seq"
   private val OpCol = "__graft_op"
@@ -65,18 +82,21 @@ private[engine] object PointRead {
       if (ns.contains(o) && !ns.contains(n)) ns.map(x => if (x == o) n else x) else ns
     }
 
-  /** The records of `p.key` in `rowsets`. The key is pushed down to the
-    * parquet reader, so row-group statistics and the column index skip,
-    * and then checked on each row. A missing file fails the read.
+  /** The records of `p.key` in `rowsets`, or None past `limit` of them
+    * (the read stops there). The key is pushed down to the parquet reader,
+    * so row-group statistics and the column index skip, and then checked on
+    * each row. A missing file fails the read.
     */
-  def records(spark: SparkSession, p: PointLookup, rowsets: Seq[PointRowset]): Seq[Rec] = {
+  def records(spark: SparkSession, p: PointLookup, rowsets: Seq[PointRowset],
+      limit: Int): Option[Seq[Rec]] = {
+    var left = limit
     val cols = p.td.schema.columns
     val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
     // DEFAULT backfill for a declared column the rowset does not hold
     val defaults = cols.map(c => p.td.columnDefaults.get(c.name)
       .map(v => Cast(Literal(v), c.dataType, tz).eval()).orNull)
     // one reader per distinct rowset schema (usually one per lookup)
-    rowsets.groupBy(r => (r.relation.dataSchema, r.relation.partitionSchema)).toSeq.flatMap {
+    val recs = rowsets.groupBy(r => (r.relation.dataSchema, r.relation.partitionSchema)).toSeq.flatMap {
       case ((dataSchema, partSchema), group) =>
         val names = renamed(dataSchema.fieldNames.toSeq, p.td.renamedColumns)
         val keyAt = names.indexOf(p.keyCol)
@@ -98,29 +118,55 @@ private[engine] object PointRead {
         def get(row: InternalRow, i: Int): Any =
           if (i < 0 || row.isNullAt(i)) null else row.get(i, dataSchema(i).dataType)
         group.flatMap { r =>
-          r.files.flatMap { f =>
+          r.files.iterator.takeWhile(_ => left >= 0).flatMap { f =>
             val it = read(f)
-            try it.filter(row => !row.isNullAt(keyAt) && row.get(keyAt, p.keyType) == p.key)
-              .map { shared =>
-                val row = shared.copy()
-                Rec(cols.indices.map(i => if (at(i) < 0) defaults(i) else get(row, at(i))).toArray,
-                  r.meta.version.end, get(row, seqAt), get(row, opAt),
-                  Option(row.getUTF8String(partAt)).map(_.toString).orNull)
-              }.toVector
-            finally it match {
+            try {
+              val got = it.filter(row => !row.isNullAt(keyAt) && row.get(keyAt, p.keyType) == p.key)
+                .map { shared =>
+                  val row = shared.copy()
+                  Rec(cols.indices.map(i => if (at(i) < 0) defaults(i) else get(row, at(i))).toArray,
+                    r.meta.version.end, get(row, seqAt), get(row, opAt),
+                    Option(row.getUTF8String(partAt)).map(_.toString).orNull)
+                }.take(left + 1).toVector
+              left -= got.size
+              got
+            } finally it match {
               case c: java.io.Closeable => c.close()
               case _ => ()
             }
           }
         }
     }
+    if (left < 0) None else Some(recs)
+  }
+
+  /** `cond` in a form `eval` runs, or None. The analyzed plan still holds
+    * what only the optimizer rewrites: RuntimeReplaceable nodes (`nvl`,
+    * `left`, `BETWEEN`, ...) are replaced by Spark's own
+    * [[org.apache.spark.sql.catalyst.optimizer.ReplaceExpressions]] and the
+    * `With` common expressions that leaves (BETWEEN's input) are inlined.
+    * A predicate that still holds an unevaluable node (a subquery) or is
+    * nondeterministic gives None.
+    */
+  def evaluable(cond: Expression): Option[Expression] = {
+    val replaced = ReplaceExpressions(Filter(cond, LocalRelation())).expressions.head
+    def inline(e: Expression): Expression = e.transformUp {
+      case With(child, defs) =>
+        val byId = defs.map(d => d.id -> d.child).toMap
+        child.transformUp { case r: CommonExpressionRef if byId.contains(r.id) => byId(r.id) }
+    }
+    // an attribute is unevaluable only until it is bound
+    Some(inline(replaced)).filter(c => c.deterministic && c.find {
+      case _: Attribute => false
+      case e => e.isInstanceOf[Unevaluable]
+    }.isEmpty)
   }
 
   /** The delete markers as one mask over records, or None when a marker's
-    * predicate does not resolve against the declared columns. A DROP
-    * PARTITION marker masks its partition; a predicate marker is analyzed
-    * once (no job) and evaluated as `coalesce(pred, false) AND version <
-    * marker.start`, the read path's mask.
+    * predicate does not resolve against the declared columns or is not
+    * [[evaluable]]. A DROP PARTITION marker masks its partition; a predicate
+    * marker is analyzed once (no job) and evaluated as `coalesce(pred,
+    * false) AND version < marker.start`, the read path's mask.
     */
   def mask(spark: SparkSession, td: TableDef,
       markers: Seq[RowsetMeta]): Option[Rec => Boolean] = {
@@ -133,7 +179,8 @@ private[engine] object PointRead {
         case None =>
           scala.util.Try(org.apache.spark.sql.graft.shim.ofRows(spark, LocalRelation(attrs))
               .where(expr(mk.deletePredicate.get)).queryExecution.analyzed).toOption
-            .collect { case Filter(cond, _) =>
+            .collect { case Filter(cond, _) => evaluable(cond) }.flatten
+            .map { cond =>
               val pred = Predicate.createInterpreted(BindReferences.bindReference(
                 And(Coalesce(Seq(cond, Literal(false))),
                   LessThan(version, Literal(mk.version.start))): Expression, attrs))

@@ -4,7 +4,7 @@ import java.nio.file.Files
 import scala.util.Random
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.catalyst.plans.logical.{LocalRelation, LogicalPlan}
 import org.apache.spark.sql.execution.SparkPlan
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
@@ -58,15 +58,16 @@ class LookupByKeySpec extends AnyFunSuite {
   private def canon(rows: Seq[Row]): Seq[String] = rows.map(_.mkString("|")).sorted
 
   /** A lookup on both paths, canonical rows of each: `lookupByKey` and the
-    * Spark path it falls back to. Checks which path `lookupByKey` takes and
-    * that both give one schema.
+    * Spark path it falls back to. Checks which path `lookupByKey` takes (the
+    * driver path answers with a local relation) and that both give one
+    * schema.
     */
   private def both(eng: OlapEngine, table: String, key: String,
       driver: Boolean = true): (Seq[String], Seq[String]) = {
     val p = eng.pointLookup("db", table, key)
-    assert(eng.pointFiles(p).isDefined == driver,
-      s"$table lookup($key) took the ${if (driver) "Spark" else "driver"} path")
     val looked = eng.lookupByKey("db", table, key)
+    assert(looked.queryExecution.logical.isInstanceOf[LocalRelation] == driver,
+      s"$table lookup($key) took the ${if (driver) "Spark" else "driver"} path")
     val viaSpark = eng.sparkLookup(p)
     assert(looked.schema == viaSpark.schema, s"$table lookup($key) schema")
     (canon(looked.collect().toSeq), canon(viaSpark.collect().toSeq))
@@ -256,14 +257,33 @@ class LookupByKeySpec extends AnyFunSuite {
       }
     // SUM: its widening and overflow rules stay with Spark
     checkAll(eng, "two loads", driver = true)
-    // a candidate set over spark.sql.files.maxPartitionBytes
+    // a candidate set over the byte bound goes to the Spark path; a session
+    // conf does not move the bound
     spark.conf.set("spark.sql.files.maxPartitionBytes", "64")
-    try checkAll(eng, "two loads, 64-byte bound", driver = false)
+    try checkAll(eng, "two loads, 64-byte maxPartitionBytes", driver = true)
     finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    models.filter(_._1 != "agg_sum").foreach { case (name, _, _, _, _) =>
+      held.foreach { k =>
+        val p = eng.pointLookup("db", name, k.toString)
+        assert(eng.pointFiles(p).isDefined, s"$name lookup($k) under the bound")
+        assert(eng.pointFiles(p, maxBytes = 64).isEmpty, s"$name lookup($k) over a 64-byte bound")
+      }
+    }
     // rowsets without a recorded read schema (a manifest from before
     // schemas were recorded)
     models.foreach { case (name, _, _, _, _) => stripSchemas(eng, name) }
     checkAll(new OlapEngine(spark, eng.warehouse), "stripped schemas", driver = false)
+
+    // a key with more records than a driver read holds
+    eng.createTable(TableDef(db = "db", name = "hot", schema = TableSchema(KeysType.Duplicate,
+        Seq(ColumnSpec.key("k", LongType), ColumnSpec.value("v", LongType))),
+      bucketColumn = Some("k"), numBuckets = 2))
+    eng.ingest("db", "hot", spark.range(PointRead.MaxRecords.toLong)
+      .select(lit(0L).as("k"), col("id").as("v")))
+    check(eng, "hot", Seq(0L), "a key at the record cap", driver = true)
+    eng.ingest("db", "hot", frame(Seq("k", "v"), Seq(Seq(0L, -1L), Seq(1L, 1L))))
+    check(eng, "hot", Seq(0L), "a key over the record cap", driver = false)
+    check(eng, "hot", Seq(1L), "a key beside it", driver = true)
   }
 
   /** Drop the recorded read schemas from a table's manifest on disk. */
@@ -369,7 +389,24 @@ class LookupByKeySpec extends AnyFunSuite {
     // a marker whose predicate names a dropped column resolves only against
     // the files: the driver path hands the lookup to the Spark path
     eng.dropColumn("db", "d", "v")
-    assert(both(eng, "d", "3") == (Seq("3|b4"), Seq("3|b4")))
+    assert(both(eng, "d", "3", driver = false) == (Seq("3|b4"), Seq("3|b4")))
+
+    // markers the optimizer rewrites before Spark evaluates them: `nvl` is
+    // RuntimeReplaceable, BETWEEN is too and shares its input through a
+    // common expression; both mask on the driver. A scalar subquery is
+    // only run by Spark, so that lookup takes the Spark path.
+    create(eng, "m", KeysType.Unique, AggType.None, partial = false, seq = false)
+    eng.ingest("db", "m", frame(Seq("k", "v", "w"), (0L until 20L).map(k => Seq(k, k, k))))
+    eng.deleteWhere("db", "m", "nvl(k, 0) = 5")
+    eng.deleteWhere("db", "m", "k BETWEEN 10 AND 12")
+    eng.ingest("db", "m", frame(Seq("k", "v", "w"), Seq(Seq(11L, 110L, 110L))))
+    Seq(4L -> Seq("4|4|4"), 5L -> Nil, 9L -> Seq("9|9|9"), 10L -> Nil,
+        11L -> Seq("11|110|110"), 12L -> Nil, 13L -> Seq("13|13|13")).foreach { case (k, want) =>
+      assert(both(eng, "m", k.toString) == (want, want), s"m lookup($k)")
+    }
+    eng.deleteWhere("db", "m", "k = (SELECT 3)")
+    assert(both(eng, "m", "3", driver = false) == (Nil, Nil))
+    assert(both(eng, "m", "4", driver = false) == (Seq("4|4|4"), Seq("4|4|4")))
 
     // a value column renamed, then one added with a DEFAULT: old rowsets
     // read the default, newer ones their own value
