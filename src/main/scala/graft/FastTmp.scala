@@ -42,7 +42,7 @@ object FastTmp {
   /** Best effort, never following a symlink (a scratch dir may link to
     * input data), and going on past entries that vanish or resist.
     */
-  private def deleteTree(p: Path): Unit = {
+  private[graft] def deleteTree(p: Path): Unit = {
     if (Files.isDirectory(p, LinkOption.NOFOLLOW_LINKS))
       Option(p.toFile.listFiles()).foreach(_.foreach(f => deleteTree(f.toPath)))
     try { Files.deleteIfExists(p); () } catch { case _: Exception => () }

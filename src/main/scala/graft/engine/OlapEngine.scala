@@ -1828,21 +1828,21 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
   def snapshot(db: String, table: String, lo: Long, hi: Long): DataFrame = {
     val td = catalog.getTable(db, table).getOrElse(
       throw new NoSuchElementException(s"no table $db.$table"))
-    if (manifest(db, table).captureConsistentVersions(lo, hi).isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], td.schema.toStructType)
+    // single capture for data + proof (see scanPartitions' race note)
+    modelRead(td, manifest(db, table).captureConsistentVersions(lo, hi))
+  }
+
+  /** A model-merged read of exactly `rowsets`: Duplicate unions the rowset
+    * scans (delete predicates applied in [[rawFromRowsets]]; AQE coalesces
+    * the union's partitions), Unique serves or merges ([[mergeOrServe]]),
+    * Aggregate merges. An empty set reads as the same columns, empty.
+    */
+  private def modelRead(td: TableDef, rowsets: Seq[RowsetMeta]): DataFrame = {
+    val raw = rawFromRowsets(td.db, td.name, rowsets)
     td.schema.keysType match {
-      case KeysType.Duplicate =>
-        // No merge — union the rowset scans (delete predicates applied in
-        // rawSnapshot; AQE coalesces the union's partitions).
-        rawSnapshot(db, table, lo, hi)
-          .transform(projectDeclared(td))
-      case KeysType.Unique =>
-        // single capture for data + proof (see scanPartitions' race note)
-        val covering = manifest(db, table).captureConsistentVersions(lo, hi)
-        mergeOrServe(td, covering, rawFromRowsets(db, table, covering))
-      case _ =>
-        MergeView(td, rawSnapshot(db, table, lo, hi), VersionCol, SeqCol)
+      case KeysType.Duplicate => raw.transform(projectDeclared(td))
+      case KeysType.Unique => mergeOrServe(td, rowsets, raw)
+      case _ => MergeView(td, raw, VersionCol, SeqCol)
     }
   }
 
@@ -1865,16 +1865,7 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
         s"time travel to $asOfMs is beyond the retention window of " +
           s"$db.$table: rowsets retired before ${m.gcFloorMs} have been " +
           s"garbage-collected (retention=${td.retention})")
-    val qualifying = m.rowsetsAsOf(asOfMs)
-    if (qualifying.filterNot(_.isDeleteMarker).isEmpty)
-      return spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], td.schema.toStructType)
-    val raw = rawFromRowsets(db, table, qualifying)
-    td.schema.keysType match {
-      case KeysType.Duplicate => raw.transform(projectDeclared(td))
-      case KeysType.Unique => mergeOrServe(td, qualifying, raw)
-      case _ => MergeView(td, raw, VersionCol, SeqCol)
-    }
+    modelRead(td, m.rowsetsAsOf(asOfMs))
   }
 
   /** Full-table scan at the latest visible snapshot. */

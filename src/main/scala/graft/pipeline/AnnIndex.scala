@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Fixtures
 import graft.catalog._
 import graft.engine.OlapEngine
 import graft.manifest.Version
@@ -568,28 +569,6 @@ object AnnIndex {
   private val bookCache =
     TrieMap.empty[(String, Long), (Int, Int, Array[Array[Array[Double]]])]
 
-  private val cache = TrieMap.empty[String, OlapEngine]
-  private def deleteWarehouse(e: OlapEngine): Unit = {
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-    }
-    del(e.warehouse.toFile)
-  }
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      (cache.values ++ gateCache.values.map(_._1)).foreach(deleteWarehouse)))
-  }
-
-  /** Drops AND deletes the cached engines' temp warehouses (same contract
-    * as [[ClusterReps.clearCaches]]).
-    */
-  def clearCaches(): Unit = {
-    (cache.values ++ gateCache.values.map(_._1)).foreach(deleteWarehouse)
-    gateCache.clear()
-    cache.clear()
-    bookCache.clear()
-  }
-
   /** Driver fixture: bootstrap on 90% of the corpus (vec_id % 10 ≠ 0), fold
     * the remaining 10% in incrementally, then run the engine's scheduled
     * compaction — the served index's content is reached through BOTH
@@ -598,15 +577,15 @@ object AnnIndex {
     * three layers at once.
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
-    cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-annidx-"))
+    Fixtures.engine("ann-index", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-annidx-"))
       createTables(eng)
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       bootstrap(eng, emb.filter(col("vec_id") % 10 =!= 0))
       applyDelta(eng, emb.filter(col("vec_id") % 10 === 0))
       eng.runScheduledCompaction()
       eng
-    })
+    }
 
   /** q213 fixture: the q187 lifecycle (bootstrap 90% / fold 10% / compact)
     * followed by UNINDEXING every `vec_id % 5 == 1` — a separate cached
@@ -616,8 +595,8 @@ object AnnIndex {
     */
   private[pipeline] def deletesEngineFor(spark: SparkSession, dir: String)
   : OlapEngine =
-    cache.getOrElseUpdate(s"$dir|deletes", {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-anndel-"))
+    Fixtures.engine("ann-index-deletes", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-anndel-"))
       createTables(eng)
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
       bootstrap(eng, emb.filter(col("vec_id") % 10 =!= 0))
@@ -625,7 +604,7 @@ object AnnIndex {
       deleteVectors(eng, emb.filter(col("vec_id") % 5 === 1).select("vec_id"))
       eng.runScheduledCompaction()
       eng
-    })
+    }
 
   /** q213: the delete contract of the maintained vector index. Two facts in
     * one verdict row: (a) `n_deleted_served` — deleted vectors appearing in
@@ -883,7 +862,7 @@ object AnnIndex {
     */
   def gateAudit(spark: SparkSession, dir: String): DataFrame = {
     val eng = gateCache.getOrElseUpdate(dir, {
-      val e = new OlapEngine(spark, graft.FastTmp.newDir("graft-anngate-"))
+      val e = new OlapEngine(spark, Fixtures.newDir("graft-anngate-"))
       createTables(e)
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
         .select(col("vec_id"), col("embedding")).localCheckpoint(true)

@@ -1,12 +1,12 @@
 package graft.pipeline
 
 import java.nio.file.Files
-import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Fixtures
 import graft.catalog._
 import graft.engine.OlapEngine
 import graft.manifest.Version
@@ -61,31 +61,6 @@ object ClusterReps {
     */
   val CorpusTable = "cluster_corpus"
   val Threshold = 0.3
-
-  /** Per-(JVM, sfDir) maintained index — fixture semantics like
-    * [[graft.queries.EngineFixture]]: built once (bootstrap + one delta
-    * load), then served many times.
-    */
-  private val cache = TrieMap.empty[String, OlapEngine]
-  private def deleteWarehouse(e: OlapEngine): Unit = {
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-    }
-    del(e.warehouse.toFile)
-  }
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      cache.values.foreach(deleteWarehouse)))
-  }
-
-  /** Drops AND deletes the cached engines' temp warehouses — engines removed
-    * here would otherwise escape the shutdown hook (which only sees live
-    * cache entries) and leak their directories.
-    */
-  def clearCaches(): Unit = {
-    cache.values.foreach(deleteWarehouse)
-    cache.clear()
-  }
 
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
@@ -222,15 +197,15 @@ object ClusterReps {
     * incremental merge AND the rewrite are exact.
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
-    cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-clusterreps-"))
+    Fixtures.engine("cluster-reps", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-clusterreps-"))
       createIndexTable(eng)
       val d = docs(spark, dir)
       bootstrap(eng, d.filter(col("doc_id") % 10 =!= 0))
       applyDelta(eng, d.filter(col("doc_id") % 10 === 0))
       eng.runScheduledCompaction()
       eng
-    })
+    }
 
   /** Resolved (doc_id, rep) for every document, served from the maintained
     * index: one merge-on-read scan of the sparse table + a doc-keyed left

@@ -19,15 +19,6 @@ object Dedup {
   private val indexCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), DataFrame]
 
-  /** Fixture hook (the streaming `clearDrains` analogue): drop every
-    * cached index/model and unpersist its blocks — needed whenever the
-    * data under a previously indexed dir is regenerated in the same JVM.
-    */
-  def clearCaches(): Unit = {
-    indexCache.values.foreach(df => { df.unpersist(); () })
-    indexCache.clear()
-  }
-
   private def cachedDf(dir: String, key: String)(build: => DataFrame): DataFrame =
     indexCache.getOrElseUpdate((dir, key), { val df = build.persist(); df.count(); df })
 
@@ -205,8 +196,6 @@ object Dedup {
           col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
       .distinct()
-    if (sys.env.contains("GRAFT_PAIR_LOG"))
-      System.err.println(s"[minhashLsh] candidates=${cand.count()}")
     cand
       .join(sh.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("sh", "sh_a"), "doc_a")
       .join(sh.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("sh", "sh_b"), "doc_b")
@@ -323,11 +312,6 @@ object Dedup {
       substring(lower(col("text")), 1, 20).as("blk"),
       sort_array(array_distinct(wordsCol(col("text")))).as("ws"))
     val d = maxBlock.fold(keyed)(capBuckets(keyed, Seq("blk"), _))
-    if (sys.env.contains("GRAFT_PAIR_LOG")) {
-      val n = d.as("a").join(d.as("b"),
-        col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id")).count()
-      System.err.println(s"[ngramJaccard] candidates=$n")
-    }
     d.as("a").join(d.as("b"),
         col("a.blk") === col("b.blk") && col("a.doc_id") < col("b.doc_id"))
       .withColumn("inter", graft.functions.SortedIntersectCount
@@ -399,15 +383,12 @@ object Dedup {
       // small-star on the directed edges: for each u, m = min of its smaller
       // neighbors; re-attach those neighbors and u itself to m
       val ssMin = ls.groupBy("u").agg(min(col("v")).as("m"))
-      val t0 = System.nanoTime()
       val ss = ls.join(ssMin, "u").filter(col("v") =!= col("m"))
         .select(col("v").as("u"), col("m").as("v"))
         .union(ssMin.select(col("u"), col("m").as("v")))
         .filter(col("u") =!= col("v"))
         .distinct().localCheckpoint(true) // materialize + truncate lineage
       val fpNew = fingerprint(ss)
-      if (sys.env.contains("GRAFT_CC_LOG"))
-        System.err.println(f"[cc] round $i fp=$fpNew ${(System.nanoTime()-t0)/1e9}%.2fs")
       edges = ss
       converged = fpNew == fp
       fp = fpNew
@@ -674,9 +655,6 @@ object Dedup {
         least(col("sz_a"), col("sz_b")).cast("double") >=
           lit(threshold) * greatest(col("sz_a"), col("sz_b")).cast("double") - lit(1e-9))
       .select(col("doc_a"), col("doc_b")).distinct()
-    if (sys.env.contains("GRAFT_PAIR_LOG"))
-      System.err.println(s"[prefixFilterJoin t=$threshold blk=$block] candidates=${cand.count()}")
-
     val ratio = col("inter").cast("double") /
       (col("la") + col("lb") - col("inter")).cast("double")
     cand
@@ -755,8 +733,6 @@ object Dedup {
       .filter(col("sz_a") < col("sz_b") ||
         (col("sz_a") === col("sz_b") && col("doc_a") < col("doc_b")))
       .select(col("doc_a"), col("doc_b")).distinct()
-    if (sys.env.contains("GRAFT_PAIR_LOG"))
-      System.err.println(s"[containmentJoin t=$threshold blk=$block] candidates=${cand.count()}")
     val ratio = col("inter").cast("double") / col("la").cast("double")
     cand
       .join(ordered.select(col("doc_id").as("doc_a"), col("stoks").as("ta"),

@@ -1,12 +1,12 @@
 package graft.pipeline
 
 import java.nio.file.Files
-import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Fixtures
 import graft.catalog._
 import graft.engine.OlapEngine
 import graft.manifest.Version
@@ -42,23 +42,6 @@ object LshIndex {
   val K = 3
   val Bands = 8
   val RowsPerBand = 4
-
-  private val cache = TrieMap.empty[String, OlapEngine]
-  private def deleteWarehouse(e: OlapEngine): Unit = {
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-    }
-    del(e.warehouse.toFile)
-  }
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      cache.values.foreach(deleteWarehouse)))
-  }
-
-  def clearCaches(): Unit = {
-    cache.values.foreach(deleteWarehouse)
-    cache.clear()
-  }
 
   def createTables(eng: OlapEngine): Unit = {
     eng.createDatabase(Db)
@@ -98,15 +81,15 @@ object LshIndex {
     * reached through both maintenance paths plus the rewrite.
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
-    cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-lshidx-"))
+    Fixtures.engine("lsh-index", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-lshidx-"))
       createTables(eng)
       val d = spark.read.parquet(s"$dir/documents.parquet")
       fold(eng, d.filter(col("doc_id") % 10 =!= 0))
       fold(eng, d.filter(col("doc_id") % 10 === 0))
       eng.runScheduledCompaction()
       eng
-    })
+    }
 
   /** UNINDEX documents — the delete half of the maintenance contract
     * ([[AnnIndex.deleteVectors]]'s analogue for the text near-dup index;
@@ -145,8 +128,8 @@ object LshIndex {
     * engine so q271's fixture keeps serving the full corpus.
     */
   private[pipeline] def deletesEngineFor(spark: SparkSession, dir: String): OlapEngine =
-    cache.getOrElseUpdate(s"$dir|deletes", {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-lshidx-del-"))
+    Fixtures.engine("lsh-index-deletes", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-lshidx-del-"))
       createTables(eng)
       val d = spark.read.parquet(s"$dir/documents.parquet")
       fold(eng, d.filter(col("doc_id") % 10 =!= 0))
@@ -154,7 +137,7 @@ object LshIndex {
       eng.runScheduledCompaction()
       deleteDocs(eng, d.filter(col("doc_id") % 5 === 1).select("doc_id"))
       eng
-    })
+    }
 
   /** q271: q31's near-dup pairs SERVED from the maintained tables — the
     * candidate bucket join reads `minhash_bands`, the verify reads

@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Fixtures
 import graft.catalog._
 import graft.engine.OlapEngine
 import graft.manifest.Version
@@ -379,26 +380,6 @@ object ModelStore {
 
   // --- driver fixture + queries ---------------------------------------------
 
-  private val cache = TrieMap.empty[String, OlapEngine]
-  private def deleteWarehouse(e: OlapEngine): Unit = {
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-    }
-    del(e.warehouse.toFile)
-  }
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      cache.values.foreach(deleteWarehouse)))
-  }
-
-  /** Drops AND deletes the cached engines' temp warehouses (same contract
-    * as [[ClusterReps.clearCaches]]).
-    */
-  def clearCaches(): Unit = {
-    cache.values.foreach(deleteWarehouse)
-    cache.clear()
-  }
-
   private def docs(spark: SparkSession, dir: String): DataFrame =
     spark.read.parquet(s"$dir/documents.parquet")
 
@@ -410,8 +391,8 @@ object ModelStore {
     * re-fit, not fold).
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
-    cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-modelstore-"))
+    Fixtures.engine("model-store", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-modelstore-"))
       createTables(eng)
       val d = docs(spark, dir)
       lmFold(eng, d.filter(col("doc_id") % 10 =!= 0))
@@ -420,7 +401,7 @@ object ModelStore {
       bootstrapLogreg(eng, d)
       eng.runScheduledCompaction() // merges the LM fold fragments
       eng
-    })
+    }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q193_bigram_lm_served" -> ((s: SparkSession, d: String) =>

@@ -201,13 +201,6 @@ object Multimodal {
   private val hashCache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
-  def clearCaches(): Unit = {
-    hashCache.values.foreach(df => { df.unpersist(); () })
-    hashCache.clear()
-    survCache.values.foreach(df => { df.unpersist(); () })
-    survCache.clear()
-  }
-
   /** Offset separating re-encode twins from their originals in the media
     * near-dup fixture (doc_id space is far smaller at every SF).
     */

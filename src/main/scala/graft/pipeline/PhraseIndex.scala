@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Fixtures
 import graft.catalog._
 import graft.engine.OlapEngine
 import graft.manifest.Version
@@ -206,26 +207,6 @@ object PhraseIndex {
 
   // --- driver fixture + queries --------------------------------------------
 
-  private val cache = TrieMap.empty[String, OlapEngine]
-  private def deleteWarehouse(e: OlapEngine): Unit = {
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-    }
-    del(e.warehouse.toFile)
-  }
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      cache.values.foreach(deleteWarehouse)))
-  }
-
-  /** Drops AND deletes the cached engines' temp warehouses. */
-  def clearCaches(): Unit = {
-    cache.values.foreach(deleteWarehouse)
-    cache.clear()
-    dlCache.values.foreach { case (df, _, _) => df.unpersist(); () }
-    dlCache.clear()
-  }
-
   /** Per-(engine, positions generation) document-length view + corpus
     * stats, memoized (optimization r13): dl = Σ tf over every word of a doc
     * is a property of the INDEX generation, not of any query, yet q249
@@ -254,15 +235,15 @@ object PhraseIndex {
     * compaction + the phrase algebra at once.
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
-    cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-phridx-"))
+    Fixtures.engine("phrase-index", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-phridx-"))
       createTables(eng)
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       bootstrap(eng, docs.filter(col("doc_id") % 10 =!= 0))
       applyDelta(eng, docs.filter(col("doc_id") % 10 === 0))
       eng.runScheduledCompaction()
       eng
-    })
+    }
 
   /** q249: PROXIMITY-boosted ranking — both scoring legs served from the
     * ONE maintained positional index, no document text touched. Pass 1 is

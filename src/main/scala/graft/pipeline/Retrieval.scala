@@ -173,8 +173,6 @@ object Retrieval {
     // exact and the sum order-independent — cross-engine hashable
     val exactSum = exact
       .agg(sum(col("rrf").cast("decimal(18,6)")).cast("double")).head().getDouble(0)
-    if (sys.env.contains("GRAFT_AUDIT_LOG"))
-      System.err.println(s"[q266] overlap=$nOverlap/$k drift=$nDrift")
     spark.range(1).select(
       lit("hybrid_fusion_audit").as("metric"), lit(k).as("k"),
       lit(exactSum).as("exact_rrf_sum"),
@@ -220,8 +218,6 @@ object Retrieval {
     val nExactIncluded = exact.filter(col("included")).count()
     val overlap = served.select(col("doc_id"))
       .join(exact.select(col("doc_id")), Seq("doc_id"), "left_semi").count()
-    if (sys.env.contains("GRAFT_AUDIT_LOG"))
-      System.err.println(s"[q267] overlap=$overlap/$k consistent=$consistent")
     spark.range(1).select(
       lit("context_pack_audit").as("metric"), lit(k).as("k"),
       lit(nExactIncluded).as("n_exact_included"),

@@ -28,20 +28,6 @@ object Similarity {
   private val indexCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), AnyRef]
 
-  /** Fixture hook (the streaming `clearDrains` analogue): drop every
-    * cached index artifact and unpersist its blocks — needed whenever the
-    * data under a previously indexed dir is regenerated in the same JVM.
-    */
-  def clearCaches(): Unit = {
-    def unp(x: Any): Unit = x match {
-      case df: org.apache.spark.sql.Dataset[_] => df.unpersist(); ()
-      case (a, b) => unp(a); unp(b)
-      case _ => ()
-    }
-    indexCache.values.foreach(unp)
-    indexCache.clear()
-  }
-
   private def cached[T <: AnyRef](dir: String, key: String)(build: => T): T =
     indexCache.getOrElseUpdate((dir, key), build).asInstanceOf[T]
 

@@ -32,15 +32,6 @@ object TextAnalysis {
   private def cachedModel(dir: String, key: String)(build: => DataFrame): DataFrame =
     modelCache.getOrElseUpdate((dir, key), { val df = build.persist(); df.count(); df })
 
-  /** Fixture hook (the streaming `clearDrains` analogue): drop every
-    * cached model and unpersist its blocks — needed whenever the data
-    * under a previously modeled dir is regenerated in the same JVM.
-    */
-  def clearCaches(): Unit = {
-    modelCache.values.foreach(df => { df.unpersist(); () })
-    modelCache.clear()
-  }
-
   /** Per-document statistics + quality score: length, token counts, alphabetic
     * ratio, mean word length. The quality score is a deterministic arithmetic
     * blend — the pattern (not the constants) is what matters at 100 TB.

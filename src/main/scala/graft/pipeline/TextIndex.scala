@@ -7,6 +7,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Fixtures
 import graft.catalog._
 import graft.engine.OlapEngine
 import graft.manifest.Version
@@ -570,27 +571,6 @@ object TextIndex {
 
   // --- driver fixture + query ----------------------------------------------
 
-  private val cache = TrieMap.empty[String, OlapEngine]
-  private def deleteWarehouse(e: OlapEngine): Unit = {
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-    }
-    del(e.warehouse.toFile)
-  }
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      cache.values.foreach(deleteWarehouse)))
-  }
-
-  /** Drops AND deletes the cached engines' temp warehouses (same contract
-    * as [[ClusterReps.clearCaches]]).
-    */
-  def clearCaches(): Unit = {
-    cache.values.foreach(deleteWarehouse)
-    cache.clear()
-    statsCache.clear()
-  }
-
   /** Run the scheduled maintenance a production index owner would — now
     * THROUGH the engine's own C1-C3 schedule loop
     * ([[OlapEngine.runScheduledCompaction]]: score = visible rowset count,
@@ -615,15 +595,15 @@ object TextIndex {
     * compaction, AND the serve formula at once.
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
-    cache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-txtidx-"))
+    Fixtures.engine("text-index", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-txtidx-"))
       createTables(eng)
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       bootstrap(eng, docs.filter(col("doc_id") % 10 =!= 0))
       applyDelta(eng, docs.filter(col("doc_id") % 10 === 0))
       compactIndex(eng)
       eng
-    })
+    }
 
   /** The doclen table, merge-on-read: (doc_id, dl) — whitespace token
     * counts served from the index (dl uses the shared normalization, so it
@@ -682,15 +662,15 @@ object TextIndex {
     * and flip the hash.
     */
   def refoldEngineFor(spark: SparkSession, dir: String): OlapEngine =
-    cache.getOrElseUpdate(s"$dir|refold", {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-txtrefold-"))
+    Fixtures.engine("text-index-refold", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-txtrefold-"))
       createTables(eng)
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       bootstrap(eng, docs)
       refold(eng, editedDocs(docs.filter(col("doc_id") % 7 === 3)))
       compactIndex(eng) // deletes become physical; answer unchanged
       eng
-    })
+    }
 
   /** q215 fixture: full-corpus build, then [[deleteDocs]] on doc_id % 9 == 4,
     * then the scheduled compaction — the served BM25 must equal a
@@ -699,15 +679,15 @@ object TextIndex {
     * contributions, and the n_docs/avgdl denominators.
     */
   def deletesEngineFor(spark: SparkSession, dir: String): OlapEngine =
-    cache.getOrElseUpdate(s"$dir|deletes", {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-txtdel-"))
+    Fixtures.engine("text-index-deletes", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-txtdel-"))
       createTables(eng)
       val docs = spark.read.parquet(s"$dir/documents.parquet")
       bootstrap(eng, docs)
       deleteDocs(eng, docs.filter(col("doc_id") % 9 === 4).select("doc_id"))
       compactIndex(eng) // deletes become physical; answer unchanged
       eng
-    })
+    }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q190_text_index_served" ->

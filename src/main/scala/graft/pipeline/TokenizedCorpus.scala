@@ -7,6 +7,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.Fixtures
 import graft.catalog._
 import graft.engine.OlapEngine
 import graft.manifest.Version
@@ -32,10 +33,7 @@ import graft.model._
   * from the existing corpus and folded per delta batch through the engine's
   * ordinary upsert path, so a restarted job reads the table instead of
   * re-tokenizing 100 TB. q268 pins table-served ≡ recompute under q39's
-  * oracle (one answer, two derivations — the q190/q194 pattern), and
-  * [[withTokens]] serves the whole family from the table when
-  * `GRAFT_TOKENS_FROM_TABLE` is set (tokens from the index, untokenized
-  * columns streamed from the corpus — no re-tokenize).
+  * oracle (one answer, two derivations — the q190/q194 pattern).
   *
   * Queries whose normalization differs (e.g. `trim`-only whitespace counts)
   * keep their own expressions — this cache only serves the
@@ -49,21 +47,12 @@ object TokenizedCorpus {
   private val cache =
     scala.collection.concurrent.TrieMap.empty[String, DataFrame]
 
-  /** `documents.parquet` with [[TokCol]] appended, persisted per dir. With
-    * `GRAFT_TOKENS_FROM_TABLE` set, the token arrays come from the
-    * maintained engine table instead of an inline tokenize — the
-    * flagged serve path for the whole text family.
-    */
+  /** `documents.parquet` with [[TokCol]] appended, persisted per dir. */
   def withTokens(spark: SparkSession, dir: String): DataFrame =
     cache.getOrElseUpdate(dir, {
-      val base = spark.read.parquet(s"$dir/documents.parquet")
-      val df =
-        if (sys.env.contains("GRAFT_TOKENS_FROM_TABLE"))
-          base.join(fromTable(spark, dir).select(col("doc_id"), col(TokCol)),
-            Seq("doc_id"))
-        else
-          base.withColumn(TokCol, split(trim(lower(col("text"))), "\\s+"))
-      val p = df.persist()
+      val p = spark.read.parquet(s"$dir/documents.parquet")
+        .withColumn(TokCol, split(trim(lower(col("text"))), "\\s+"))
+        .persist()
       p.count()
       p
     })
@@ -78,33 +67,10 @@ object TokenizedCorpus {
     if (df.columns.contains(TokCol)) col(TokCol)
     else split(trim(lower(col("text"))), "\\s+")
 
-  /** Fixture hook (the streaming `clearDrains` analogue): drop every cached
-    * frame and unpersist its blocks — needed whenever the data under a
-    * previously tokenized dir is regenerated in the same JVM.
-    */
-  def clearCaches(): Unit = {
-    cache.values.foreach(df => { df.unpersist(); () })
-    cache.clear()
-    engCache.values.foreach(deleteWarehouse)
-    engCache.clear()
-  }
-
   // --- maintained engine-table twin (the cross-JVM production form) --------
 
   val Db = "graft_idx"
   val Table = "tokenized_corpus"
-
-  private val engCache = TrieMap.empty[String, OlapEngine]
-  private def deleteWarehouse(e: OlapEngine): Unit = {
-    def del(f: java.io.File): Unit = {
-      Option(f.listFiles).foreach(_.foreach(del)); f.delete(); ()
-    }
-    del(e.warehouse.toFile)
-  }
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      engCache.values.foreach(deleteWarehouse)))
-  }
 
   /** Create the tokenized-corpus table on `eng` (callers owning their own
     * engine — specs). Unique-keyed by doc_id, so delta re-tokenizes are
@@ -150,15 +116,15 @@ object TokenizedCorpus {
     * so q268's oracle only matches if all three are exact.
     */
   def engineFor(spark: SparkSession, dir: String): OlapEngine =
-    engCache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-tokcorpus-"))
+    Fixtures.engine("tokenized-corpus", dir) {
+      val eng = new OlapEngine(spark, Fixtures.newDir("graft-tokcorpus-"))
       createTable(eng)
       val d = spark.read.parquet(s"$dir/documents.parquet")
       fold(eng, d.filter(col("doc_id") % 10 =!= 0))
       fold(eng, d.filter(col("doc_id") % 10 === 0))
       eng.runScheduledCompaction()
       eng
-    })
+    }
 
   /** The maintained table, merge-on-read: (doc_id, toks, n_ws, n_bpeish). */
   def fromTable(spark: SparkSession, dir: String): DataFrame =

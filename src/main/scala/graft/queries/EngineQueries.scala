@@ -1,7 +1,6 @@
 package graft.queries
 
 import java.nio.file.Files
-import scala.collection.concurrent.TrieMap
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -27,13 +26,11 @@ import graft.model._
   *                   (fills the reference's declared-but-absent merge, C4).
   */
 object EngineFixture {
-  private val cache = TrieMap.empty[String, OlapEngine]
-
   def get(spark: SparkSession, sfDir: String): OlapEngine =
-    cache.getOrElseUpdate(sfDir, build(spark, sfDir))
+    graft.Fixtures.engine("engine", sfDir)(build(spark, sfDir))
 
   private def build(spark: SparkSession, sfDir: String): OlapEngine = {
-    val wh = graft.FastTmp.newDir("graft-warehouse-")
+    val wh = graft.Fixtures.newDir("graft-warehouse-")
     val eng = new OlapEngine(spark, wh)
     eng.createDatabase("graft")
 
@@ -1819,9 +1816,6 @@ object EngineQueries {
         |FROM q210_head GROUP BY 1""".stripMargin)
   }
 
-  private val restartCache =
-    scala.collection.concurrent.TrieMap.empty[String, OlapEngine]
-
   /** q222: the SELF-DESCRIBING-warehouse restart, oracle-checked. The
     * fixture builds a table + rollup entirely through the SQL face, then
     * COPIES the warehouse to a fresh path and opens a brand-new engine over
@@ -1835,8 +1829,8 @@ object EngineQueries {
     * path, so only on-disk state can serve the new path.
     */
   def warehouseRestartServe(spark: SparkSession, dir: String): DataFrame = {
-    val eng2 = restartCache.getOrElseUpdate(dir, {
-      val eng = new OlapEngine(spark, graft.FastTmp.newDir("graft-q222-"))
+    val eng2 = graft.Fixtures.engine("q222-restart", dir) {
+      val eng = new OlapEngine(spark, graft.Fixtures.newDir("graft-q222-"))
       graft.sql.GraftSql.bind(spark, eng)
       spark.read.parquet(s"$dir/orders.parquet")
         .withColumn("price_c", col("o_totalprice").cast("decimal(18,2)"))
@@ -1853,7 +1847,7 @@ object EngineQueries {
         "AGG (SUM(price_c) AS sum_price, COUNT(*) AS n)")
       graft.sql.GraftSql.unbind(spark)
       // "restart": copy the warehouse, open a fresh engine, replay NOTHING
-      val dst = graft.FastTmp.newDir("graft-q222-restart-")
+      val dst = graft.Fixtures.newDir("graft-q222-restart-")
       def copyDir(src: java.nio.file.Path, to: java.nio.file.Path): Unit = {
         import scala.jdk.CollectionConverters._
         Files.walk(src).iterator().asScala.foreach { p =>
@@ -1864,7 +1858,7 @@ object EngineQueries {
       }
       copyDir(eng.warehouse, dst)
       new OlapEngine(spark, dst)
-    })
+    }
     graft.GraftExtensions.register(spark)
     val df = eng2.scan("g222", "orders")
       .groupBy(col("o_orderpriority"))

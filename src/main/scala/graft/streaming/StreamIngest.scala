@@ -1,5 +1,6 @@
 package graft.streaming
 
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import graft.engine.OlapEngine
@@ -12,9 +13,8 @@ import graft.engine.OlapEngine
   * late-arriving batches never tear a published version.
   *
   * At scale this is the standard lakehouse pattern: `foreachBatch` gives
-  * exactly-once rowset publication (batch replays overwrite the same rowset id
-  * via the manifest's duplicate check), and compaction folds the small
-  * streaming rowsets into base rowsets out-of-band.
+  * exactly-once rowset publication ([[ingestOnce]]), and compaction folds the
+  * small streaming rowsets into base rowsets out-of-band.
   */
 object StreamIngest {
 
@@ -36,15 +36,8 @@ object StreamIngest {
             opColumn: Option[String] = None): StreamingQuery =
     source.writeStream
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // one rowset per micro-batch, with a deterministic rowset id derived
-        // from the batch id: a replayed batch hits the manifest's duplicate
-        // check (src/tablet.rs:118-120 analogue) and is skipped -> effectively
-        // exactly-once publication.
-        val rowsetId = batchId + 1
-        if (!eng.manifest(db, table).allRowsets.exists(_.rowsetId == rowsetId)) {
-          eng.ingest(db, table, batch, explicitRowsetId = Some(rowsetId),
-            opColumn = opColumn)
-        }
+        ingestOnce(eng, db, table, Paths.get(checkpoint, "rowsets"), batchId,
+          opColumn)(batch)
         refreshRollups.foreach(n => eng.rollups.refreshIncremental(db, table, n))
         refreshMvs.foreach(n => eng.mvs.refreshIncremental(db, table, n))
         ()
@@ -52,6 +45,42 @@ object StreamIngest {
       .option("checkpointLocation", checkpoint)
       .trigger(Trigger.AvailableNow())
       .start()
+
+  /** Publishes micro-batch `batchId` of a stream as one rowset, once.
+    * `ledger` is a dir that lives as long as the stream's checkpoint (under
+    * it, for [[start]]); it maps each batch id to the rowset id reserved for
+    * it from the table's own counter, BEFORE the write. A replay whose
+    * reserved rowset is in the manifest is skipped (the manifest's duplicate
+    * check, src/tablet.rs:118-120 analogue); any other replay clears the
+    * orphan dir a crash between write and publish left behind, then writes
+    * under the reserved id. Ordinary loads take ids from the same counter,
+    * so they never collide with a stream's.
+    *
+    * Limit: the counter restarts from the highest published id when the
+    * manifest is reloaded, so a reservation that never published can be
+    * handed to an ordinary load made after a restart and before the stream
+    * replays — that replay then reads as published and is skipped.
+    */
+  private[graft] def ingestOnce(eng: OlapEngine, db: String, table: String,
+      ledger: Path, batchId: Long, opColumn: Option[String])(
+      batch: => DataFrame): Unit = {
+    val entry = ledger.resolve(batchId.toString)
+    val m = eng.manifest(db, table)
+    val reserved =
+      if (Files.exists(entry)) Some(Files.readString(entry).trim.toLong) else None
+    if (reserved.exists(rid => m.allRowsets.exists(_.rowsetId == rid))) return
+    val rid = reserved.getOrElse {
+      val r = m.nextRowsetId
+      Files.createDirectories(ledger)
+      val tmp = Files.writeString(ledger.resolve(s".$batchId.tmp"), r.toString)
+      Files.move(tmp, entry, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+      r
+    }
+    graft.FastTmp.deleteTree(eng.tableRoot(db, table).resolve(s"r$rid"))
+    eng.ingest(db, table, batch, explicitRowsetId = Some(rid), opColumn = opColumn)
+    ()
+  }
 
   /** The read-side complement: tail an engine table as a stream. Every rowset
     * published after the stream starts arrives as new files under a new

@@ -1,8 +1,11 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.Paths
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import graft.{FastTmp, Fixtures}
+import graft.engine.OlapEngine
 
 /** Structured Streaming surface: the reference is batch-load-only (rowset
   * publish, src/storage.rs:79-87), so streaming ingest is part of the
@@ -18,6 +21,9 @@ object StreamingQueries {
     */
   private val lateLayoutCache =
     scala.collection.concurrent.TrieMap.empty[String, String]
+  /** q164's two-file arrival layout per corpus, cached like q104's. */
+  private val outerLayoutCache =
+    scala.collection.concurrent.TrieMap.empty[String, String]
 
   /** One warmed (checkpointLocation, sink dir) per (query, data-dir) — the
     * streaming analogue of the LSH/IVF index caches. The FIRST invocation
@@ -32,59 +38,33 @@ object StreamingQueries {
   private val drainCache =
     scala.collection.concurrent.TrieMap.empty[(String, String), (String, String)]
 
-  /** Every temp dir this object creates, deleted at JVM exit so repeated
-    * local runs don't accumulate checkpoint/sink litter.
-    */
-  private val tempDirs = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  locally {
-    Runtime.getRuntime.addShutdownHook(new Thread(() =>
-      tempDirs.forEach(d => deleteRecursively(new java.io.File(d)))))
-  }
+  private def delete(dir: String): Unit = FastTmp.deleteTree(Paths.get(dir))
 
-  private def deleteRecursively(f: java.io.File): Unit = {
-    val kids = f.listFiles()
-    if (kids != null) kids.foreach(deleteRecursively)
-    f.delete(): Unit
-  }
-
-  /** Fixture hook: drop all cached drains (and the q104 arrival layout) and
-    * delete their directories. Needed whenever the data under a previously
-    * drained dir is REGENERATED within the same JVM — the cache is keyed by
-    * (query, dir) only, so without this it would keep serving the first
-    * generation's drained sink.
+  /** Fixture hook: drop all cached drains, arrival layouts and stream-fed
+    * engines, and delete their directories. Needed whenever the data under
+    * a previously drained dir is REGENERATED within the same JVM — the
+    * caches are keyed by (query, dir) only, so without this they would keep
+    * serving the first generation's drained sink.
     */
   def clearDrains(): Unit = {
-    drainCache.values.foreach { case (ckpt, sink) =>
-      deleteRecursively(new java.io.File(ckpt))
-      deleteRecursively(new java.io.File(sink))
-    }
+    drainCache.values.foreach { case (ckpt, sink) => delete(ckpt); delete(sink) }
     drainCache.clear()
-    lateLayoutCache.values.foreach(d => deleteRecursively(new java.io.File(d)))
-    lateLayoutCache.clear()
-    streamIdxCache.values.foreach(e =>
-      deleteRecursively(e.warehouse.toFile))
-    streamIdxCache.clear()
-    streamAnnCache.values.foreach(e =>
-      deleteRecursively(e.warehouse.toFile))
-    streamAnnCache.clear()
-    streamTextCache.values.foreach(e =>
-      deleteRecursively(e.warehouse.toFile))
-    streamTextCache.clear()
-    streamDynCache.values.foreach(e =>
-      deleteRecursively(e.warehouse.toFile))
-    streamDynCache.clear()
-    streamSumCache.values.foreach(e =>
-      deleteRecursively(e.warehouse.toFile))
-    streamSumCache.clear()
+    Seq(lateLayoutCache, outerLayoutCache).foreach { c =>
+      c.values.foreach(delete)
+      c.clear()
+    }
+    Fixtures.drop(_.startsWith("stream-"))
   }
+
+  /** `df` split into three arrival parts by `pmod(c, 3)`. */
+  private def thirds(df: DataFrame, c: Column): Seq[DataFrame] =
+    (0 until 3).map(i => df.filter(pmod(c, lit(3)) === i))
 
   private def drainedSink(key: String, dir: String)(
       start: (String, String) => org.apache.spark.sql.streaming.StreamingQuery): String = {
     val (ckpt, sink) = drainCache.getOrElseUpdate((key, dir), {
-      val c = graft.FastTmp.newDir(s"graft-ckpt-$key-").toString
-      val s = graft.FastTmp.newDir(s"graft-sink-$key-").toString
-      tempDirs.add(c); tempDirs.add(s)
-      (c, s)
+      (Fixtures.newDir(s"graft-ckpt-$key-").toString,
+        Fixtures.newDir(s"graft-sink-$key-").toString)
     })
     // A drain that dies mid-batch leaves a checkpoint that will REPLAY that
     // batch on the next start. The foreachBatch sinks are replay-idempotent
@@ -96,8 +76,8 @@ object StreamingQueries {
     catch {
       case t: Throwable =>
         drainCache.remove((key, dir))
-        deleteRecursively(new java.io.File(ckpt))
-        deleteRecursively(new java.io.File(sink))
+        delete(ckpt)
+        delete(sink)
         throw t
     }
     sink
@@ -205,12 +185,6 @@ object StreamingQueries {
         spark.read.parquet(sink), lo = 0.0, width = 5.0, qs = Seq(0.5, 0.9, 0.99))
     }
 
-  /** Stream-maintained cluster_reps engines, one per data dir (the q183
-    * fixture: bootstrap + streamed delta folds happen once; serves reuse).
-    */
-  private val streamIdxCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
-
   /** Streaming maintenance of the near-dup cluster index (q183) — the
     * streaming twin of q182's batch fold, closing the batch/stream pair the
     * way q161/q162 and q169/q179 do. The index bootstraps from the corpus;
@@ -232,47 +206,22 @@ object StreamingQueries {
     */
   def streamClusterIndex(spark: SparkSession, dir: String): DataFrame =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.pipeline.ClusterReps
       val d = spark.read.parquet(s"$dir/documents.parquet")
-      val eng = streamIdxCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-scidx-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      val eng = Fixtures.engine("stream-q183", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-scidx-wh-"))
         ClusterReps.createIndexTable(e)
         val corpus = d.filter(col("doc_id") % 10 =!= 0)
         ClusterReps.bootstrap(e, corpus)
         // arrival layout: the delta split into three doc_id bands
-        val sd = graft.FastTmp.newDir("graft-scidx-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-scidx-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = d.filter(col("doc_id") % 10 === 0)
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-scidx-part-")
-          delta.filter(pmod(col("doc_id") / 10, lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "scidx", thirds(delta, col("doc_id") / 10)) { (batch, _) =>
+          // the screen side is the engine's own absorbed-corpus table —
+          // no corpus-so-far reconstruction, no accumulator directory
+          ClusterReps.applyDelta(e, batch)
         }
-        val stream = spark.readStream.schema(d.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            // the screen side is the engine's own absorbed-corpus table —
-            // no corpus-so-far reconstruction, no accumulator directory
-            ClusterReps.applyDelta(e, batch)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e
-      })
+      }
       val reps = d.select(col("doc_id"))
         .join(eng.scan(ClusterReps.Db, ClusterReps.Table)
           .select(col("doc_id"), col("rep").as("stored")), Seq("doc_id"), "left")
@@ -280,10 +229,6 @@ object StreamingQueries {
           coalesce(col("stored"), col("doc_id")).as("rep"))
       graft.pipeline.Dedup.splitOfReps(reps)
     }
-
-  /** Stream-fed sum/NDV-stats engines, one per data dir (q241 fixture). */
-  private val streamSumCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
 
   /** q241: the streaming twin of q235's transparent metadata SUM/AVG. The
     * events table ARRIVES as a 3-file stream; each micro-batch ingests into
@@ -293,23 +238,18 @@ object StreamingQueries {
     * to serve from the manifest fold with ZERO parquet relations in the
     * plan. One answer, three derivations: the raw-rows oracle (q235's,
     * VERBATIM), the batch-built fixture (q235), and this stream-fed table.
-    * Exactly-once: the micro-batch ingest is keyed by a deterministic
-    * rowset id (1e6 + batchId, the lmFoldBatch discipline) — a replayed
-    * batch that already landed is skipped, and a crash-between-write-and-
-    * publish leaves an orphan dir that the replay clears before rewriting.
+    * Exactly-once through [[StreamIngest.start]]: a replayed batch that
+    * already landed is skipped, and an orphan dir a crash left between write
+    * and publish is cleared before the rewrite.
     */
   def streamSumMeta(spark: SparkSession, dir: String): DataFrame =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.catalog._
       import graft.model._
       val ev = graft.queries.Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("value"))
-      val eng = streamSumCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-ssum-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      val eng = Fixtures.engine("stream-q241", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-ssum-wh-"))
         e.createDatabase("stream")
         e.createTable(TableDef(
           db = "stream", name = "events_sum",
@@ -320,41 +260,11 @@ object StreamingQueries {
           bucketColumn = Some("event_id"), numBuckets = 2,
           sumStatsColumns = Seq("event_id", "user_id"),
           ndvStatsColumns = Seq("event_id")))
-        val sd = graft.FastTmp.newDir("graft-ssum-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-ssum-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-ssum-part-")
-          ev.filter(pmod(col("event_id"), lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
-        }
-        val stream = spark.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            val rid = 1000000L + bid
-            val m = e.manifest("stream", "events_sum")
-            if (!m.allRowsets.exists(_.rowsetId == rid)) {
-              // a crash between write and publish leaves an orphan dir the
-              // replay must clear before its errorifexists rewrite
-              deleteRecursively(
-                e.tableRoot("stream", "events_sum").resolve(s"r$rid").toFile)
-              e.ingest("stream", "events_sum", batch,
-                explicitRowsetId = Some(rid)): Unit
-            }
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamIngest.start(e, "stream", "events_sum",
+          Fixtures.arrivals(spark, "ssum", thirds(ev, col("event_id"))),
+          Fixtures.newDir("graft-ssum-ckpt-").toString).awaitTermination()
         e
-      })
+      }
       graft.GraftExtensions.register(spark)
       val df = eng.scan("stream", "events_sum").agg(
         sum(col("event_id")).as("sum_event"),
@@ -371,10 +281,6 @@ object StreamingQueries {
       df
     }
 
-  /** Stream-fed dict-stats engines, one per data dir (q248 fixture). */
-  private val streamDictCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
-
   /** q248: the streaming twin of q247's transparent metadata GROUP BY. The
     * events table ARRIVES as a 3-file stream; each micro-batch ingests into
     * a dict-declared Duplicate engine table — every batch's own value
@@ -383,20 +289,16 @@ object StreamingQueries {
     * from the driver-side histogram fold with ZERO parquet relations in
     * the plan. One answer, three derivations: the raw-rows oracle (q247's,
     * VERBATIM), the batch-built fixture (q247), and this stream-fed table.
-    * Exactly-once by the same deterministic-rowset-id discipline as q241.
+    * Exactly-once through [[StreamIngest.start]], as q241.
     */
   def streamDictMeta(spark: SparkSession, dir: String): DataFrame =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.catalog._
       import graft.model._
       val ev = graft.queries.Tables.events(spark, dir)
         .select(col("event_id"), col("event_type"), col("value"))
-      val eng = streamDictCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-sdict-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      val eng = Fixtures.engine("stream-q248", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-sdict-wh-"))
         e.createDatabase("stream")
         e.createTable(TableDef(
           db = "stream", name = "events_dict",
@@ -406,39 +308,11 @@ object StreamingQueries {
             ColumnSpec.value("value", org.apache.spark.sql.types.DoubleType))),
           bucketColumn = Some("event_id"), numBuckets = 2,
           dictStatsColumns = Seq("event_type")))
-        val sd = graft.FastTmp.newDir("graft-sdict-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-sdict-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-sdict-part-")
-          ev.filter(pmod(col("event_id"), lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
-        }
-        val stream = spark.readStream.schema(ev.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            val rid = 1000000L + bid
-            val m = e.manifest("stream", "events_dict")
-            if (!m.allRowsets.exists(_.rowsetId == rid)) {
-              deleteRecursively(
-                e.tableRoot("stream", "events_dict").resolve(s"r$rid").toFile)
-              e.ingest("stream", "events_dict", batch,
-                explicitRowsetId = Some(rid)): Unit
-            }
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
+        StreamIngest.start(e, "stream", "events_dict",
+          Fixtures.arrivals(spark, "sdict", thirds(ev, col("event_id"))),
+          Fixtures.newDir("graft-sdict-ckpt-").toString).awaitTermination()
         e
-      })
+      }
       graft.GraftExtensions.register(spark)
       val df = eng.scan("stream", "events_dict")
         .groupBy(col("event_type"))
@@ -452,10 +326,6 @@ object StreamingQueries {
       df
     }
 
-  /** Stream-fed funnel engines, one per data dir (q252 fixture). */
-  private val streamFunnelCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
-
   /** q252: OPERATIONAL funnel accounting — the streaming twin of q250's
     * per-doc stages. The per-document gates (length, language, repetition)
     * are stateless, so each micro-batch computes ITS OWN 3-row funnel
@@ -467,17 +337,15 @@ object StreamingQueries {
     * they need corpus-wide state and belong to the batch funnel; the
     * streamed funnel is the monitoring half. One answer, two derivations:
     * q250's oracle rows 1–3 (raw-corpus replay) ≡ the drained Sum table.
+    * Exactly-once through [[StreamIngest.ingestOnce]]: a Sum table would
+    * double-count a replayed batch.
     */
   def streamFunnel(spark: SparkSession, dir: String): DataFrame =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.catalog._
       import graft.model._
-      val eng = streamFunnelCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-sfun-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      val eng = Fixtures.engine("stream-q252", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-sfun-wh-"))
         e.createDatabase("stream")
         e.createTable(TableDef(
           db = "stream", name = "funnel",
@@ -492,50 +360,19 @@ object StreamingQueries {
               AggType.Sum))),
           bucketColumn = Some("stage"), numBuckets = 1))
         val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val sd = graft.FastTmp.newDir("graft-sfun-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-sfun-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-sfun-part-")
-          docs.filter(pmod(col("doc_id"), lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        val ledger = Fixtures.newDir("graft-sfun-ledger-")
+        Fixtures.drain(spark, "sfun", thirds(docs, col("doc_id"))) { (batch, bid) =>
+          // THIS batch's funnel partial — the SAME gate definitions as the
+          // batch funnel, by construction (one shared helper)
+          StreamIngest.ingestOnce(e, "stream", "funnel", ledger, bid, None)(
+            graft.pipeline.Corpus.funnelPartial(spark, batch))
         }
-        val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            val rid = 1000000L + bid
-            val m = e.manifest("stream", "funnel")
-            if (!m.allRowsets.exists(_.rowsetId == rid)) {
-              deleteRecursively(
-                e.tableRoot("stream", "funnel").resolve(s"r$rid").toFile)
-              // THIS batch's funnel partial — the SAME gate definitions as
-              // the batch funnel, by construction (one shared helper)
-              e.ingest("stream", "funnel",
-                graft.pipeline.Corpus.funnelPartial(spark, batch),
-                explicitRowsetId = Some(rid)): Unit
-            }
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e
-      })
+      }
       eng.scan("stream", "funnel")
         .select(col("stage"), col("name"), col("rows_in"), col("rows_out"),
           col("tokens_out"))
     }
-
-  /** Stream-fed datacard engines, one per data dir (q261 fixture). */
-  private val streamDatacardCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
 
   /** q261: the corpus DATACARD maintained by a stream — q258's release
     * report served from two Sum-merged engine tables instead of a corpus
@@ -557,14 +394,10 @@ object StreamingQueries {
     */
   def streamDatacard(spark: SparkSession, dir: String): DataFrame =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.catalog._
       import graft.model._
-      val eng = streamDatacardCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-sdc-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      val eng = Fixtures.engine("stream-q261", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-sdc-wh-"))
         e.createDatabase("stream")
         e.createTable(TableDef(
           db = "stream", name = "dc",
@@ -588,32 +421,11 @@ object StreamingQueries {
               AggType.Sum))),
           bucketColumn = Some("fp"), numBuckets = 4))
         val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val sd = graft.FastTmp.newDir("graft-sdc-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-sdc-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-sdc-part-")
-          docs.filter(pmod(col("doc_id"), lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "sdc", thirds(docs, col("doc_id"))) { (batch, bid) =>
+          datacardFoldBatch(e, batch, bid)
         }
-        val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            datacardFoldBatch(e, batch, bid)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e
-      })
+      }
       graft.pipeline.Corpus.datacardFinish(
         eng.scan("stream", "dc"),
         graft.pipeline.Corpus.datacardDups(eng.scan("stream", "dcfp")))
@@ -625,8 +437,8 @@ object StreamingQueries {
     * double-count), heal a legacy half-publish table-by-table, else stage
     * both partials under ONE load group at the deterministic rowset id.
     */
-  private def datacardFoldBatch(eng: graft.engine.OlapEngine,
-                                batch: DataFrame, batchId: Long): Unit = {
+  private def datacardFoldBatch(eng: OlapEngine, batch: DataFrame,
+                                batchId: Long): Unit = {
     if (batch.isEmpty) return
     val rid = 1000000L + batchId
     Seq("dc", "dcfp")
@@ -662,10 +474,6 @@ object StreamingQueries {
     }
   }
 
-  /** Stream-maintained ANN-index engines, one per data dir (q189 fixture). */
-  private val streamAnnCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
-
   /** Streaming maintenance of the IVF-PQ engine-table index (q189) — the
     * streaming twin of q187's batch fold, completing the batch/stream pair
     * for the vector index the way q182/q183 do for the cluster index. The
@@ -682,50 +490,21 @@ object StreamingQueries {
     */
   /** The q189 fixture engine (exposed for the stream≡batch equality spec). */
   private[graft] def streamAnnEngineFor(spark: SparkSession, dir: String)
-  : graft.engine.OlapEngine =
+  : OlapEngine =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.pipeline.AnnIndex
       val emb = spark.read.parquet(s"$dir/embeddings.parquet")
-      streamAnnCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-sann-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      Fixtures.engine("stream-q189", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-sann-wh-"))
         AnnIndex.createTables(e)
         AnnIndex.bootstrap(e, emb.filter(col("vec_id") % 10 =!= 0))
-        val sd = graft.FastTmp.newDir("graft-sann-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-sann-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = emb.filter(col("vec_id") % 10 === 0)
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-sann-part-")
-          delta.filter(pmod(col("vec_id") / 10, lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "sann", thirds(delta, col("vec_id") / 10)) { (batch, _) =>
+          AnnIndex.applyDelta(e, batch)
         }
-        val stream = spark.readStream.schema(emb.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            AnnIndex.applyDelta(e, batch)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e
-      })
+      }
     }
-
-  /** Stream-maintained LSH index engines, one per data dir (q273 fixture). */
-  private val streamLshCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
 
   /** q273: streaming maintenance of the MinHash-LSH engine tables — the
     * streaming twin of q271's batch fold, completing the batch/stream pair
@@ -739,45 +518,20 @@ object StreamingQueries {
     * this query carries q31's full hash oracle, not just a pinned verdict.
     */
   private[graft] def streamLshEngineFor(spark: SparkSession, dir: String)
-  : graft.engine.OlapEngine =
+  : OlapEngine =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.pipeline.LshIndex
-      streamLshCache.getOrElseUpdate(dir, {
+      Fixtures.engine("stream-q273", dir) {
         val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-slsh-wh-"))
-        tempDirs.add(e.warehouse.toString)
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-slsh-wh-"))
         LshIndex.createTables(e)
         LshIndex.fold(e, docs.filter(col("doc_id") % 10 =!= 0))
-        val sd = graft.FastTmp.newDir("graft-slsh-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-slsh-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = docs.filter(col("doc_id") % 10 === 0)
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-slsh-part-")
-          delta.filter(pmod(col("doc_id") / 10, lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "slsh", thirds(delta, col("doc_id") / 10)) { (batch, _) =>
+          LshIndex.fold(e, batch)
         }
-        val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            LshIndex.fold(e, batch)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e
-      })
+      }
     }
 
   def streamLshIndex(spark: SparkSession, dir: String): DataFrame = {
@@ -788,10 +542,6 @@ object StreamingQueries {
       eng.scan(LshIndex.Db, LshIndex.ShinglesTable),
       threshold = 0.5, maxBucket = None)
   }
-
-  /** q276 fixture engines, one per data dir. */
-  private val streamLshCdcCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
 
   /** q276: streaming CDC maintenance of the LSH index — upserts AND deletes
     * arrive as ONE op-tagged stream (the routine-load `__op` shape the
@@ -807,51 +557,26 @@ object StreamingQueries {
     * pair set bit-for-bit: the same full-hash oracle, a further derivation.
     */
   private[graft] def streamLshCdcEngineFor(spark: SparkSession, dir: String)
-  : graft.engine.OlapEngine =
+  : OlapEngine =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.pipeline.LshIndex
-      streamLshCdcCache.getOrElseUpdate(dir, {
+      Fixtures.engine("stream-q276", dir) {
         val docs = spark.read.parquet(s"$dir/documents.parquet")
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-slshcdc-wh-"))
-        tempDirs.add(e.warehouse.toString)
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-slshcdc-wh-"))
         LshIndex.createTables(e)
         LshIndex.fold(e, docs)
-        val sd = graft.FastTmp.newDir("graft-slshcdc-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-slshcdc-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val doomed = docs.filter(col("doc_id") % 5 === 1)
         val ops = Seq(
           doomed.filter(col("doc_id") % 2 === 0).withColumn("op", lit(1)),
           docs.filter(col("doc_id") % 10 === 3).withColumn("op", lit(0)),
           doomed.filter(col("doc_id") % 2 === 1).withColumn("op", lit(1)))
-        val now = System.currentTimeMillis()
-        ops.zipWithIndex.foreach { case (df, i) =>
-          val tmp = graft.FastTmp.newDir("graft-slshcdc-part-")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"ops$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "slshcdc", ops) { (batch, _) =>
+          val b = batch.localCheckpoint(true)
+          LshIndex.fold(e, b.filter(col("op") === 0).drop("op"))
+          LshIndex.deleteDocs(e, b.filter(col("op") === 1).select("doc_id"))
         }
-        val opSchema = ops.head.schema
-        val stream = spark.readStream.schema(opSchema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val b = batch.localCheckpoint(true)
-            LshIndex.fold(e, b.filter(col("op") === 0).drop("op"))
-            LshIndex.deleteDocs(e, b.filter(col("op") === 1).select("doc_id"))
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e
-      })
+      }
     }
 
   def streamLshCdc(spark: SparkSession, dir: String): DataFrame = {
@@ -888,12 +613,6 @@ object StreamingQueries {
         lit(served >= (floor + 0.1) * total).as("margin_ok"))
     }
 
-  /** Stream-maintained inverted-text-index engines, one per data dir (the
-    * q191 fixture).
-    */
-  private val streamTextCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
-
   /** The q191 fixture engine (exposed for the stream≡batch equality spec):
     * the index builds from 90% of the corpus; the remaining documents ARRIVE
     * as a 3-file stream (maxFilesPerTrigger=1) and each micro-batch folds
@@ -905,48 +624,23 @@ object StreamingQueries {
     * double-count — n_docs/avgdl derive from `inv_doclen` at serve).
     */
   private[graft] def streamTextEngineFor(spark: SparkSession, dir: String)
-  : graft.engine.OlapEngine =
+  : OlapEngine =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.pipeline.TextIndex
       val docs = spark.read.parquet(s"$dir/documents.parquet")
-      streamTextCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-stxt-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      Fixtures.engine("stream-q191", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-stxt-wh-"))
         TextIndex.createTables(e)
         TextIndex.bootstrap(e, docs.filter(col("doc_id") % 10 =!= 0))
-        val sd = graft.FastTmp.newDir("graft-stxt-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-stxt-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = docs.filter(col("doc_id") % 10 === 0)
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-stxt-part-")
-          delta.filter(pmod(col("doc_id") / 10, lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "stxt", thirds(delta, col("doc_id") / 10)) { (batch, _) =>
+          TextIndex.applyDelta(e, batch)
         }
-        val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            TextIndex.applyDelta(e, batch)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         // the scheduled compaction a production owner runs after a fold
         // burst (spec-pinned to never change the served answer)
         TextIndex.compactIndex(e)
         e
-      })
+      }
     }
 
   /** q191: BM25 served from the STREAM-maintained inverted index — the
@@ -960,12 +654,6 @@ object StreamingQueries {
       graft.pipeline.TextIndex.bm25FromTable(streamTextEngineFor(spark, dir))
     }
 
-  /** Stream-maintained positional-index engines, one per data dir (the q214
-    * fixture).
-    */
-  private val streamPhraseCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
-
   /** The q214 fixture engine (exposed for the stream≡batch equality spec):
     * same drill as [[streamTextEngineFor]] — the positional index builds
     * from 90% of the corpus, the rest arrives as a 3-file stream and each
@@ -976,46 +664,21 @@ object StreamingQueries {
     * rewrite identical rows.
     */
   private[graft] def streamPhraseEngineFor(spark: SparkSession, dir: String)
-  : graft.engine.OlapEngine =
+  : OlapEngine =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.pipeline.PhraseIndex
       val docs = spark.read.parquet(s"$dir/documents.parquet")
-      streamPhraseCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-sphr-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      Fixtures.engine("stream-q214", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-sphr-wh-"))
         PhraseIndex.createTables(e)
         PhraseIndex.bootstrap(e, docs.filter(col("doc_id") % 10 =!= 0))
-        val sd = graft.FastTmp.newDir("graft-sphr-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-sphr-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = docs.filter(col("doc_id") % 10 === 0)
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-sphr-part-")
-          delta.filter(pmod(col("doc_id") / 10, lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "sphr", thirds(delta, col("doc_id") / 10)) { (batch, _) =>
+          PhraseIndex.applyDelta(e, batch)
         }
-        val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            PhraseIndex.applyDelta(e, batch)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e.runScheduledCompaction()
         e
-      })
+      }
     }
 
   /** q214: phrase search served from the STREAM-maintained positional index
@@ -1029,10 +692,6 @@ object StreamingQueries {
       graft.pipeline.PhraseIndex.phraseCounts(streamPhraseEngineFor(spark, dir))
     }
 
-  /** Stream-percolator engines, one per data dir (the q219 fixture). */
-  private val streamPercolCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
-
   /** The q219 fixture engine (exposed for the stream≡batch equality spec):
     * the ALERTING production shape — the standing rules live in the
     * registry TABLE ([[graft.pipeline.TextIndex.QueriesTable]]), the whole
@@ -1045,47 +704,22 @@ object StreamingQueries {
     * so batching and replays are irrelevant.
     */
   private[graft] def streamPercolEngineFor(spark: SparkSession, dir: String)
-  : graft.engine.OlapEngine =
+  : OlapEngine =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.pipeline.TextIndex
       val docs = spark.read.parquet(s"$dir/documents.parquet")
-      streamPercolCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-sperc-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      Fixtures.engine("stream-q219", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-sperc-wh-"))
         TextIndex.createPercolatorTables(e)
         TextIndex.registerQueries(e, TextIndex.defaultRules(spark))
-        val sd = graft.FastTmp.newDir("graft-sperc-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-sperc-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-sperc-part-")
-          docs.filter(pmod(col("doc_id"), lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "sperc", thirds(docs, col("doc_id"))) { (batch, _) =>
+          val hits = TextIndex.percolate(e, batch)
+            .withColumn("hit", lit(true))
+          if (!hits.isEmpty) { e.ingest(TextIndex.Db, TextIndex.HitsTable, hits); () }
         }
-        val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            val hits = TextIndex.percolate(e, batch)
-              .withColumn("hit", lit(true))
-            if (!hits.isEmpty) { e.ingest(TextIndex.Db, TextIndex.HitsTable, hits); () }
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e.runScheduledCompaction()
         e
-      })
+      }
     }
 
   /** q219: the hits table of the STREAM percolator — the standing rules'
@@ -1103,12 +737,6 @@ object StreamingQueries {
         .select(col("query_id"), col("doc_id"))
     }
 
-  /** Stream-maintained bigram-LM engines, one per data dir (the q198
-    * fixture).
-    */
-  private val streamLmCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
-
   /** The q198 fixture engine: the LM count tables bootstrap from 90% of the
     * corpus (one batch fold); the remaining documents ARRIVE as a 3-file
     * stream and each micro-batch folds through
@@ -1119,46 +747,21 @@ object StreamingQueries {
     * upserts don't), which is exactly why it exists as its own fixture.
     */
   private[graft] def streamLmEngineFor(spark: SparkSession, dir: String)
-  : graft.engine.OlapEngine =
+  : OlapEngine =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import graft.pipeline.ModelStore
       val docs = spark.read.parquet(s"$dir/documents.parquet")
-      streamLmCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-slm-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      Fixtures.engine("stream-q198", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-slm-wh-"))
         ModelStore.createTables(e)
         ModelStore.lmFold(e, docs.filter(col("doc_id") % 10 =!= 0))
-        val sd = graft.FastTmp.newDir("graft-slm-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-slm-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         val delta = docs.filter(col("doc_id") % 10 === 0)
-        val now = System.currentTimeMillis()
-        (0 until 3).foreach { i =>
-          val tmp = graft.FastTmp.newDir("graft-slm-part-")
-          delta.filter(pmod(col("doc_id") / 10, lit(3)) === i)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "slm", thirds(delta, col("doc_id") / 10)) { (batch, bid) =>
+          ModelStore.lmFoldBatch(e, batch, bid)
         }
-        val stream = spark.readStream.schema(docs.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, bid: Long) =>
-            ModelStore.lmFoldBatch(e, batch, bid)
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e.runScheduledCompaction() // fold-fragment maintenance, answer-neutral
         e
-      })
+      }
     }
 
   /** q198: the bigram-LM quality score served from the STREAM-maintained
@@ -1176,10 +779,6 @@ object StreamingQueries {
         graft.pipeline.TokenizedCorpus.withTokens(spark, dir))
     }
 
-  /** Stream-maintained dynamic-partition engines, one per data dir (q192). */
-  private val streamDynCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
-
   /** The q192 fixture engine (exposed for the lifecycle spec): q186/q188's
     * dynamic-partition lifecycle driven by STREAMING ingest instead of one
     * batch load. Orders arrive as a 3-file time-ordered stream; every
@@ -1192,17 +791,13 @@ object StreamingQueries {
     * same rows leaves behind (q188's oracle, shared verbatim).
     */
   private[graft] def streamDynEngineFor(spark: SparkSession, dir: String)
-  : graft.engine.OlapEngine =
+  : OlapEngine =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import org.apache.spark.sql.types._
       import graft.catalog._
       import graft.model._
-      streamDynCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-sdyn-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      Fixtures.engine("stream-q192", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-sdyn-wh-"))
         e.createDatabase("graft")
         e.createTable(TableDef(
           db = "graft", name = "orders_dyn",
@@ -1218,9 +813,6 @@ object StreamingQueries {
         val orders = spark.read.parquet(s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderdate"))
           .filter(col("o_orderdate") >= "1999-12-01")
-        val sd = graft.FastTmp.newDir("graft-sdyn-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-sdyn-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         // three TIME-ORDERED arrival files — the real ingestion order of a
         // date-partitioned fact table (out-of-order rows would route into
         // already-expired months; that is a caller error, same as loading
@@ -1229,34 +821,12 @@ object StreamingQueries {
           col("o_orderdate") < "2000-07-01",
           col("o_orderdate") >= "2000-07-01" && col("o_orderdate") < "2001-02-01",
           col("o_orderdate") >= "2001-02-01")
-        val now = System.currentTimeMillis()
-        cuts.zipWithIndex.foreach { case (c, i) =>
-          val tmp = graft.FastTmp.newDir("graft-sdyn-part-")
-          orders.filter(c)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "sdyn", cuts.map(c => orders.filter(c))) { (batch, _) =>
+          if (!batch.isEmpty) { e.ingest("graft", "orders_dyn", batch); () }
         }
-        val stream = spark.readStream.schema(orders.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            if (!batch.isEmpty) { e.ingest("graft", "orders_dyn", batch); () }
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e
-      })
+      }
     }
-
-  /** Stream-fed dead-letter engines, one per data dir (q201). */
-  private val streamDlqCache =
-    scala.collection.concurrent.TrieMap.empty[String, graft.engine.OlapEngine]
 
   /** The q201 fixture engine: q199's opt-in dead-letter policy driven by
     * STREAMING ingest. Three arrival files — two in time order (the live
@@ -1269,17 +839,13 @@ object StreamingQueries {
     * must not wedge a continuous pipeline the way it aborts a batch load.
     */
   private[graft] def streamDlqEngineFor(spark: SparkSession, dir: String)
-  : graft.engine.OlapEngine =
+  : OlapEngine =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import org.apache.spark.sql.types._
       import graft.catalog._
       import graft.model._
-      streamDlqCache.getOrElseUpdate(dir, {
-        val e = new graft.engine.OlapEngine(
-          spark, graft.FastTmp.newDir("graft-sdlq-wh-"))
-        tempDirs.add(e.warehouse.toString)
+      Fixtures.engine("stream-q201", dir) {
+        val e = new OlapEngine(spark, Fixtures.newDir("graft-sdlq-wh-"))
         e.createDatabase("graft")
         e.createTable(TableDef(
           db = "graft", name = "orders_dlq",
@@ -1295,9 +861,6 @@ object StreamingQueries {
           expiredToDeadLetter = true))
         val orders = spark.read.parquet(s"$dir/orders.parquet")
           .select(col("o_orderkey"), col("o_orderdate"))
-        val sd = graft.FastTmp.newDir("graft-sdlq-stream-")
-        val ckpt = graft.FastTmp.newDir("graft-sdlq-ckpt-")
-        Seq(sd, ckpt).foreach(p => tempDirs.add(p.toString))
         // bands 0-1: the live feed in time order (exactly q199's load 1,
         // split); band 2: the late replay inside the expired range (q199's
         // load 2) arriving after expiry has retired those rungs
@@ -1305,29 +868,11 @@ object StreamingQueries {
           col("o_orderdate") >= "1999-12-01" && col("o_orderdate") < "2000-07-01",
           col("o_orderdate") >= "2000-07-01",
           col("o_orderdate") >= "1999-06-01" && col("o_orderdate") < "1999-12-01")
-        val now = System.currentTimeMillis()
-        cuts.zipWithIndex.foreach { case (c, i) =>
-          val tmp = graft.FastTmp.newDir("graft-sdlq-part-")
-          orders.filter(c)
-            .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          val dest = sd.resolve(s"band$i.parquet")
-          Files.move(part, dest)
-          Files.setLastModifiedTime(dest, FileTime.fromMillis(now - (3 - i) * 60000))
+        Fixtures.drain(spark, "sdlq", cuts.map(c => orders.filter(c))) { (batch, _) =>
+          if (!batch.isEmpty) { e.ingest("graft", "orders_dlq", batch); () }
         }
-        val stream = spark.readStream.schema(orders.schema)
-          .option("maxFilesPerTrigger", 1).parquet(sd.toString)
-        val q = stream.writeStream
-          .option("checkpointLocation", ckpt.toString)
-          .foreachBatch { (batch: DataFrame, _: Long) =>
-            if (!batch.isEmpty) { e.ingest("graft", "orders_dlq", batch); () }
-          }
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
         e
-      })
+      }
     }
 
   /** q201: the dead-letter quarantine's content after the STREAMED late
@@ -1668,9 +1213,6 @@ object StreamingQueries {
       .agg(sum(col("n")).as("n_pairs"))
   }
 
-  private val outerLayoutCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Stream-stream LEFT OUTER join under watermarks — the semantics q82's
     * inner join can't show: an unmatched left row must be HELD in state
     * until the global watermark proves no match can still arrive, then
@@ -1689,8 +1231,6 @@ object StreamingQueries {
     */
   def streamStreamOuter(spark: SparkSession, dir: String): DataFrame =
     withStateParts(spark, 4) {
-      import java.nio.file.Files
-      import java.nio.file.attribute.FileTime
       import java.time.temporal.ChronoUnit
       val ev = graft.queries.Tables.events(spark, dir)
         .select(col("event_id"), col("user_id"), col("event_type"),
@@ -1698,25 +1238,12 @@ object StreamingQueries {
       val streamDir = outerLayoutCache.getOrElseUpdate(dir, {
         val mx = ev.agg(max(col("ts"))).head().getTimestamp(0)
         val flushTs = java.sql.Timestamp.from(mx.toInstant.plus(240, ChronoUnit.HOURS))
-        val sd = graft.FastTmp.newDir("graft-outer-stream-")
-        tempDirs.add(sd.toString)
-        def writeOne(df: DataFrame, name: String, mtime: Long): Unit = {
-          val tmp = graft.FastTmp.newDir("graft-outer-part-")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-            .findFirst.orElseThrow()
-          Files.move(part, sd.resolve(name))
-          Files.setLastModifiedTime(sd.resolve(name), FileTime.fromMillis(mtime))
-        }
-        val now = System.currentTimeMillis()
-        writeOne(ev, "a-events.parquet", now - 120000)
         import spark.implicits._
-        writeOne(Seq(
+        val flush = Seq(
           (-1L, -1L, "click", 0.0, flushTs),
           (-2L, -2L, "purchase", 0.0, flushTs)
-        ).toDF("event_id", "user_id", "event_type", "value", "ts"),
-          "b-flush.parquet", now - 60000)
-        sd.toString
+        ).toDF("event_id", "user_id", "event_type", "value", "ts")
+        Fixtures.stage("outer", Seq(ev, flush)).toString
       })
       val stream = spark.readStream.schema(ev.schema)
         .option("maxFilesPerTrigger", 1).parquet(streamDir)
@@ -1763,8 +1290,6 @@ object StreamingQueries {
     * oracle reproduces the drop + emission rule to the row.
     */
   def lateData(spark: SparkSession, dir: String): DataFrame = withStateParts(spark, 4) {
-    import java.nio.file.Files
-    import java.nio.file.attribute.FileTime
     import java.time.temporal.ChronoUnit
     val ev = graft.queries.Tables.events(spark, dir)
       .select(col("event_id"), col("event_type"), col("value"), col("ts"))
@@ -1780,34 +1305,19 @@ object StreamingQueries {
       // emitted twice
       val seedSplit = java.sql.Timestamp.from(
         mx.toInstant.truncatedTo(ChronoUnit.HOURS).minus(2, ChronoUnit.HOURS))
-
-      val sd = graft.FastTmp.newDir("graft-late-stream-")
-      tempDirs.add(sd.toString)
-      def writeOne(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
-        val tmp = graft.FastTmp.newDir("graft-late-part-")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = Files.list(tmp).filter(p => p.toString.endsWith(".parquet"))
-          .findFirst.orElseThrow()
-        val dest = sd.resolve(name)
-        Files.move(part, dest)
-        Files.setLastModifiedTime(dest, FileTime.fromMillis(mtime))
-      }
-      val now = System.currentTimeMillis()
-      // file source processes oldest-modification-time first. THREE
-      // arrivals, because Spark evaluates lateness against the PREVIOUS
-      // batch's watermark: the seed batch advances the watermark to
+      // THREE arrivals, because Spark evaluates lateness against the
+      // PREVIOUS batch's watermark: the seed batch advances the watermark to
       // max(ts) - 90min, the bulk batch rides under it (its rows are within
       // the delay), and the late batch then lands below it and is dropped
       // pre-state.
-      writeOne(ev.filter(col("ts") >= lit(seedSplit)), "a-seed.parquet", now - 180000)
-      writeOne(ev.filter(col("ts") > lit(lateSplit) && col("ts") < lit(seedSplit)),
-        "b-ontime.parquet", now - 120000)
-      writeOne(ev.filter(col("ts") <= lit(lateSplit)), "c-late.parquet", now - 60000)
-      sd.toString
+      Fixtures.stage("late", Seq(
+        ev.filter(col("ts") >= lit(seedSplit)),
+        ev.filter(col("ts") > lit(lateSplit) && col("ts") < lit(seedSplit)),
+        ev.filter(col("ts") <= lit(lateSplit)))).toString
     })
 
     val stream = spark.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 1).parquet(streamDir.toString)
+      .option("maxFilesPerTrigger", 1).parquet(streamDir)
     val agg = stream
       .withWatermark("ts", "90 minutes")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))

@@ -215,8 +215,7 @@ class EngineSpec extends AnyFunSuite {
         ColumnSpec.value("v", LongType))),
       bucketColumn = Some("k"), numBuckets = 2))
     import spark.implicits._
-    // first micro-batch seeds the table (streaming tables own their rowset
-    // ids — batchId+1 — so all loads arrive through the stream)
+    // first micro-batch seeds the table
     val srcDir = Files.createTempDirectory("graft-rollup-stream-src-")
     val ckpt = Files.createTempDirectory("graft-rollup-stream-ckpt-").toString
     def runStream(): Unit = {

@@ -1,6 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
+import scala.jdk.CollectionConverters._
 import org.scalatest.funsuite.AnyFunSuite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -88,6 +89,74 @@ class StreamIngestSpec extends AnyFunSuite {
     eng.compact("db", "u")
     eng.gc("db", "u")
     assert(eng.scan("db", "u").as[(Long, Double)].collect().toMap == got)
+  }
+
+  private def keyedTable(name: String): OlapEngine = {
+    val eng = new OlapEngine(spark, Files.createTempDirectory(s"graft-$name-wh-"))
+    eng.createDatabase("db")
+    eng.createTable(TableDef(
+      db = "db", name = "t", schema = TableSchema(KeysType.Duplicate, Seq(
+        ColumnSpec.key("k", LongType),
+        ColumnSpec.value("v", LongType))),
+      bucketColumn = Some("k"), numBuckets = 2))
+    eng
+  }
+
+  private val kvSchema = StructType(Seq(
+    StructField("k", LongType, nullable = false), StructField("v", LongType)))
+
+  private def keys(eng: OlapEngine): Set[Long] = {
+    import spark.implicits._
+    eng.scan("db", "t").select("k").as[Long].collect().toSet
+  }
+
+  test("ordinary loads between micro-batches on one checkpoint lose no batch") {
+    import spark.implicits._
+    val eng = keyedTable("si-mixed")
+    val srcDir = Files.createTempDirectory("graft-si-mixed-src-")
+    val ckpt = Files.createTempDirectory("graft-si-mixed-ckpt-").toString
+    def arrive(ks: Seq[Long]): Unit =
+      ks.map(k => (k, k)).toDF("k", "v").coalesce(1)
+        .write.mode("append").parquet(srcDir.toString)
+    def run(): Unit = StreamIngest.start(eng, "db", "t",
+      spark.readStream.schema(kvSchema).parquet(srcDir.toString), ckpt)
+      .awaitTermination()
+    def load(ks: Seq[Long]): Unit = {
+      eng.ingest("db", "t", ks.map(k => (k, k)).toDF("k", "v")); ()
+    }
+    load(Seq(1L, 2L))      // the table already holds rowset 1
+    arrive(Seq(10L, 11L)); run()
+    load(Seq(20L))         // an ordinary load between batches
+    arrive(Seq(30L)); run()
+    arrive(Seq(40L)); run()
+    val all = Set(1L, 2L, 10L, 11L, 20L, 30L, 40L)
+    assert(keys(eng) == all)
+    // a replay of a published batch (its commit record lost, as after a
+    // crash between the publish and the commit) adds nothing
+    val commits = java.nio.file.Paths.get(ckpt, "commits")
+    val last = Files.list(commits).iterator().asScala.map(_.getFileName.toString)
+      .filter(_.forall(_.isDigit)).maxBy(_.toLong)
+    Files.delete(commits.resolve(last))
+    Files.deleteIfExists(commits.resolve(s".$last.crc"))
+    run()
+    assert(eng.scan("db", "t").count() == all.size)
+  }
+
+  test("an orphan rowset dir left by a crash before publish does not wedge the stream") {
+    import spark.implicits._
+    val eng = keyedTable("si-orphan")
+    // a crashed write of the first rowset id: files on disk, no manifest entry
+    val orphan = eng.tableRoot("db", "t").resolve("r1")
+    Files.createDirectories(orphan)
+    Files.writeString(orphan.resolve("part-0.parquet"), "not parquet")
+    val srcDir = Files.createTempDirectory("graft-si-orphan-src-")
+    Seq((1L, 1L), (2L, 2L)).toDF("k", "v").coalesce(1)
+      .write.mode("append").parquet(srcDir.toString)
+    StreamIngest.start(eng, "db", "t",
+      spark.readStream.schema(kvSchema).parquet(srcDir.toString),
+      Files.createTempDirectory("graft-si-orphan-ckpt-").toString)
+      .awaitTermination()
+    assert(keys(eng) == Set(1L, 2L))
   }
 
   test("streamTable tails published rowsets as a CDC feed") {
