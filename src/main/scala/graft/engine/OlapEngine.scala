@@ -777,15 +777,33 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     * skip by row-group and page min/max, the bucket route picks one file
     * per partition, and declared `bloom_filter_columns` get a rowset
     * sidecar sized to the data.
+    *
+    * The exchange asks for an explicit task count, one per route up to
+    * the session's shuffle partitions: adaptive execution coalesces a
+    * count-less repartition of a small load into one task, which then
+    * writes every dir one after another. Hash routing still puts each
+    * (partition, bucket) in exactly one task, so each dir is one file.
+    *
+    * A dir `r{id}` that no published, stale or staged rowset owns is the
+    * leftover of a load that crashed between write and publish (the id
+    * counter restarts from the highest published id when the manifest
+    * loads, so the next load draws that id again); it is cleared first, or
+    * the `errorifexists` write would fail that load.
     */
   private def writeRowset(td: TableDef, frame: DataFrame, rowsetId: Long,
       version: Version): RowsetMeta = {
     val relDir = s"r$rowsetId"
-    frame.repartition(col(PartCol), col(BucketCol))
+    val outDir = tableRoot(td.db, td.name).resolve(relDir)
+    if (!manifest(td.db, td.name).allRowsets
+        .exists(r => r.rowsetId == rowsetId || r.relDir == relDir))
+      graft.FastTmp.deleteTree(outDir)
+    val tasks = math.max(1, math.min(td.partitions.size * td.numBuckets,
+      spark.sessionState.conf.numShufflePartitions))
+    frame.repartition(tasks, col(PartCol), col(BucketCol))
       .sortWithinPartitions(Seq(PartCol, BucketCol).map(col) ++ clusterCols(td): _*)
       .write.mode("errorifexists").partitionBy(PartCol, BucketCol)
       .option("compression", "lz4_raw")
-      .parquet(tableRoot(td.db, td.name).resolve(relDir).toString)
+      .parquet(outDir.toString)
     describeWritten(td, rowsetId, version, relDir)
   }
 
@@ -3511,11 +3529,20 @@ object CompactionType {
   * resolved by load order, documented here because the reference leaves it
   * undefined (src/common.rs:40-41).
   *
-  * Scale: both Unique and Aggregate merge compile to a single hash aggregate
-  * with map-side partial aggregation (one shuffle on the key columns) —
-  * deliberately `groupBy().agg(max_by/sum/min/max)` rather than a window
-  * (`row_number over partitionBy`), which would sort every partition and
-  * cannot partial-aggregate map-side.
+  * Scale: both Unique and Aggregate merge are one `groupBy(keys).agg(...)`
+  * with map-side partial aggregation (one shuffle on the key columns),
+  * rather than a window (`row_number over partitionBy`), which cannot
+  * partial-aggregate map-side. It is NOT a hash aggregate whenever a
+  * `max_by` is in it (every Unique merge; Replace and REPLACE_IF_NOT_NULL
+  * columns of an Aggregate table): its buffer holds the struct ordering
+  * and a struct or string payload, which `HashAggregateExec`'s fixed-width
+  * buffer cannot, so Spark plans `SortAggregateExec`. That sorts each
+  * partition on the keys, on both sides of the shuffle, and generates a
+  * `MutableProjection` in every task. Only an Aggregate table whose value
+  * columns are all SUM/MIN/MAX over fixed-width types merges in a hash
+  * aggregate (HLL_UNION columns make it an object hash aggregate). Files
+  * are already key-sorted per bucket, so a sort-free merge over the
+  * stored order is the measured next step (ROADMAP direction 3).
   */
 object MergeView {
   /** Query-time merge: tombstoned keys are dropped. */
@@ -3564,7 +3591,7 @@ object MergeView {
         // to the newest record that actually SET it (NULL = "not set", per the
         // TableDef.partialUpdate contract). Gating the max_by ordering on
         // column presence makes the aggregate skip non-setting records —
-        // still one hash aggregate, one shuffle on the keys. Tombstones keep
+        // still one aggregate, one shuffle on the keys. Tombstones keep
         // row-level semantics (latest op wins); pre-delete column values
         // remain visible to a later partial update of the same key, so pair
         // deletes with full (not partial) re-inserts.
@@ -3574,7 +3601,7 @@ object MergeView {
         val aggCols = perCol ++ opAgg
         finish(raw.groupBy(keys: _*).agg(aggCols.head, aggCols.tail: _*))
       case KeysType.Unique =>
-        // latest (version, seq) wins per key: single hash-agg via max_by.
+        // latest (version, seq) wins per key: one aggregate via max_by.
         // The op flag rides inside the payload so the delete decision is made
         // by the SAME winner that supplies the values — a tombstone only
         // deletes if nothing newer re-inserted the key.
@@ -3595,7 +3622,7 @@ object MergeView {
             case AggType.Replace | AggType.None => max_by(col(c.name), ord)
             // latest NON-NULL wins: gating the ordering on presence makes
             // max_by skip records that did not set the column (same agg
-            // shape as the partialUpdate merge — still one hash aggregate)
+            // shape as the partialUpdate merge — still one aggregate)
             case AggType.ReplaceIfNotNull =>
               max_by(col(c.name), when(col(c.name).isNotNull, ord))
             // stored per-rowset sketches union associatively

@@ -5,6 +5,7 @@ import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.conf.Configuration
+import org.apache.parquet.ParquetReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.api.Binary
@@ -144,7 +145,8 @@ object StatsHarvest {
         .find(_.startsWith(s"${RowsetSchema.PartCol}="))
         .map(_.stripPrefix(s"${RowsetSchema.PartCol}="))
       val reader = ParquetFileReader.open(
-        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf))
+        HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(f.toUri), conf),
+        FooterOptions)
       try {
         val footer = reader.getFooter
         val schema = footer.getFileMetaData.getSchema
@@ -180,6 +182,19 @@ object StatsHarvest {
     }
     Harvest(rows, acc.toMap, bytes.toMap, partAcc.toMap, sparkSchema)
   }
+
+  /** The read options of every footer open: parquet's defaults, the value
+    * `ParquetFileReader.open(InputFile)` builds per call. Building them
+    * makes a fresh Hadoop `Configuration`, which parses the default and
+    * site XML resources again, a cost paid per file that dwarfed the
+    * footer reads themselves. One JVM-wide value keeps the footers reading
+    * exactly as with the per-call defaults, whatever the session conf
+    * carries (a record filter, signed string min/max, decryption). The
+    * harvest reads footers only, so the options' codec factory (which each
+    * reader's close releases) never holds a codec, and concurrent loads can
+    * share the value.
+    */
+  private lazy val FooterOptions: ParquetReadOptions = ParquetReadOptions.builder().build()
 
   /** The footer key Spark's parquet writer stores the written schema under
     * (`ParquetReadSupport.SPARK_METADATA_KEY`).

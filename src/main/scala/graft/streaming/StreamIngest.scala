@@ -51,10 +51,10 @@ object StreamIngest {
     * it, for [[start]]); it maps each batch id to the rowset id reserved for
     * it from the table's own counter, BEFORE the write. A replay whose
     * reserved rowset is in the manifest is skipped (the manifest's duplicate
-    * check, src/tablet.rs:118-120 analogue); any other replay clears the
-    * orphan dir a crash between write and publish left behind, then writes
-    * under the reserved id. Ordinary loads take ids from the same counter,
-    * so they never collide with a stream's.
+    * check, src/tablet.rs:118-120 analogue); any other replay writes under
+    * the reserved id (the engine's writer clears the orphan dir a crash
+    * between write and publish left behind). Ordinary loads take ids from
+    * the same counter, so they never collide with a stream's.
     *
     * Limit: the counter restarts from the highest published id when the
     * manifest is reloaded, so a reservation that never published can be
@@ -77,7 +77,6 @@ object StreamIngest {
         StandardCopyOption.REPLACE_EXISTING)
       r
     }
-    graft.FastTmp.deleteTree(eng.tableRoot(db, table).resolve(s"r$rid"))
     eng.ingest(db, table, batch, explicitRowsetId = Some(rid), opColumn = opColumn)
     ()
   }
