@@ -485,8 +485,13 @@ final case class TableDef(
   def route(partitionKey: String, bucketKey: String): (String, Int) = {
     val p = policy.findPartition(partitions, partitionKey).getOrElse(
       throw new NoSuchElementException(s"no partition for key '$partitionKey' in $qualified"))
-    (p.name, bucketType.bucketForKey(bucketKey, p.numBuckets.max(numBuckets)))
+    (p.name, bucketType.bucketForKey(bucketKey, bucketsOf(p)))
   }
+
+  /** Number of distinct (partitionName, bucketIdx) pairs [[route]] can give. */
+  def routeCount: Int = partitions.map(bucketsOf).sum
+
+  private def bucketsOf(p: PartitionSpec): Int = p.numBuckets.max(numBuckets)
 }
 
 /** Lossless TableDef ↔ JSON codec — what makes the warehouse

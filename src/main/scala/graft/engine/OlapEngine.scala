@@ -783,27 +783,17 @@ final class OlapEngine(val spark: SparkSession, val warehouse: Path) {
     * count-less repartition of a small load into one task, which then
     * writes every dir one after another. Hash routing still puts each
     * (partition, bucket) in exactly one task, so each dir is one file.
-    *
-    * A dir `r{id}` that no published, stale or staged rowset owns is the
-    * leftover of a load that crashed between write and publish (the id
-    * counter restarts from the highest published id when the manifest
-    * loads, so the next load draws that id again); it is cleared first, or
-    * the `errorifexists` write would fail that load.
     */
   private def writeRowset(td: TableDef, frame: DataFrame, rowsetId: Long,
       version: Version): RowsetMeta = {
     val relDir = s"r$rowsetId"
-    val outDir = tableRoot(td.db, td.name).resolve(relDir)
-    if (!manifest(td.db, td.name).allRowsets
-        .exists(r => r.rowsetId == rowsetId || r.relDir == relDir))
-      graft.FastTmp.deleteTree(outDir)
-    val tasks = math.max(1, math.min(td.partitions.size * td.numBuckets,
+    val tasks = math.max(1, math.min(td.routeCount,
       spark.sessionState.conf.numShufflePartitions))
     frame.repartition(tasks, col(PartCol), col(BucketCol))
       .sortWithinPartitions(Seq(PartCol, BucketCol).map(col) ++ clusterCols(td): _*)
       .write.mode("errorifexists").partitionBy(PartCol, BucketCol)
       .option("compression", "lz4_raw")
-      .parquet(outDir.toString)
+      .parquet(tableRoot(td.db, td.name).resolve(relDir).toString)
     describeWritten(td, rowsetId, version, relDir)
   }
 

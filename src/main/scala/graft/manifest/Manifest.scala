@@ -163,7 +163,8 @@ final class TableManifest(
   // the loaded floor back to -1 after load() assigned it
   private var gcFloorV: Long = -1L
   // atomic id allocator: two concurrent ingests must never derive the same
-  // rowset id (the write happens before publish's lock is taken)
+  // rowset id (the write happens before publish's lock is taken); load()
+  // starts it past every published id and every `r{N}` dir on disk
   private val idGen = new java.util.concurrent.atomic.AtomicLong(0L)
   // next unallocated AUTO_INCREMENT id (Doris auto-increment column):
   // 1-based, persisted WITH the manifest so a restarted engine never
@@ -556,6 +557,18 @@ final class TableManifest(
         .intersect(committed).toSeq.sorted
         .map(g => activateGroupLocked(g, System.currentTimeMillis()))
       if (healed.exists(identity)) persist()
+    }
+    // a load that crashed between write and publish left an `r{N}` dir no
+    // entry names: start the id counter past it, so the next load neither
+    // fails on the existing dir nor takes an id a stream's ledger reserved
+    if (Files.isDirectory(tableRoot)) {
+      import scala.jdk.CollectionConverters._
+      val RowsetDir = "r(\\d+)".r
+      val listing = Files.list(tableRoot)
+      try listing.iterator().asScala.map(_.getFileName.toString).foreach {
+        case RowsetDir(n) => idGen.updateAndGet(cur => math.max(cur, n.toLong))
+        case _ =>
+      } finally listing.close()
     }
   }
 

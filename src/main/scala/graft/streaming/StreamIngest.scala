@@ -51,15 +51,17 @@ object StreamIngest {
     * it, for [[start]]); it maps each batch id to the rowset id reserved for
     * it from the table's own counter, BEFORE the write. A replay whose
     * reserved rowset is in the manifest is skipped (the manifest's duplicate
-    * check, src/tablet.rs:118-120 analogue); any other replay writes under
-    * the reserved id (the engine's writer clears the orphan dir a crash
-    * between write and publish left behind). Ordinary loads take ids from
-    * the same counter, so they never collide with a stream's.
+    * check, src/tablet.rs:118-120 analogue); any other replay clears the
+    * orphan dir a crash between write and publish left behind, then writes
+    * under the reserved id. Ordinary loads take ids from the same counter,
+    * so they never collide with a stream's; a reloaded manifest restarts the
+    * counter past every `r{N}` dir under the table, so an orphan's id is
+    * not handed to an ordinary load either.
     *
-    * Limit: the counter restarts from the highest published id when the
-    * manifest is reloaded, so a reservation that never published can be
-    * handed to an ordinary load made after a restart and before the stream
-    * replays — that replay then reads as published and is skipped.
+    * Limit: a reservation whose write never created its dir leaves no trace
+    * the manifest sees, so after a restart an ordinary load made before the
+    * stream replays can take that id — the replay then reads as published
+    * and is skipped.
     */
   private[graft] def ingestOnce(eng: OlapEngine, db: String, table: String,
       ledger: Path, batchId: Long, opColumn: Option[String])(
@@ -77,6 +79,7 @@ object StreamIngest {
         StandardCopyOption.REPLACE_EXISTING)
       r
     }
+    graft.FastTmp.deleteTree(eng.tableRoot(db, table).resolve(s"r$rid"))
     eng.ingest(db, table, batch, explicitRowsetId = Some(rid), opColumn = opColumn)
     ()
   }

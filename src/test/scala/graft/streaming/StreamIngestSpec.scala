@@ -159,6 +159,33 @@ class StreamIngestSpec extends AnyFunSuite {
     assert(keys(eng) == Set(1L, 2L))
   }
 
+  test("a batch whose write crashed before publish still lands after a restart " +
+      "and an ordinary load") {
+    import spark.implicits._
+    val eng = keyedTable("si-reserved")
+    def kv(ks: Long*) = ks.map(k => (k, k)).toDF("k", "v")
+    eng.ingest("db", "t", kv(1L, 2L))
+    val ledger = Files.createTempDirectory("graft-si-reserved-ckpt-").resolve("rowsets")
+    // batch 0 reserves its rowset id, then dies before any row is written
+    intercept[IllegalStateException] {
+      StreamIngest.ingestOnce(eng, "db", "t", ledger, 0L, None)(
+        throw new IllegalStateException("crash"))
+    }
+    val rid = Files.readString(ledger.resolve("0")).trim.toLong
+    // ... after its write had created the rowset dir
+    val orphan = eng.tableRoot("db", "t").resolve(s"r$rid")
+    Files.createDirectories(orphan)
+    Files.writeString(orphan.resolve("part-0.parquet"), "not parquet")
+
+    val reopened = new OlapEngine(spark, eng.warehouse)
+    val load = reopened.ingest("db", "t", kv(20L))
+    assert(load.rowsetId > rid)
+    assert(Files.exists(orphan.resolve("part-0.parquet")))
+    StreamIngest.ingestOnce(reopened, "db", "t", ledger, 0L, None)(kv(10L, 11L))
+    assert(reopened.manifest("db", "t").allRowsets.exists(_.rowsetId == rid))
+    assert(keys(reopened) == Set(1L, 2L, 10L, 11L, 20L))
+  }
+
   test("streamTable tails published rowsets as a CDC feed") {
     import spark.implicits._
     val eng = new OlapEngine(spark, Files.createTempDirectory("graft-st-wh-"))
